@@ -260,19 +260,14 @@ object Admit {
     // chose, not silently reset it to the default.
     for (t <- textTable) {
       val phys = graft.sources.TablePointer.resolve(spark, t)
-      val nb =
-        if (!spark.catalog.tableExists(s"${phys}_df")) 32
-        else spark.sessionState.catalog
-          .getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(s"${phys}_df"))
-          .bucketSpec.map(_.numBuckets).getOrElse(32)
+      val nb = spark.sessionState.catalog
+        .getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(s"${phys}_df"))
+        .bucketSpec.map(_.numBuckets).getOrElse(32)
       // the tokenizer mode carries over too (round 15): a robust-mode
       // index rebuilt under the default would fragment its postings
-      val tm =
-        if (!spark.catalog.tableExists(s"${phys}_meta")) "default"
-        else operators.TextRank.textTokModeOf(spark, phys)
       operators.TextRank.refreshTextIndex(docs, t, numBuckets = nb,
-        tokMode = tm)
+        tokMode = operators.TextRank.textTokModeOf(spark, phys))
     }
   }
 
@@ -360,35 +355,7 @@ object Admit {
     // replayed feed whose every doc was upstream-filtered) has no
     // meaningful per-batch rate (null, not a 0/0 NaN), and the
     // cumulative rate guards the degenerate all-empty prefix (ADVICE r9)
-    val raw = spark.read.option("mergeSchema", "true")
-      .parquet(s"$outDir/_admit_reports")
-    val hist0 =
-      if (raw.columns.contains("quality_rejected")) raw
-      // histories persisted before the quality screen existed carry no
-      // column — read them as zero rejections, not a schema error
-      else raw.withColumn("quality_rejected", lit(0L))
-    val hist1 =
-      if (hist0.columns.contains("lock_healthy")) hist0
-      // pre-r12 histories predate the lease-health bit: those cycles
-      // completed under assertHeld fencing, so "healthy" is the honest
-      // backfill (an UNhealthy cycle only exists once the bit does)
-      else hist0.withColumn("lock_healthy", lit(true))
-    val hist2 =
-      // pre-r13 histories predate the exact-hash screen (no hash
-      // companion existed, so zero is the literal truth) …
-      if (hist1.columns.contains("exact_rejected")) hist1
-      else hist1.withColumn("exact_rejected", lit(0L))
-    val hist =
-      // … and predate queue-time reporting: 0 (uncontended) is the only
-      // honest backfill a one-row-per-batch history can carry
-      if (hist2.columns.contains("lock_wait_ms")) hist2
-      else hist2.withColumn("lock_wait_ms", lit(0L))
-    hist
-      .withColumn("quality_rejected",
-        coalesce(col("quality_rejected"), lit(0L)))
-      .withColumn("exact_rejected", coalesce(col("exact_rejected"), lit(0L)))
-      .withColumn("lock_healthy", coalesce(col("lock_healthy"), lit(true)))
-      .withColumn("lock_wait_ms", coalesce(col("lock_wait_ms"), lit(0L)))
+    spark.read.parquet(s"$outDir/_admit_reports")
       .withColumn("admit_rate", when(col("input") > 0,
         round(col("admitted").cast("double") / col("input"), 4)))
       .withColumn("cum_input", sum("input").over(w))
@@ -464,8 +431,7 @@ object Admit {
       bandCounts.values.maxOption.getOrElse(0).toDouble))
     rows += (("band", "rows", spark.table(bandPhys).count().toDouble))
     val hashT = Dedup.hashTableOf(bandPhys)
-    if (spark.catalog.tableExists(hashT))
-      rows += (("band", "hash_rows", spark.table(hashT).count().toDouble))
+    rows += (("band", "hash_rows", spark.table(hashT).count().toDouble))
     rows += (("band", "calibrated_threshold",
       Dedup.bandThresholdOf(spark, bandPhys).map(_.toDouble).getOrElse(-1.0)))
     // the band knob's staleness anchor (round 16 — VERDICT r15 #2, the
@@ -473,7 +439,7 @@ object Admit {
     // corpus the threshold sweep measured; drift is how far appends have
     // grown the served corpus past it (docs now = distinct `_hashes`
     // ids — every doc has a hash key; band rows miss sub-3-word docs).
-    // −1 = never calibrated, or a pre-anchor row (drift unknowable).
+    // −1 = never calibrated.
     val bandMeta = Dedup.bandMetaOf(spark, bandPhys)
     rows += (("band", "tok_mode_robust",
       if (bandMeta.exists(_.tokMode == "robust")) 1.0 else 0.0))
@@ -481,12 +447,11 @@ object Admit {
       bandMeta.map(_.docsAtCal.toDouble).getOrElse(-1.0)))
     rows += (("band", "cal_docs_drift",
       bandMeta.filter(_.docsAtCal >= 0)
-        .filter(_ => spark.catalog.tableExists(hashT))
         .map(m => spark.table(hashT).select("doc_id").distinct().count()
           .toDouble - m.docsAtCal)
         .getOrElse(-1.0)))
     for (t <- semTable.toSeq ++ pqTable.toSeq) {
-      val phys = Ann.physicalOf(spark, t)
+      val phys = graft.sources.TablePointer.resolve(spark, t)
       val comp = if (semTable.contains(t)) "sem" else "pq"
       val membersT = if (comp == "sem") s"${phys}_members" else phys
       rows += ((comp, "generation",
@@ -498,7 +463,7 @@ object Admit {
       rows += ((comp, "files_per_cell_max",
         graft.sources.Ingest.partitionFileCounts(spark, membersT)
           .values.maxOption.getOrElse(0).toDouble))
-      if (comp == "pq" && spark.catalog.tableExists(s"${phys}_meta")) {
+      if (comp == "pq") {
         val m = spark.table(s"${phys}_meta").collect().head
         rows += (("pq", "quantizer_kmeans",
           if (m.getString(0) == "kmeans") 1.0 else 0.0))
@@ -508,10 +473,8 @@ object Admit {
           m.getAs[Double]("screen_recall_measured")))
         // the PQ nprobe's staleness anchor (round 16 — the band/text
         // cal_docs_* rows' third sibling): drift = members now vs the
-        // member count the sweep probed; −1 = uncalibrated / pre-anchor
-        val dac =
-          if (m.schema.fieldNames.contains("docs_at_cal"))
-            m.getAs[Long]("docs_at_cal") else -1L
+        // member count the sweep probed; −1 = uncalibrated
+        val dac = m.getAs[Long]("docs_at_cal")
         rows += (("pq", "cal_docs_at_cal", dac.toDouble))
         rows += (("pq", "cal_docs_drift",
           if (dac >= 0) nMembers.toDouble - dac else -1.0))
@@ -533,9 +496,8 @@ object Admit {
       rows += (("text", "files_per_bucket_max",
         graft.sources.Ingest.partitionFileCounts(spark, phys)
           .values.maxOption.getOrElse(0).toDouble))
-      if (spark.catalog.tableExists(s"${phys}_champ"))
-        rows += (("text", "champ_rows",
-          spark.table(s"${phys}_champ").count().toDouble))
+      rows += (("text", "champ_rows",
+        spark.table(s"${phys}_champ").count().toDouble))
       // the text family's persisted serving calibration (round 15 —
       // VERDICT r14 missing #2: the report's stated purpose is "the
       // persisted calibrations an operator checks", and the newest
@@ -558,7 +520,7 @@ object Admit {
       // measured on vs the corpus being served NOW — auto serving under
       // a materially grown corpus means the recorded recall is no
       // longer a measured property of what's served. −1 docs_at_cal =
-      // pre-r15 `_cal` row (drift unknowable) or never calibrated.
+      // never calibrated.
       rows += (("text", "cal_docs_at_cal",
         cal.map(_.docsAtCal.toDouble).getOrElse(-1.0)))
       rows += (("text", "cal_docs_drift",
@@ -761,26 +723,19 @@ object Admit {
       val nIntra = input - nQuality - nIntraUnique
 
       // 0.4 exact-hash screen against the STANDING hash set (the band
-      // index's `_hashes` companion — every refreshIndex since r13
-      // lands it; a pre-r13 band table has none and the screen is off,
-      // reported as zero, never a partial answer). One bucketed hash
-      // join, batch-sized on the probe side: a verbatim re-submission
-      // rejects HERE regardless of shingle geometry — the band
-      // screen's sub-3-word floor closed for a hash join's price.
+      // index's `_hashes` companion, landed by every refreshIndex). One
+      // bucketed hash join, batch-sized on the probe side: a verbatim
+      // re-submission rejects HERE regardless of shingle geometry — the
+      // band screen's sub-3-word floor closed for a hash join's price.
       // Pinned like every screen that reads a table this cycle's
       // appends mutate (the hash companion grows in step 3).
-      val (postExact, nExact) =
-        if (!spark.catalog.tableExists(Dedup.hashTableOf(
-            graft.sources.TablePointer.resolve(spark, bandTable))))
-          (intraUnique, 0L)
-        else {
-          val exactHits = Dedup.probeHashIndex(spark, bandTable, intraUnique)
+      val postExact = intraUnique.join(
+          Dedup.probeHashIndex(spark, bandTable, intraUnique)
             .filter(col("is_exact_dup") === 1)
-            .select(col("batch_doc_id").as("doc_id"))
-          val p = intraUnique.join(exactHits, Seq("doc_id"), "left_anti")
-            .localCheckpoint(true)
-          (p, nIntraUnique - p.count())
-        }
+            .select(col("batch_doc_id").as("doc_id")),
+          Seq("doc_id"), "left_anti")
+        .localCheckpoint(true)
+      val nExact = nIntraUnique - postExact.count()
       try {
 
       // 0.5 admission-time decontamination (optional): intra-survivors
@@ -904,7 +859,7 @@ object Admit {
         } finally freePinned(admittedDocs)
       } finally freePinned(afterNear)
       } finally { if (preNear ne postExact) freePinned(preNear) }
-      } finally { if (postExact ne intraUnique) freePinned(postExact) }
+      } finally freePinned(postExact)
     } finally freePinned(intraUnique)
   }
 }

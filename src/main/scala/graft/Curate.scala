@@ -315,7 +315,16 @@ object Curate {
       Summary(input, afterQuality, afterDedup, afterDecontam, out.count(),
         afterCut, afterSemantic, manifestPacks, afterClassifier, bpeLearned,
         indexedDocs)
-    } finally labels.unpersist()
+    } finally {
+      labels.unpersist()
+      // the union's final-round localCheckpoint sits under the cache;
+      // it is a leaf of the logical plan, so it is freed from there —
+      // Frames.freePinned would re-plan the union and rerun its anti-join
+      labels.queryExecution.logical.collectLeaves().foreach {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(false)
+        case _ =>
+      }
+    }
   }
 
   /** The stage-7 standing-index handoff as a callable: refresh the band

@@ -5,15 +5,6 @@ import org.apache.spark.sql.DataFrame
 /** Storage hygiene for eager localCheckpoints. */
 object Frames {
 
-  /** Free an eager localCheckpoint's pinned blocks: walk the RDD
-    * lineage under the frame to its persisted checkpoint RDD and
-    * unpersist it. Callers use this the moment a checkpointed frame is
-    * superseded — an admission cycle's pinned screens (ADVICE r8), or an
-    * iterative loop's previous round — so pinned state stays O(1) per
-    * consumer instead of accumulating for the run's lifetime. Only
-    * frames that nothing will read again may be freed: a localCheckpoint
-    * has no lineage to recompute from.
-    */
   /** Spill-safe EAGER materialization for corpus-sized frames (round 18
     * — VERDICT r17 #3): persist at MEMORY_AND_DISK with lineage KEPT and
     * force the cache with a count. Latency-wise this is the eager
@@ -34,6 +25,15 @@ object Frames {
     p
   }
 
+  /** Free an eager localCheckpoint's pinned blocks: walk the RDD
+    * lineage under the frame to its persisted checkpoint RDD and
+    * unpersist it. Callers use this the moment a checkpointed frame is
+    * superseded — an admission cycle's pinned screens (ADVICE r8), or an
+    * iterative loop's previous round — so pinned state stays O(1) per
+    * consumer instead of accumulating for the run's lifetime. Only
+    * frames that nothing will read again may be freed: a localCheckpoint
+    * has no lineage to recompute from.
+    */
   def freePinned(df: DataFrame): Unit = {
     def walk(r: org.apache.spark.rdd.RDD[_]): Unit =
       if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE) {

@@ -68,7 +68,7 @@ object IsoRehearsal {
         // misattribute the read's generation — serving through the
         // physical name is identity under resolve, and the retire grace
         // keeps the old generation's files live for the probe
-        val phys = Ann.physicalOf(spark, table)
+        val phys = graft.sources.TablePointer.resolve(spark, table)
         val gen = graft.sources.TablePointer.generationOf(phys)
         val s0 = System.nanoTime()
         try {

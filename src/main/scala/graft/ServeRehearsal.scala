@@ -88,7 +88,7 @@ object ServeRehearsal {
       val sparseExact = TextRank.searchTextIndex(spark, textT, qt,
           k = 10, maxDfFrac = 1.0)
         .select(col("q_id"), col("doc_id"), col("rk").as("sparse_rank"))
-      val vphys = Ann.physicalOf(spark, pqT)
+      val vphys = graft.sources.TablePointer.resolve(spark, pqT)
       val members = spark.table(vphys)
         .select(col("vec_id").as("doc_id"), col("emb").as("nemb"))
         .withColumn("nn", Ann.dotDec("nemb", "nemb"))

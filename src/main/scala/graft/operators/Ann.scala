@@ -2929,33 +2929,20 @@ object Ann {
   /** The PQ family's companion-table suffixes (retire/drop). */
   private val PqSuffixes = Seq("_centroids", "_codebook", "_meta")
 
-  /** The CURRENT generation's physical name of a standing index — the
-    * [[graft.sources.TablePointer]] resolution, identity for
-    * pre-generation tables. Callers that read an index's side tables
-    * directly (a spec, a rehearsal main, [[graft.Admit]]'s intra-batch
-    * cell source) resolve through this instead of assuming the logical
-    * name is physical.
-    */
-  def physicalOf(s: SparkSession, table: String): String =
-    graft.sources.TablePointer.resolve(s, table)
-
   /** The standing `_centroids` side table of an index, current
     * generation — both vector-index families expose it.
     */
   def centroidsOf(s: SparkSession, table: String): DataFrame =
-    s.table(s"${physicalOf(s, table)}_centroids")
+    s.table(s"${graft.sources.TablePointer.resolve(s, table)}_centroids")
 
   /** The standing index's quantizer family, from its `_meta` side table
-    * — `"sign"` for tables refreshed before the meta row existed.
+    * (every refresh lands it; a missing one fails as table-not-found —
+    * silently mis-encoding a kmeans index's appends as sign codes would
+    * corrupt the standing members).
     */
   private def pqQuantizerOf(s: SparkSession, table0: String): String = {
     val table = graft.sources.TablePointer.resolve(s, table0)
-    // only a MISSING meta table falls back (pre-r11 indexes are all
-    // sign-family by construction); any other failure must surface —
-    // silently mis-encoding a kmeans index's appends as sign codes
-    // would corrupt the standing members
-    if (!s.catalog.tableExists(s"${table}_meta")) "sign"
-    else s.table(s"${table}_meta").select("quantizer").collect().headOption
+    s.table(s"${table}_meta").select("quantizer").collect().headOption
       .map(_.getString(0))
       // an existing-but-EMPTY meta is corruption (a crash between
       // clearStaleLocation and the parquet commit, or a manual
@@ -2974,13 +2961,12 @@ object Ann {
                           recallMeasured: Double = -1.0,
                           // member count WHEN the sweep ran (round 16 —
                           // VERDICT r15 #2): the staleness anchor; −1 =
-                          // never calibrated / pre-column legacy row
+                          // never calibrated
                           docsAtCal: Long = -1L): Unit = {
     import s.implicits._
     graft.sources.Ingest.clearStaleLocation(s, s"${table}_meta")
     // -1 sentinels = "not calibrated": the screen columns exist from the
-    // first write so readers never need a second schema probe, but only
-    // a calibration run puts real values in them
+    // first write, but only a calibration run puts real values in them
     Seq((quantizer, screenNprobe, recallTarget, recallMeasured, docsAtCal))
       .toDF("quantizer", "screen_nprobe", "screen_recall_target",
         "screen_recall_measured", "docs_at_cal")
@@ -2988,34 +2974,12 @@ object Ann {
   }
 
   /** The calibrated admission nprobe of a standing index, from its
-    * `_meta` row — None for an index never calibrated (pre-r13 metas
-    * have no column; -1 sentinels mean "refresh ran uncalibrated").
+    * `_meta` row — None for an index never calibrated (the -1 sentinel).
     */
   private[graft] def pqScreenNprobeOf(s: SparkSession, table0: String): Option[Int] = {
     val table = graft.sources.TablePointer.resolve(s, table0)
-    if (!s.catalog.tableExists(s"${table}_meta")) None
-    else {
-      val m = s.table(s"${table}_meta")
-      if (!m.columns.contains("screen_nprobe")) None
-      else m.select("screen_nprobe").collect().headOption
-        .map(_.getInt(0)).filter(_ >= 1)
-    }
-  }
-
-  /** The member count the standing index's nprobe calibration probed
-    * against — −1 for an index never calibrated or a pre-r16 `_meta`
-    * row (drift unknowable, stated, not zero). The band/text families'
-    * docs_at_cal staleness anchor, for the PQ screen knob.
-    */
-  private[graft] def pqScreenDocsAtCalOf(s: SparkSession, table0: String): Long = {
-    val table = graft.sources.TablePointer.resolve(s, table0)
-    if (!s.catalog.tableExists(s"${table}_meta")) -1L
-    else {
-      val m = s.table(s"${table}_meta")
-      if (!m.columns.contains("docs_at_cal")) -1L
-      else m.select("docs_at_cal").collect().headOption
-        .map(_.getLong(0)).getOrElse(-1L)
-    }
+    s.table(s"${table}_meta").select("screen_nprobe").collect().headOption
+      .map(_.getInt(0)).filter(_ >= 1)
   }
 
   /** Held-out re-encode screen recall of a standing [[refreshPqIndex]]
@@ -3289,20 +3253,27 @@ object Ann {
     // per-query integer LUT against the STANDING codebook: |Q| × 8 × 16
     // rows, broadcast — the only per-query state the ADC scan touches.
     // ONE broadcast carries all three ADC ingredients (round 18 — VERDICT
-    // r17 #4, q112's serialized job chain): the codeword norm n2 and the
-    // per-sub query norm qn2p ride the LUT rows the grouping already
-    // enumerates (n2 = Σ_jj cw² per (sub, code); Σ_sub qn2p = the full
-    // query norm, since every candidate matches exactly one LUT row per
-    // sub), so the separate cbn and qn rollups — each a broadcast build
-    // job on the critical path — are gone. Long sums, bit-identical.
-    val qcomps = pqComps(pqCoded(queries.select(col("vec_id"), col("emb"))))
-      .select(col("vec_id").as("q_id"), col("sub"), col("jj"),
-        floor(col("v") * lit(10000000.0)).cast("long").as("qv"))
+    // r17 #4, q112's serialized job chain): the codeword norm n2 rides
+    // the LUT rows the grouping already enumerates (n2 = Σ_jj cw² per
+    // (sub, code)), and the exact query norm qn2 = Σ_j qv² rides every
+    // LUT row as a per-q_id CONSTANT, folded row-locally from the query
+    // vector. A per-sub partial summed over a candidate's matched rows
+    // would shrink for an appended sign-quantizer member whose (sub,
+    // code) has no codebook row, inflating exactly the worst-represented
+    // candidates. Long sums, bit-identical to the exact rollup.
+    val qcomps = queries
+      .select(col("vec_id").as("q_id"), posexplode(col("emb")).as(Seq("j", "v")),
+        expr("aggregate(emb, CAST(0 AS BIGINT), (a, x) -> " +
+          "a + CAST(floor(x * 1.0E7) AS BIGINT) * CAST(floor(x * 1.0E7) AS BIGINT))")
+          .as("qn2"))
+      .select(col("q_id"), expr(s"j div $PqSubDim").as("sub"),
+        expr(s"j % $PqSubDim").as("jj"),
+        floor(col("v") * lit(10000000.0)).cast("long").as("qv"), col("qn2"))
     val lut = qcomps.join(broadcast(codebook), Seq("sub", "jj"))
       .groupBy("q_id", "sub", "code")
       .agg(sum(col("qv") * col("cw")).as("d"),
         sum(col("cw") * col("cw")).as("n2"),
-        sum(col("qv") * col("qv")).as("qn2p"))
+        max(col("qn2")).as("qn2"))
 
     // ADC stage: probed cells' code rows only (the broadcast cell join
     // prunes the partitioned scan); 8 LUT adds per candidate
@@ -3315,7 +3286,7 @@ object Ann {
       .join(broadcast(lut), Seq("q_id", "sub", "code"))
       .groupBy("q_id", "vec_id", "cell")
       .agg(sum(col("d")).as("dot"), sum(col("n2")).as("recon2"),
-        sum(col("qn2p")).as("qnorm2"))
+        max(col("qn2")).as("qnorm2"))
       .withColumn("adc_cosine", Num.roundD(col("dot").cast("double")
         / sqrt(col("qnorm2").cast("double") * col("recon2").cast("double"))))
       .withColumn("adc_rank", row_number().over(adcW))

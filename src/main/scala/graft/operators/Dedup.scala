@@ -551,7 +551,7 @@ object Dedup {
     // UNCALIBRATED refresh — the WAL-recovery rebuild's shape — of a
     // previously calibrated index must not silently discard the
     // persisted threshold and revert auto probes to the historical
-    // default. The previous generation's (or a legacy layout's) `_meta`
+    // default. The previous generation's `_meta`
     // row carries forward with its ORIGINAL docs_at_cal anchor, so the
     // staleness drift stays visible ([[graft.Admit.standingStateReport]])
     // until a calibrated refresh or [[graft.Admit.recalibrateBandScreen]]
@@ -667,17 +667,11 @@ object Dedup {
     // table an outer-session frame appended to would otherwise keep
     // serving its stale pre-append listing)
     s.catalog.refreshTable(phys)
-    // keep the content-hash companion in lockstep when it exists; a
-    // pre-r13 band table HAS no companion and must not get a partial
-    // one here (a hash set seeded from one batch would answer "not a
-    // member" for the whole standing corpus — worse than absent, and
-    // [[graft.Admit]] treats absence as screen-off), so the companion
-    // is only ever born corpus-complete, by a refresh
-    if (s.catalog.tableExists(hashTableOf(phys))) {
-      graft.sources.Ingest.appendBucketed(contentHashKeys(batch, tokMode),
-        hashTableOf(phys), "h")
-      s.catalog.refreshTable(hashTableOf(phys))
-    }
+    // the content-hash companion grows in lockstep (every refresh lands
+    // it corpus-complete)
+    graft.sources.Ingest.appendBucketed(contentHashKeys(batch, tokMode),
+      hashTableOf(phys), "h")
+    s.catalog.refreshTable(hashTableOf(phys))
   }
 
   /** Probe a batch against a [[refreshIndex]]-materialized index table —
@@ -787,28 +781,22 @@ object Dedup {
     * VERDICT r15 #2: the staleness anchor `docs_now − docs_at_cal` is
     * the drift signal [[graft.Admit.standingStateReport]] surfaces, the
     * text family's `_cal` contract applied to this knob). Sentinels:
-    * threshold −1 / docsAtCal −1 = never calibrated (or a pre-column
-    * legacy row — drift unknowable, stated, not zero).
+    * threshold −1 / docsAtCal −1 = never calibrated.
     */
   case class BandMeta(threshold: Int, policyTier: Int, target: Double,
                       measured: Double, tokMode: String, docsAtCal: Long)
 
-  /** Read a band index's `_meta` row — None for a legacy index refreshed
-    * before the row existed (its knobs are then the historical defaults:
-    * threshold [[DefaultBandThreshold]], mode `default`). Legacy ROWS
-    * (pre-r16 schema, written by a calibration only) read with default
-    * tokenizer mode and an unknowable (−1) docs anchor.
+  /** Read a band index's `_meta` row — None only when the resolved
+    * generation has no catalogued tables: before the index's first
+    * refresh, which then starts from the never-calibrated sentinels.
     */
   def bandMetaOf(s: SparkSession, table0: String): Option[BandMeta] = {
     val table = graft.sources.TablePointer.resolve(s, table0)
     if (!s.catalog.tableExists(metaTableOf(table))) None
-    else s.table(metaTableOf(table)).collect().headOption.map { r =>
-      val f = r.schema.fieldNames
+    else s.table(metaTableOf(table)).collect().headOption.map(r =>
       BandMeta(r.getAs[Int]("band_threshold"), r.getAs[Int]("policy_tier"),
         r.getAs[Double]("recall_target"), r.getAs[Double]("recall_measured"),
-        if (f.contains("tok_mode")) r.getAs[String]("tok_mode") else "default",
-        if (f.contains("docs_at_cal")) r.getAs[Long]("docs_at_cal") else -1L)
-    }
+        r.getAs[String]("tok_mode"), r.getAs[Long]("docs_at_cal")))
   }
 
   /** The calibrated band-probe threshold of a standing index, from its
@@ -818,7 +806,7 @@ object Dedup {
     bandMetaOf(s, table0).map(_.threshold).filter(_ >= 1)
 
   /** The [[TextRank.tokWords]] mode a standing band index was refreshed
-    * with — `default` for a legacy index (no `_meta`, or a pre-mode row).
+    * with.
     */
   def bandTokModeOf(s: SparkSession, table0: String): String =
     bandMetaOf(s, table0).map(_.tokMode).getOrElse("default")

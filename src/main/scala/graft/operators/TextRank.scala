@@ -467,6 +467,14 @@ object TextRank {
     } finally post.unpersist(false)
   }
 
+  /** The [[tokWords]] mode a standing text index was refreshed with —
+    * read from its `_meta` partials. `table0` may be logical or physical.
+    */
+  def textTokModeOf(s: SparkSession, table0: String): String = {
+    val phys = graft.sources.TablePointer.resolve(s, table0)
+    s.table(s"${phys}_meta").select("tok_mode").head().getString(0)
+  }
+
   /** Incremental text-index maintenance: append a batch's postings, df
     * partials, and meta partial to the CURRENT generation — one
     * batch-sized shuffle, never a corpus rebuild, and purely ADDITIVE
@@ -474,18 +482,6 @@ object TextRank {
     * either the pre- or post-append corpus constants, never a torn
     * rewrite. Bucket specs are owned by the standing tables.
     */
-  /** The [[tokWords]] mode a standing text index was refreshed with —
-    * read from its `_meta` partials; `default` for a pre-mode legacy
-    * index (whose partials carry no `tok_mode` column). `table0` may be
-    * logical or physical.
-    */
-  def textTokModeOf(s: SparkSession, table0: String): String = {
-    val phys = graft.sources.TablePointer.resolve(s, table0)
-    val meta = s.table(s"${phys}_meta")
-    if (!meta.columns.contains("tok_mode")) "default"
-    else meta.select("tok_mode").head().getString(0)
-  }
-
   def appendTextIndex(s: SparkSession, table: String, docs: DataFrame): Unit = {
     val phys = graft.sources.TablePointer.resolve(s, table)
     // the batch tokenizes under the INDEX's persisted mode — mixing
@@ -500,22 +496,9 @@ object TextRank {
         .saveAsTable(phys)
       graft.sources.Ingest.appendBucketed(
         post.groupBy("term").agg(count(lit(1)).as("df")), s"${phys}_df", "term")
-      // the champion companion appends ONLY when it exists — the
-      // `_hashes` born-corpus-complete rule: appending a batch partial
-      // to a pre-champion legacy index would create a companion holding
-      // ONLY the batch's champions, and champion serving would silently
-      // miss the standing corpus; a legacy index stays champion-less
-      // (searchTextIndexChampion refuses loudly) until its next refresh
-      // materializes the companion corpus-complete
-      if (s.catalog.tableExists(s"${phys}_champ"))
-        graft.sources.Ingest.appendBucketed(
-          champPartial(post), s"${phys}_champ", "term")
-      // a legacy `_meta` (no tok_mode column) keeps its schema — the
-      // index IS default-mode by construction, and an append must not
-      // fail on (or half-migrate) the standing partials
-      val mp = metaPartial(docs, post, tokMode)
-      (if (s.table(s"${phys}_meta").columns.contains("tok_mode")) mp
-       else mp.drop("tok_mode"))
+      graft.sources.Ingest.appendBucketed(
+        champPartial(post), s"${phys}_champ", "term")
+      metaPartial(docs, post, tokMode)
         .write.mode("append").format("parquet")
         .saveAsTable(s"${phys}_meta")
     } finally post.unpersist(false)
@@ -617,11 +600,6 @@ object TextRank {
       s"champion depth m=$mEff must be in [1, $ChampM] — the companion " +
         s"stores top-$ChampM per commit; deeper serving needs a refresh " +
         "with a larger ChampM")
-    require(s.catalog.tableExists(s"${phys}_champ"),
-      s"$phys has no champion companion — an index refreshed before " +
-        "champion lists existed serves exact/pruned only; refresh it to " +
-        "materialize `_champ` corpus-complete (a partial companion would " +
-        "silently miss standing champions, so none is ever auto-created)")
     val nQ = qt.count()
     require(nQ <= maxQueryRows,
       s"searchTextIndexChampion broadcasts its query terms, and $nQ " +
@@ -663,9 +641,7 @@ object TextRank {
                      // silently stops being a measured property of the
                      // served corpus — docs_now vs docs_at_cal is the
                      // staleness signal standingStateReport surfaces.
-                     // −1 on a `_cal` row persisted before the column
-                     // existed (drift unknowable, stated, not zero).
-                     docsAtCal: Long = -1L)
+                     docsAtCal: Long)
 
   /** Read a text index's persisted serving calibration — None for an
     * index refreshed without a target (the auto sentinels then degrade
@@ -677,9 +653,7 @@ object TextRank {
     else s.table(s"${phys}_cal").collect().headOption.map(r =>
       TextCal(r.getAs[Double]("max_df_frac"), r.getAs[Int]("champ_m"),
         r.getAs[Double]("recall_target"), r.getAs[Double]("prune_measured"),
-        r.getAs[Double]("champ_measured"),
-        if (r.schema.fieldNames.contains("docs_at_cal"))
-          r.getAs[Long]("docs_at_cal") else -1L))
+        r.getAs[Double]("champ_measured"), r.getAs[Long]("docs_at_cal")))
   }
 
   /** Derive BOTH approximate-serving knobs from the standing index's own
@@ -714,10 +688,6 @@ object TextRank {
                            nPanel: Int = 12): TextCal = {
     import s.implicits._
     val phys = graft.sources.TablePointer.resolve(s, table0)
-    require(s.catalog.tableExists(s"${phys}_champ"),
-      s"$phys has no champion companion to calibrate — refresh the " +
-        "index first (refreshTextIndex materializes `_champ` " +
-        "corpus-complete before the calibration sweep)")
     val post = s.table(phys)
     val panelDocs = post.select("doc_id").distinct().orderBy("doc_id")
       .limit(nPanel)
@@ -862,27 +832,22 @@ object TextRank {
                        // 64-candidate shortlist as the binding residual
                        // at 10×/30× (denser neighborhoods, constant
                        // shortlist), so the sweep escalates it as a
-                       // third knob; 64 on a pre-column row
-                       adcTopC: Int = 64)
+                       // third knob
+                       adcTopC: Int)
 
   /** Read a text index's persisted fused pair — None when the hybrid
-    * sweep never ran (pre-r16 `_cal` rows carry no fused columns; the
-    * sentinels are fused_nprobe < 1).
+    * sweep never ran (the sentinels are fused_nprobe < 1).
     */
   def textHybridCalOf(s: SparkSession, table0: String): Option[HybridCal] = {
     val phys = graft.sources.TablePointer.resolve(s, table0)
     if (!s.catalog.tableExists(s"${phys}_cal")) None
-    else s.table(s"${phys}_cal").collect().headOption.flatMap { r =>
-      val f = r.schema.fieldNames
-      if (!f.contains("fused_nprobe") || r.getAs[Int]("fused_nprobe") < 1) None
-      else Some(HybridCal(r.getAs[Double]("fused_df_frac"),
+    else s.table(s"${phys}_cal").collect().headOption
+      .filter(_.getAs[Int]("fused_nprobe") >= 1)
+      .map(r => HybridCal(r.getAs[Double]("fused_df_frac"),
         r.getAs[Int]("fused_nprobe"), r.getAs[String]("fused_family"),
         r.getAs[Double]("fused_recall_target"),
         r.getAs[Double]("fused_recall_measured"),
-        r.getAs[Long]("fused_docs_at_cal"),
-        if (f.contains("fused_adc_top_c")) r.getAs[Int]("fused_adc_top_c")
-        else 64))
-    }
+        r.getAs[Long]("fused_docs_at_cal"), r.getAs[Int]("fused_adc_top_c")))
   }
 
   /** The `_cal` row, whole: sparse serving knobs + the fused pair (−1 /
@@ -1376,7 +1341,7 @@ object TextRank {
       .withColumn("qn", Ann.dotDec("qemb", "qemb"))
     // CPU-spread under the corpus × panel decimal pass (round 18 —
     // Tuning.spreadSmall): the single-row-group scan otherwise runs the
-    // whole |corpus| × |panel| cosine fold as ONE task (Diag: a 2.5 s
+    // whole |corpus| × |panel| cosine fold as ONE task (measured: a 2.5 s
     // single-task broadcast-build job, the suite's textbook byte-blind
     // serialization); no-op at real corpus sizes where scan splits
     // already parallelize
@@ -1445,8 +1410,7 @@ object TextRank {
       textHybridCalOf(s, textTable).filter(_.family == family) else None
     val npEff =
       if (nprobe != 0) nprobe
-      else hc.map(_.nprobe).getOrElse(
-        s.table(s"${Ann.physicalOf(s, vecTable)}_centroids").count().toInt)
+      else hc.map(_.nprobe).getOrElse(Ann.centroidsOf(s, vecTable).count().toInt)
     val fracEff =
       if (sparseDfFrac != 0.0) sparseDfFrac
       else hc.map(_.dfFrac).getOrElse(1.0)
@@ -1578,7 +1542,7 @@ object TextRank {
     // §2.6 — independent jobs submitted from a small thread pool back-fill
     // each other's stragglers), so the wall cost is max(arm), not Σ(arm),
     // and the truth + grid fusions then consume four tiny pinned tables.
-    // Diag before: 64 fully-serialized single-task jobs, 11.2 s job-wall
+    // Measured before: 64 fully-serialized single-task jobs, 11.2 s job-wall
     // in 5.5 s — every arm pipeline re-ran 2–3×. After: each arm runs
     // exactly once. At 100 TB this is the difference between 4 and ~10
     // corpus-wide scoring passes.
@@ -1637,13 +1601,22 @@ object TextRank {
     // idle cores (guide §2.6), so this barrier costs max(arm), not Σ(arm)
     val arms0 = Seq(sparseExact0, sparsePruned0, denseExact0, denseIvf0)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(arms0.size)
+    val futures = arms0.map { a =>
+      pool.submit(new java.util.concurrent.Callable[DataFrame] {
+        override def call(): DataFrame = a.localCheckpoint(true)
+      })
+    }
     val pinned =
-      try arms0.map { a =>
-        pool.submit(new java.util.concurrent.Callable[DataFrame] {
-          override def call(): DataFrame = a.localCheckpoint(true)
-        })
-      }.map(_.get())
-      finally pool.shutdown()
+      try futures.map(_.get())
+      catch {
+        // one arm failed: stop the rest, free the arms already pinned,
+        // and surface the arm's own failure, not the pool's wrapper
+        case e: java.util.concurrent.ExecutionException =>
+          pool.shutdownNow()
+          futures.filter(_.isDone).foreach(f =>
+            scala.util.Try(f.get()).foreach(graft.Frames.freePinned))
+          throw e.getCause
+      } finally pool.shutdown()
     val Seq(sparseExact, sparsePruned, denseExact, denseIvf) = pinned
     val truth = fuseRrf(sparseExact, denseExact, k).select("q_id", "doc_id")
       .localCheckpoint(true)

@@ -39,8 +39,8 @@ import org.apache.spark.sql.functions._
   *
   * Manifests land under `<dir>/_snapshots/v=<version>/` — an
   * underscore directory, so Spark's own readers of `<dir>` never see
-  * them as data; each version's optional metadata row (publisher, row
-  * count) lands under `_snapshots/v=<version>_meta/`.
+  * them as data; each version's publish metadata (publisher, row count)
+  * rides its manifest rows, so one parquet commit is the whole publish.
   */
 object Snapshots {
 
@@ -148,10 +148,9 @@ object Snapshots {
   /** Publish `version` of the dataset under `dir`: one manifest row per
     * data file (relative path, size, mtime), with the publish metadata
     * (`publisher`, opt-in `row_count`) carried ON the manifest rows —
-    * SINGLE-COMMIT since round 14 (VERDICT r13 #4): the manifest parquet
-    * write IS the publish, so a crash can no longer leave a catalogued
-    * version whose metadata commit never landed (the r13 layout wrote
-    * manifest and `_meta` as two commits). Re-publishing a version is an
+    * SINGLE-COMMIT: the manifest parquet write IS the publish, so a
+    * crash can never leave a catalogued version whose metadata never
+    * landed. Re-publishing a version is an
     * overwrite (idempotent replay, the landing discipline) — two racing
     * publishers of the same version each write a COMPLETE listing, so
     * last-writer-wins converges to a full manifest, never a merge.
@@ -216,9 +215,16 @@ object Snapshots {
         try {
           // Rename.NONE fails if v=N exists — the CAS: exactly one of
           // two same-instant publishers wins N, the other retries N+1
-          fc.rename(staged, new Path(snapRoot, s"v=$next"),
-            org.apache.hadoop.fs.Options.Rename.NONE)
-          return next
+          val committed = new Path(snapRoot, s"v=$next")
+          fc.rename(staged, committed, org.apache.hadoop.fs.Options.Rename.NONE)
+          // the local filesystem checks the destination and then moves:
+          // a racer that passed the check just before the winner's move
+          // lands INSIDE the winner's directory — a lost race, so take
+          // the staged manifest back and retry
+          val nested = new Path(committed, staged.getName)
+          if (!f.exists(nested)) return next
+          f.rename(nested, staged)
+          attempt += 1
         } catch {
           case _: org.apache.hadoop.fs.FileAlreadyExistsException |
                _: java.io.IOException => attempt += 1
@@ -235,19 +241,15 @@ object Snapshots {
   }
 
   /** Published versions with their file counts, byte totals, and the
-    * publish metadata (null publisher / -1 row_count for versions
-    * published without them) — the catalog a reader picks a version
-    * from. Empty frame when nothing was ever published.
+    * publish metadata (null publisher / -1 row_count for a version
+    * published over an empty landing, whose manifest has no rows) — the
+    * catalog a reader picks a version from. Empty frame when nothing was
+    * ever published.
     *
-    * ONE distributed pass since round 14 (VERDICT r13 #4): every
-    * version's manifest is read in a single partition-discovered scan
-    * of `_snapshots` (the version number is the `v=` partition value),
-    * so the catalog costs O(1) Spark jobs however many versions exist —
-    * the r13 shape ran one count-job per version, ~10³ sequential jobs
-    * after a few years of daily publishes. Legacy layouts mix in: r13
-    * manifests (no metadata columns) and their `v=N_meta` side dirs are
-    * folded in by the same scan (mergeSchema + a suffix split), with
-    * the r13 fallbacks (null publisher / -1 row_count) preserved.
+    * ONE distributed pass: every version's manifest is read in a single
+    * partition-discovered scan of `_snapshots` (the version number is
+    * the `v=` partition value), so the catalog costs O(1) Spark jobs
+    * however many versions exist — never one count-job per version.
     */
   def versions(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -260,42 +262,23 @@ object Snapshots {
     val vs =
       if (!f.exists(snapRoot)) Seq.empty[Int]
       else f.listStatus(snapRoot).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("v=") &&
-          !st.getPath.getName.endsWith("_meta"))
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
         .map(_.getPath.getName.stripPrefix("v=").toInt).sorted
     if (vs.isEmpty)
       return Seq.empty[(Int, Long, Long, String, Long)]
         .toDF("version", "n_files", "bytes", "publisher", "row_count")
-    val raw0 = spark.read.option("mergeSchema", "true")
-      .parquet(s"$dir/_snapshots")
-      .withColumn("_v", col("v").cast("string"))
-    // a catalog of ONLY legacy manifests has no metadata columns at all
-    val raw = Seq("publisher" -> "string", "row_count" -> "long")
-      .foldLeft(raw0) { case (d, (c, t)) =>
-        if (d.columns.contains(c)) d else d.withColumn(c, lit(null).cast(t)) }
-    val mAgg = raw.filter(!col("_v").endsWith("_meta"))
-      .withColumn("version", col("_v").cast("int"))
-      .groupBy("version")
-      .agg(count(col("path")).as("n_files"),
-        coalesce(sum("size"), lit(0L)).as("bytes"),
-        first(col("publisher"), ignoreNulls = true).as("m_publisher"),
-        first(col("row_count"), ignoreNulls = true).as("m_row_count"))
-    val legacyMeta = raw.filter(col("_v").endsWith("_meta"))
-      .select(regexp_replace(col("_v"), "_meta$", "").cast("int").as("version"),
-        col("publisher").as("l_publisher"),
-        col("row_count").as("l_row_count"))
-      .groupBy("version")
-      .agg(first(col("l_publisher"), ignoreNulls = true).as("l_publisher"),
-        first(col("l_row_count"), ignoreNulls = true).as("l_row_count"))
+    val agg = spark.read.parquet(s"$dir/_snapshots")
+      .groupBy(col("v").cast("int").as("version"))
+      .agg(count(col("path")).as("n_files"), sum("size").as("bytes"),
+        first(col("publisher")).as("publisher"),
+        first(col("row_count")).as("row_count"))
     vs.toDF("version")
-      .join(mAgg, Seq("version"), "left")
-      .join(legacyMeta, Seq("version"), "left")
+      .join(agg, Seq("version"), "left")
       .select(col("version"),
         coalesce(col("n_files"), lit(0L)).as("n_files"),
         coalesce(col("bytes"), lit(0L)).as("bytes"),
-        coalesce(col("m_publisher"), col("l_publisher")).as("publisher"),
-        coalesce(col("m_row_count"), col("l_row_count"), lit(-1L))
-          .as("row_count"))
+        col("publisher"),
+        coalesce(col("row_count"), lit(-1L)).as("row_count"))
       .orderBy("version")
   }
 
@@ -319,8 +302,7 @@ object Snapshots {
 
   /** Retention: expire all but the newest `keepLast` published versions
     * — the `expire_snapshots` analog, completing the manifest
-    * lifecycle. Only MANIFESTS are deleted (and their metadata rows);
-    * data files are never touched — on an append-only landing every
+    * lifecycle. Only MANIFESTS are deleted; data files are never touched — on an append-only landing every
     * version shares them, so manifest-grain expiry reclaims catalog
     * clutter, not storage, exactly like a format's snapshot expiry
     * without its orphan-file sweep (which needs the tombstone log this
@@ -333,10 +315,7 @@ object Snapshots {
     val vs = versions(spark, dir).select("version").collect()
       .map(_.getInt(0)).sorted
     val expire = vs.dropRight(keepLast).toSeq
-    for (v <- expire; suffix <- Seq("", "_meta")) {
-      val p = new Path(s"$dir/_snapshots/v=$v$suffix")
-      if (f.exists(p)) f.delete(p, true)
-    }
+    for (v <- expire) f.delete(new Path(s"$dir/_snapshots/v=$v"), true)
     expire
   }
 

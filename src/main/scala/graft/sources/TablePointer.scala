@@ -32,9 +32,10 @@ import org.apache.spark.sql.SparkSession
   * overhead at ≤ 2× per index while giving in-flight readers a full
   * refresh cycle to finish.
   *
-  * Resolution is IDENTITY for unversioned names: a table refreshed
-  * before this round (no pointer file) resolves to itself, so legacy
-  * indexes keep working and adopt generations on their next refresh.
+  * Resolution is IDENTITY for names with no pointer file: a physical
+  * `__gN` name, or a name never refreshed (whose first refresh stages
+  * generation 1). Every standing table is born under a generation —
+  * there is no unversioned layout to adopt.
   */
 object TablePointer {
 
@@ -71,8 +72,8 @@ object TablePointer {
 
   private val GenSuffix = "__g(\\d+)$".r
 
-  /** The generation number encoded in a physical name — 0 for an
-    * unversioned (legacy) name.
+  /** The generation number encoded in a physical name — 0 for a name
+    * with no generation suffix (never refreshed).
     */
   def generationOf(physical: String): Int =
     GenSuffix.findFirstMatchIn(physical).map(_.group(1).toInt).getOrElse(0)
@@ -114,10 +115,9 @@ object TablePointer {
       .rename(staged, target, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** Drop every generation older than current − (keepLast − 1), plus
-    * the pre-generation unversioned table once ≥ keepLast generations
-    * exist — the grace period: a reader that resolved before the last
-    * swap still has its whole generation on disk. `sideSuffixes` names
+  /** Drop every generation older than current − (keepLast − 1) — the
+    * grace period: a reader that resolved before the last swap still
+    * has its whole generation on disk. `sideSuffixes` names
     * the family's companion tables (e.g. `_centroids`); the empty
     * suffix (the main table) is always included. Returns the dropped
     * physical prefixes.
@@ -125,12 +125,8 @@ object TablePointer {
   def retire(s: SparkSession, logical: String,
              sideSuffixes: Seq[String], keepLast: Int = 2): Seq[String] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val curGen = generationOf(resolve(s, logical))
-    if (curGen == 0) return Seq.empty
-    val cutoff = curGen - (keepLast - 1)
-    val dropGens =
-      (1 until cutoff).map(g => s"${logical}__g$g") ++
-        (if (cutoff >= 1) Seq(logical) else Seq.empty)
+    val cutoff = generationOf(resolve(s, logical)) - (keepLast - 1)
+    val dropGens = (1 until cutoff).map(g => s"${logical}__g$g")
     for (prefix <- dropGens; suffix <- "" +: sideSuffixes) {
       val t = s"$prefix$suffix"
       s.sql(s"DROP TABLE IF EXISTS default.`$t`")
@@ -143,19 +139,9 @@ object TablePointer {
     dropGens
   }
 
-  /** Test seam: delete ONLY the pointer file, leaving tables intact —
-    * specs forge the pre-generation (legacy) state with it to pin the
-    * migration path (resolve falls back to the logical name).
-    */
-  private[graft] def dropPointer(s: SparkSession, logical: String): Unit = {
-    val p = pointerPath(s, logical)
-    val fs = fsOf(s, p)
-    if (fs.exists(p)) fs.delete(p, false)
-  }
-
   /** Test/lifecycle helper: delete the pointer and EVERY generation of
-    * `logical` (including the unversioned name) — the clean-slate drop
-    * specs and rebuilds-from-nothing use.
+    * `logical` (a crashed refresh's staged next generation included) —
+    * the clean-slate drop specs and rebuilds-from-nothing use.
     */
   def dropAll(s: SparkSession, logical: String,
               sideSuffixes: Seq[String]): Unit = {
@@ -163,9 +149,8 @@ object TablePointer {
     val pfs = fsOf(s, p)
     val curGen = generationOf(resolve(s, logical))
     if (pfs.exists(p)) pfs.delete(p, false)
-    val prefixes = logical +: (1 to curGen + 2).map(g => s"${logical}__g$g")
-    for (prefix <- prefixes; suffix <- "" +: sideSuffixes) {
-      val t = s"$prefix$suffix"
+    for (g <- 1 to curGen + 2; suffix <- "" +: sideSuffixes) {
+      val t = s"${logical}__g$g$suffix"
       s.sql(s"DROP TABLE IF EXISTS default.`$t`")
       Ingest.clearStaleLocation(s, t)
     }

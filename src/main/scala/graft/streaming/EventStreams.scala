@@ -393,11 +393,10 @@ object EventStreams {
           // compaction watch must count the files of the generation
           // probes actually read
           val bandPhys = graft.sources.TablePointer.resolve(s, bandTable)
-          val hashTable = graft.operators.Dedup.hashTableOf(bandPhys)
-          val watched = Seq(bandPhys) ++
-            (if (s.catalog.tableExists(hashTable)) Seq(hashTable) else Nil) ++
+          val watched =
+            Seq(bandPhys, graft.operators.Dedup.hashTableOf(bandPhys)) ++
             (semTable.toSeq ++ pqTable.toSeq)
-              .map(t => graft.operators.Ann.physicalOf(s, t)) ++
+              .map(t => graft.sources.TablePointer.resolve(s, t)) ++
             // the postings table is term-bucket PARTITIONED; the
             // partition-grain file count watches it like the PQ cells
             textTable.toSeq

@@ -554,32 +554,17 @@ class AdmitSpec extends SparkSpec {
         "pacing the tide tables of an unhurried estuary"))
       .toDF("doc_id", "text")
 
-    // A: the pre-r13 floor, reproduced — WITHOUT the hash companion the
-    // re-submission sails through every screen and lands (this is
-    // ComposeRehearsal r12's measured 199/200, as a unit case)
-    val bandPhys = graft.sources.TablePointer.resolve(spark, band)
-    val hashes = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir") + s"/${bandPhys}_hashes")
-    val hfs = hashes.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.sql(s"DROP TABLE IF EXISTS ${bandPhys}_hashes")
-    if (hfs.exists(hashes)) hfs.delete(hashes, true)
-    val outA = java.nio.file.Files.createTempDirectory("admit-short-a").toString
-    val rA = Admit.admitBatch(spark, batch, band, outA, 1L)
-    assert(rA.admitted == 2 && rA.exactRejected == 0,
-      s"without the hash companion the short re-submission escapes: $rA")
-
-    // B: with the companion (a fresh refresh lands it) the re-submission
-    // rejects at the exact screen, with the named accounting to prove it
-    Dedup.refreshIndex(d, band, numBuckets = 8)
-    val outB = java.nio.file.Files.createTempDirectory("admit-short-b").toString
-    val rB = Admit.admitBatch(spark, batch, band, outB, 1L)
-    assert(rB == Admit.Report(1L, 2, 0, 0, 0, 0, 1, exactRejected = 1),
-      rB.toString)
-    val landed = spark.read.parquet(outB).select("doc_id")
+    // the re-submission rejects at the exact screen (the `_hashes`
+    // companion the refresh landed), with the named accounting to prove it
+    val out = java.nio.file.Files.createTempDirectory("admit-short").toString
+    val r1 = Admit.admitBatch(spark, batch, band, out, 1L)
+    assert(r1 == Admit.Report(1L, 2, 0, 0, 0, 0, 1, exactRejected = 1),
+      r1.toString)
+    val landed = spark.read.parquet(out).select("doc_id")
       .as[Long].collect().toSet
     assert(landed == Set(970002L), landed.toString)
     // the persisted report names the reason
-    val rep = spark.read.parquet(s"$outB/_admit_reports")
+    val rep = spark.read.parquet(s"$out/_admit_reports")
       .select("exact_rejected", "near_dup_rejected", "admitted")
       .as[(Long, Long, Long)].collect().toSet
     assert(rep == Set((1L, 0L, 1L)), rep.toString)
@@ -588,7 +573,7 @@ class AdmitSpec extends SparkSpec {
     val r2 = Admit.admitBatch(spark,
       Seq((980001L, "a wholly novel communique on porcelain metronomes " +
         "pacing the tide tables of an unhurried estuary")).toDF("doc_id", "text"),
-      band, outB, 2L)
+      band, out, 2L)
     assert(r2.exactRejected == 1 && r2.admitted == 0, r2.toString)
 
     // round 14 (VERDICT r13 #6): a DOUBLE-SPACED re-submission of the
@@ -596,7 +581,7 @@ class AdmitSpec extends SparkSpec {
     // class that slipped both screens — rejects at the exact screen via
     // the companion's whitespace-collapsed second key
     val r3 = Admit.admitBatch(spark,
-      Seq((990101L, "ok  bye")).toDF("doc_id", "text"), band, outB, 3L)
+      Seq((990101L, "ok  bye")).toDF("doc_id", "text"), band, out, 3L)
     assert(r3.exactRejected == 1 && r3.admitted == 0, r3.toString)
   }
 

@@ -210,24 +210,6 @@ class CorpusOpsSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       TextRank.searchTextIndexChampion(spark, tc, toyQt, m = TextRank.ChampM + 1))
     assert(e.getMessage.contains("champion depth"))
-    // LEGACY migration (the `_hashes` born-corpus-complete rule): a
-    // pre-champion index must never grow a PARTIAL companion — an
-    // append skips the champion write, champion serving refuses loudly,
-    // and the next refresh materializes it corpus-complete
-    val physC = TablePointer.resolve(spark, tc)
-    spark.sql(s"DROP TABLE IF EXISTS `${physC}_champ`")
-    graft.sources.Ingest.clearStaleLocation(spark, s"${physC}_champ")
-    TextRank.appendTextIndex(spark, tc,
-      Seq((5L, "apple fig kiwi")).toDF("doc_id", "text"))
-    assert(!spark.catalog.tableExists(s"${physC}_champ"),
-      "an append must not create a batch-only champion companion")
-    val e2 = intercept[IllegalArgumentException](
-      TextRank.searchTextIndexChampion(spark, tc, toyQt, m = 8))
-    assert(e2.getMessage.contains("no champion companion"))
-    TextRank.refreshTextIndex(toy.unionByName(
-      Seq((5L, "apple fig kiwi")).toDF("doc_id", "text")), tc)
-    assert(TextRank.searchTextIndexChampion(spark, tc, toyQt, m = 8)
-      .collect().nonEmpty)
     Seq(ta, tb, tc).foreach(TablePointer.dropAll(spark, _, suf))
   }
 

@@ -9,7 +9,17 @@ class CurateSpec extends SparkSpec {
 
   test("curate pipeline filters monotonically and writes pruned partitions") {
     val out = java.nio.file.Files.createTempDirectory("curate").toString
+    // operator caches are session-scoped and released by the cache
+    // sweep; checkpoint pins have no owner but the code that took them
+    val caches = spark.sharedState.cacheManager
+    caches.clearCache()
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.size
     val s = Curate.run(spark, Sf, out)
+    caches.clearCache()
+    // the run frees every checkpoint it pins, the connected-components
+    // one under the label cache included
+    assert(spark.sparkContext.getPersistentRDDs.size == pinnedBefore,
+      spark.sparkContext.getPersistentRDDs.values.mkString(", "))
     assert(s.input >= s.afterQuality)
     assert(s.afterQuality >= s.afterDedup)
     assert(s.afterDedup >= s.afterDecontam)

@@ -1117,8 +1117,8 @@ class DedupAnnSpec extends SparkSpec {
   }
 
   private def dropPqTables(table: String): Unit =
-    // pointer + every generation + the unversioned legacy names (round
-    // 14: refreshes land versioned generations behind an atomic pointer)
+    // pointer + every generation (round 14: refreshes land versioned
+    // generations behind an atomic pointer)
     graft.sources.TablePointer.dropAll(spark, table,
       Seq("_centroids", "_codebook", "_meta"))
 
@@ -1783,49 +1783,7 @@ class DedupAnnSpec extends SparkSpec {
       "a post-swap sem reader must see the new generation's members")
   }
 
-  test("a legacy unversioned index serves as-is and adopts generations on its next refresh") {
-    val table = "pq_legacy_adopt"
-    dropPqTables(table)
-    val e = Tables.load(spark, Sf, "embeddings")
-      .withColumn("emb", expr("transform(embedding, x -> cast(x as double))"))
-      .select("vec_id", "emb", "label")
-    Ann.refreshPqIndex(e.filter(col("vec_id") % 2 === 0), table)
-    // forge the PRE-r14 state every existing deployment has: the tables
-    // live at the LOGICAL name with no pointer file
-    for (suf <- Seq("", "_centroids", "_codebook", "_meta"))
-      spark.sql(s"ALTER TABLE ${table}__g1$suf RENAME TO $table$suf")
-    // a managed RENAME moves the root but leaves the cell-partition
-    // metadata at the old paths — recover them (forge hygiene only;
-    // production never renames an index)
-    spark.sql(s"MSCK REPAIR TABLE $table")
-    spark.catalog.refreshTable(table)
-    graft.sources.TablePointer.dropPointer(spark, table)
-    assert(Ann.physicalOf(spark, table) == table,
-      "resolution must be identity for a legacy index")
-    val probe = e.filter(col("vec_id") % 2 === 0 && col("vec_id") < 40)
-      .withColumn("vec_id", col("vec_id") + 90000)
-      .withColumn("emb", expr("transform(emb, x -> x * 0.99)"))
-      .select("vec_id", "emb")
-    val legacyOut = Ann.probePqIndex(spark, table, probe).collect()
-    assert(legacyOut.nonEmpty && legacyOut.forall(_.getAs[Int]("is_dup") == 1),
-      "the legacy index must keep screening unversioned")
-
-    // the next refresh ADOPTS generations; the legacy tables get the
-    // same one-generation grace any old generation gets
-    Ann.refreshPqIndex(e, table)
-    assert(phys(table) == s"${table}__g1", phys(table))
-    assert(spark.catalog.tableExists(s"default.$table"),
-      "the legacy table must survive its grace period")
-    Ann.refreshPqIndex(e, table)
-    assert(phys(table) == s"${table}__g2", phys(table))
-    assert(!spark.catalog.tableExists(s"default.$table"),
-      "the legacy table must retire two refreshes after adoption")
-    assert(spark.catalog.tableExists(s"default.${table}__g1"))
-    val adopted = Ann.probePqIndex(spark, table, probe).collect()
-    assert(adopted.nonEmpty && adopted.forall(_.getAs[Int]("is_dup") == 1))
-  }
-
-  test("band reader isolation: probes resolved before a refresh complete on their own generation; legacy adopts") {
+  test("band reader isolation: probes resolved before a refresh complete on their own generation") {
     import org.apache.spark.sql.functions._
     // round 15 — VERDICT r14 missing #1: the band+_hashes family joins
     // the TablePointer protocol, closing the lock-free cross-session
@@ -1871,31 +1829,7 @@ class DedupAnnSpec extends SparkSpec {
       "gen 1 + companions must retire two refreshes later")
     assert(spark.catalog.tableExists(s"default.${table}__g2"))
 
-    // LEGACY: a pre-r15 deployment (tables at the logical name, no
-    // pointer) serves as-is and adopts generations on its next refresh
-    val leg = "band_legacy_adopt"
-    graft.sources.TablePointer.dropAll(spark, leg, Dedup.BandSuffixes)
-    Dedup.refreshIndex(d, leg, numBuckets = 8)
-    for (suf <- Seq("", "_hashes"))
-      spark.sql(s"ALTER TABLE ${leg}__g1$suf RENAME TO $leg$suf")
-    spark.catalog.refreshTable(leg)
-    graft.sources.TablePointer.dropPointer(spark, leg)
-    assert(graft.sources.TablePointer.resolve(spark, leg) == leg,
-      "resolution must be identity for a legacy band index")
-    val legCopy = d.filter(col("doc_id") < 20)
-      .select((col("doc_id") + 720000L).as("doc_id"), col("text"))
-    assert(Dedup.probeHashIndex(spark, leg, legCopy).collect()
-      .forall(_.getAs[Int]("is_exact_dup") == 1),
-      "the legacy index must keep screening unversioned")
-    Dedup.refreshIndex(d, leg, numBuckets = 8)
-    assert(phys(leg) == s"${leg}__g1", phys(leg))
-    assert(spark.catalog.tableExists(s"default.$leg"),
-      "the legacy table must survive its grace period")
-    Dedup.refreshIndex(d, leg, numBuckets = 8)
-    assert(!spark.catalog.tableExists(s"default.$leg"),
-      "the legacy table must retire two refreshes after adoption")
     graft.sources.TablePointer.dropAll(spark, table, Dedup.BandSuffixes)
-    graft.sources.TablePointer.dropAll(spark, leg, Dedup.BandSuffixes)
   }
 
   test("band tokenizer mode: a robust index catches punctuation-perturbed re-submissions the default index provably misses; appends inherit the mode") {
@@ -1974,34 +1908,13 @@ class DedupAnnSpec extends SparkSpec {
     graft.sources.TablePointer.dropAll(spark, "band_tok_bogus", Dedup.BandSuffixes)
   }
 
-  test("a legacy CALIBRATED band index adopts generations on refresh and keeps serving its persisted threshold through the swap") {
-    import spark.implicits._
-    val leg = "band_legacy_cal"
-    graft.sources.TablePointer.dropAll(spark, leg, Dedup.BandSuffixes)
+  test("an uncalibrated refresh of a calibrated band index carries its persisted threshold through the swap") {
+    val table = "band_cal_carry"
+    graft.sources.TablePointer.dropAll(spark, table, Dedup.BandSuffixes)
     val c = Dedup.corpus(spark, Sf).select("doc_id", "text")
-    Dedup.refreshIndex(c, leg, numBuckets = 8, screenRecallTarget = 0.75)
-    val chosen = Dedup.bandThresholdOf(spark, leg).get
-    val measured = Dedup.bandMetaOf(spark, leg).get.measured
-
-    // demote to the pre-r15 layout every production index migrates from
-    // exactly once: tables AT the logical name, no pointer, and the
-    // `_meta` in its pre-r16 four-column schema (calibration-only rows,
-    // no tok_mode / docs_at_cal)
-    val g1 = phys(leg)
-    for (suf <- Seq("", "_hashes"))
-      spark.sql(s"ALTER TABLE $g1$suf RENAME TO $leg$suf")
-    dropWarehouseTables(s"${g1}_meta")
-    graft.sources.Ingest.clearStaleLocation(spark, s"${leg}_meta")
-    Seq((chosen, 90, 0.75, measured))
-      .toDF("band_threshold", "policy_tier", "recall_target",
-        "recall_measured")
-      .write.mode("overwrite").format("parquet").saveAsTable(s"${leg}_meta")
-    graft.sources.TablePointer.dropPointer(spark, leg)
-    assert(graft.sources.TablePointer.resolve(spark, leg) == leg)
-    assert(Dedup.bandThresholdOf(spark, leg).contains(chosen),
-      "the legacy calibrated row must keep serving pre-adoption")
-    assert(Dedup.bandTokModeOf(spark, leg) == "default",
-      "a pre-mode row reads as the default tokenizer")
+    Dedup.refreshIndex(c, table, numBuckets = 8, screenRecallTarget = 0.75)
+    val cal = Dedup.bandMetaOf(spark, table).get
+    assert(cal.threshold >= 1 && cal.docsAtCal == c.count(), cal)
 
     // the planted-twin batch the calibration measured against
     val batch = c.filter(col("doc_id") % 11 === 0)
@@ -2011,27 +1924,26 @@ class DedupAnnSpec extends SparkSpec {
         array_join(
           expr("slice(_w, 1, cast((size(_w) * 90) div 100 as int))"),
           " ").as("text"))
-    val preSwap = Dedup.probeIndex(spark, leg, batch).collect()
+    val preSwap = Dedup.probeIndex(spark, table, batch).collect()
 
-    // an UNCALIBRATED refresh adopts generations — and the knob row
-    // carries forward (ADVICE r15: the WAL-recovery shape must not
-    // revert auto probes to the historical default)
-    Dedup.refreshIndex(c, leg, numBuckets = 8)
-    assert(phys(leg) == s"${leg}__g1", phys(leg))
-    val carried = Dedup.bandMetaOf(spark, leg).get
-    assert(carried.threshold == chosen && carried.tokMode == "default" &&
-      carried.docsAtCal == -1L,
-      s"the calibrated knob must survive adoption: $carried")
-    val auto = Dedup.probeIndex(spark, leg, batch).collect()
-    val explicit = Dedup.probeIndex(spark, leg, batch, threshold = chosen)
-      .collect()
+    // an UNCALIBRATED refresh — the WAL-recovery rebuild's shape — lands
+    // the next generation, and the knob row carries forward with its
+    // original anchor (ADVICE r15: a repair must not revert auto probes
+    // to the historical default)
+    Dedup.refreshIndex(c, table, numBuckets = 8)
+    assert(phys(table) == s"${table}__g2", phys(table))
+    val carried = Dedup.bandMetaOf(spark, table).get
+    assert(carried == cal, s"the calibrated knob row must carry forward: $carried")
+    val auto = Dedup.probeIndex(spark, table, batch).collect()
+    val explicit = Dedup.probeIndex(spark, table, batch,
+      threshold = cal.threshold).collect()
     assert(auto.map(_.toString).sorted.sameElements(
       explicit.map(_.toString).sorted),
-      "the adopted generation's auto probe must run at the carried threshold")
+      "the new generation's auto probe must run at the carried threshold")
     assert(auto.map(_.toString).sorted.sameElements(
       preSwap.map(_.toString).sorted),
       "the same corpus under the same knobs must screen identically across the swap")
-    graft.sources.TablePointer.dropAll(spark, leg, Dedup.BandSuffixes)
+    graft.sources.TablePointer.dropAll(spark, table, Dedup.BandSuffixes)
   }
 
   test("index-backed PageRank: standing-band edges reproduce the corpus walk bit-for-bit, with no corpus re-read and no cartesian") {
@@ -2078,5 +1990,80 @@ class DedupAnnSpec extends SparkSpec {
     assert(card("centrality_top1_doc") == best.getAs[Long]("doc_id").toDouble &&
       card("centrality_top1_score") == best.getAs[Double]("pagerank_r"), card)
     graft.sources.TablePointer.dropAll(spark, table, Dedup.BandSuffixes)
+  }
+
+  test("fused ADC keeps the exact query norm: an appended member with an uncovered sign code cannot take the shortlist") {
+    import spark.implicits._
+    val table = "pq_uncovered_code"
+    dropPqTables(table)
+    // the standing corpus: every sign dim of every subspace is positive,
+    // so the sign codebook covers code 15 only; the ± pairs on non-sign
+    // dims keep every codeword exactly the all-ones mean
+    val ones = Seq.fill(64)(1.0)
+    val base = (1L, ones) +: (0 until 8).flatMap { m =>
+      val j = m * 8 + 4 + m % 4
+      Seq((10L + 2 * m, ones.updated(j, 1.5)), (11L + 2 * m, ones.updated(j, 0.5)))
+    }
+    Ann.refreshPqIndex(base.map { case (id, v) => (id, v, 0) }
+      .toDF("vec_id", "emb", "label"), table, splits = 1)
+    // appended: subspace 0's sign dims turn negative — code 0, which has
+    // no codebook row — while subspaces 1..7 sit on the codewords
+    val uncovered = 99L
+    Ann.appendPqIndex(spark, table,
+      Seq((uncovered, Seq.fill(8)(-1.0) ++ Seq.fill(56)(1.0))).toDF("vec_id", "emb"))
+    // the query: subspaces 1..7 along the codewords, subspace 0 tilted
+    // off them. With the exact query norm every standing member scores
+    // 64/√(72·64) ≈ 0.943 and the appended one 56/√(72·56) ≈ 0.882; a
+    // norm summed over its seven matched LUT rows alone would drop
+    // subspace 0 and score it a perfect 1.0
+    val q = Seq((500L, Seq(2.0, 0.0, 2.0, 0.0, 2.0, 0.0, 2.0, 0.0) ++ Seq.fill(56)(1.0)))
+      .toDF("vec_id", "emb")
+    val top = Ann.searchPqIndex(spark, table, q, k = 1, nprobe = 1, adcTopC = 1).collect()
+    assert(top.map(_.getAs[Long]("n_id")).toSeq == Seq(1L), top.mkString)
+    dropPqTables(table)
+  }
+
+  test("born complete: each family's refresh lands every companion table with its full current schema") {
+    import graft.operators.TextRank
+    import graft.sources.TablePointer
+    val (band, text, pq) = ("born_band", "born_text", "born_pq")
+    val textSuffixes = Seq("_df", "_meta", "_champ", "_cal")
+    TablePointer.dropAll(spark, band, Dedup.BandSuffixes)
+    TablePointer.dropAll(spark, text, textSuffixes)
+    dropPqTables(pq)
+    val d = Tables.load(spark, Sf, "documents").select("doc_id", "text")
+    val e = Tables.load(spark, Sf, "embeddings")
+      .withColumn("emb", expr("transform(embedding, x -> cast(x as double))"))
+      .select("vec_id", "emb", "label")
+    Dedup.refreshIndex(d, band, numBuckets = 8)
+    TextRank.refreshTextIndex(d, text, numBuckets = 8)
+    Ann.refreshPqIndex(e, pq)
+    def table(t: String, suffix: String) = spark.table(s"${phys(t)}$suffix")
+    def cols(t: String, suffix: String) = table(t, suffix).columns.toSet
+    assert(cols(band, "_hashes") == Set("doc_id", "h"))
+    assert(cols(band, "_meta") == Set("band_threshold", "policy_tier",
+      "recall_target", "recall_measured", "tok_mode", "docs_at_cal"))
+    assert(cols(text, "_df") == Set("term", "df"))
+    assert(cols(text, "_champ") == Set("term", "doc_id", "tf", "dl", "rn"))
+    assert(cols(text, "_meta") ==
+      Set("n_docs", "token_docs", "total_tokens", "tok_mode"))
+    assert(cols(pq, "_centroids") == Set("cell", "qcent", "cnorm2"))
+    assert(cols(pq, "_codebook") == Set("sub", "code", "jj", "cw"))
+    assert(cols(pq, "_meta") == Set("quantizer", "screen_nprobe",
+      "screen_recall_target", "screen_recall_measured", "docs_at_cal"))
+    // the companions are corpus-complete from the first refresh: every
+    // doc has a hash key, the meta partial counts every doc, and the
+    // champion and codebook tables are populated
+    val nDocs = d.count()
+    assert(table(band, "_hashes").select("doc_id").distinct().count() == nDocs)
+    assert(table(text, "_meta").agg(sum("n_docs")).head().getLong(0) == nDocs)
+    assert(table(text, "_champ").count() > 0 && table(pq, "_codebook").count() > 0)
+    // uncalibrated refreshes persist the never-calibrated sentinels
+    assert(Dedup.bandMetaOf(spark, band).get.threshold == -1)
+    assert(table(pq, "_meta").select("screen_nprobe", "docs_at_cal").head().toSeq ==
+      Seq(-1, -1L))
+    TablePointer.dropAll(spark, band, Dedup.BandSuffixes)
+    TablePointer.dropAll(spark, text, textSuffixes)
+    dropPqTables(pq)
   }
 }

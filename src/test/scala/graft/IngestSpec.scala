@@ -350,19 +350,13 @@ class IngestSpec extends SparkSpec {
     finally spark.sparkContext.hadoopConfiguration.unset(key)
   }
 
-  test("versions() reads a 50-version catalog in O(1) Spark jobs and folds the legacy two-commit layout in") {
+  test("versions() reads a 50-version catalog in O(1) Spark jobs") {
     import graft.sources.Snapshots
     import spark.implicits._
     val dir = tmpDir("snapmany").toString
     Seq((1L, "the only landed document")).toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/batch_id=1")
     for (v <- 1 to 50) Snapshots.publish(spark, dir, v, publisher = s"pub-$v")
-    // a LEGACY (r13-layout) version beside them: a manifest WITHOUT the
-    // metadata columns plus the old `v=N_meta` second commit
-    spark.read.parquet(s"$dir/_snapshots/v=1").select("path", "size", "mtime")
-      .coalesce(1).write.parquet(s"$dir/_snapshots/v=60")
-    Seq(("legacy-pub", 7L)).toDF("publisher", "row_count")
-      .coalesce(1).write.parquet(s"$dir/_snapshots/v=60_meta")
 
     spark.sparkContext.setJobGroup("versions-one-pass", "catalog read")
     val vs = try Snapshots.versions(spark, dir).collect()
@@ -375,18 +369,16 @@ class IngestSpec extends SparkSpec {
       jobs = spark.sparkContext.statusTracker
         .getJobIdsForGroup("versions-one-pass").length
     }
-    // the r13 shape ran one count-job PER version (≥ 51 here); the
-    // one-pass catalog is a CONSTANT handful (schema merge, listing,
-    // two joins, the collect) regardless of version count
+    // a per-version shape would run one count-job PER version (≥ 50
+    // here); the one-pass catalog is a CONSTANT handful (listing, schema
+    // inference, the join, the collect) regardless of version count
     assert(jobs >= 1 && jobs <= 15,
       s"catalog read must be O(1) jobs — constant, well under the " +
-        s"one-per-version 51 — saw $jobs")
-    assert(vs.length == 51, s"${vs.length} versions")
+        s"one-per-version 50 — saw $jobs")
+    assert(vs.length == 50, s"${vs.length} versions")
     val byV = vs.map(r => r.getAs[Int]("version") -> r).toMap
     assert(byV(7).getAs[String]("publisher") == "pub-7" &&
       byV(7).getAs[Long]("n_files") == 1L, byV(7).toString)
-    assert(byV(60).getAs[String]("publisher") == "legacy-pub" &&
-      byV(60).getAs[Long]("row_count") == 7L, byV(60).toString)
   }
 
   test("publishNext CAS-assigns versions: two concurrent publishers never collide") {

@@ -32,7 +32,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * an index's side tables directly resolve through this.
     */
   def phys(table: String): String =
-    graft.operators.Ann.physicalOf(spark, table)
+    graft.sources.TablePointer.resolve(spark, table)
 
   /** Operators persist internal frames (banded signatures, posting
     * lists, daily grains) that only die with the session — the same
