@@ -42,12 +42,12 @@ import org.apache.spark.sql.functions._
   *   1. near-dup screen: the survivors probe the materialized band
   *      index ([[Dedup.probeIndex]]) — surface-form duplicates of
   *      anything already admitted are rejected;
-  *   2. semantic screen (when an embedding side-channel and a semantic
-  *      index exist): survivors' vectors probe the semantic index
-  *      ([[Ann.probeSemanticIndex]]) — paraphrase/re-encode twins that
-  *      share no n-gram are rejected;
+  *   2. semantic screen (when an embedding side-channel and a standing
+  *      vector index exist): survivors' vectors probe the IVF-PQ index
+  *      ([[Ann.probePqIndex]]) — paraphrase/re-encode twins that share
+  *      no n-gram are rejected;
   *   3. the admitted remainder is appended to BOTH standing indexes
-  *      ([[Dedup.appendIndex]] / [[Ann.appendSemanticIndex]]) and landed
+  *      ([[Dedup.appendIndex]] / [[Ann.appendPqIndex]]) and landed
   *      as its own `batch_id=` partition — so a replayed batch
   *      overwrites itself (the [[graft.streaming.EventStreams]] sink
   *      idempotence contract), with the cycle's accounting persisted
@@ -108,48 +108,6 @@ object Admit {
   case class Standing(seedDocs: DataFrame,
                       seedVecs: Option[DataFrame] = None)
 
-  /** The cycle's vector-index seam (round 10): the semantic screen can
-    * run against either standing embedding-index family — the banded
-    * semantic index (r8) or the IVF-PQ index (this round) — through one
-    * probe/append/rebuild contract. Both expose the same `_centroids`
-    * side table (the intra-batch screen's cell source), both probe to
-    * (vec_id, …, is_dup) rows, both append batch-sized, both rebuild
-    * members-only under the WAL repair (cells — and for PQ, codewords —
-    * never move).
-    */
-  private sealed trait VecIndex {
-    def table: String
-    def dupIds(spark: SparkSession, vecs: DataFrame, eps: Double): DataFrame
-    def append(spark: SparkSession, vecs: DataFrame): Unit
-    def rebuild(spark: SparkSession, vecs: DataFrame): Unit
-  }
-  private final case class SemIndex(table: String) extends VecIndex {
-    def dupIds(spark: SparkSession, vecs: DataFrame, eps: Double): DataFrame =
-      Ann.probeSemanticIndex(spark, table, vecs, eps, verify = "float",
-          cache = false)
-        .filter(col("is_dup") === 1).select("vec_id")
-    def append(spark: SparkSession, vecs: DataFrame): Unit =
-      Ann.appendSemanticIndex(spark, table, vecs)
-    def rebuild(spark: SparkSession, vecs: DataFrame): Unit =
-      Ann.rebuildSemanticIndex(spark, table, vecs)
-  }
-  private final case class PqIndex(table: String) extends VecIndex {
-    def dupIds(spark: SparkSession, vecs: DataFrame, eps: Double): DataFrame =
-      Ann.probePqIndex(spark, table, vecs, eps)
-        .filter(col("is_dup") === 1).select("vec_id")
-    def append(spark: SparkSession, vecs: DataFrame): Unit =
-      Ann.appendPqIndex(spark, table, vecs)
-    def rebuild(spark: SparkSession, vecs: DataFrame): Unit =
-      Ann.rebuildPqIndex(spark, table, vecs)
-  }
-  private def vecIndexOf(semTable: Option[String],
-                         pqTable: Option[String]): Option[VecIndex] = {
-    require(semTable.isEmpty || pqTable.isEmpty,
-      "pass semTable OR pqTable, not both — one standing vector index " +
-        "screens a cycle")
-    semTable.map(SemIndex.apply).orElse(pqTable.map(PqIndex.apply))
-  }
-
   /** Locks older than this are crash debris ([[Pipeline]]'s bound). */
   val DefaultStaleAfterMs: Long = 6 * 60 * 60 * 1000L
 
@@ -190,25 +148,15 @@ object Admit {
     * excluding `excludeBatchId`'s (uncommitted) partition — the WAL
     * repair. The band index is a full [[Dedup.refreshIndex]] under the
     * table's own catalog bucket spec (this also re-tightens the
-    * hot-bucket guard); the semantic index rebuilds its guarded + member
-    * tables against the EXISTING centroids ([[Ann.rebuildSemanticIndex]]
-    * — cells must not move under a repair).
+    * hot-bucket guard); the IVF-PQ index rebuilds its members table
+    * against the EXISTING centroids and codebook ([[Ann.rebuildPqIndex]]
+    * — cells and codewords must not move under a repair).
     */
   def recover(spark: SparkSession, bandTable: String, outDir: String,
               standing: Standing, excludeBatchId: Long,
               embeddings: Option[DataFrame] = None,
-              semTable: Option[String] = None,
               pqTable: Option[String] = None,
-              textTable: Option[String] = None): Unit =
-    recoverWith(spark, bandTable, outDir, standing, excludeBatchId,
-      embeddings, vecIndexOf(semTable, pqTable), textTable)
-
-  private def recoverWith(spark: SparkSession, bandTable: String,
-                          outDir: String, standing: Standing,
-                          excludeBatchId: Long,
-                          embeddings: Option[DataFrame],
-                          vecIndex: Option[VecIndex],
-                          textTable: Option[String]): Unit = {
+              textTable: Option[String] = None): Unit = {
     val landedDocs = landed(spark, outDir)
       .map(_.filter(col("batch_id") =!= excludeBatchId))
     val docs = landedDocs.map(ld =>
@@ -232,7 +180,7 @@ object Admit {
     // visible until recalibrateBandScreen or a calibrated refresh
     Dedup.refreshIndex(docs, bandTable, numBuckets = numBuckets,
       tokMode = Dedup.bandTokModeOf(spark, bandTable))
-    for ((vecs, idx) <- embeddings.zip(vecIndex)) {
+    for ((vecs, pq) <- embeddings.zip(pqTable)) {
       val landedVecs = landedDocs.map(ld =>
         vecs.join(ld.select(col("doc_id").as("vec_id")), "vec_id")
           .select("vec_id", "emb"))
@@ -242,7 +190,7 @@ object Admit {
         case (None, Some(lv)) => lv
         case (None, None) => vecs.select("vec_id", "emb").limit(0)
       }
-      idx.rebuild(spark, allVecs)
+      Ann.rebuildPqIndex(spark, pq, allVecs)
     }
     // the text index rebuilds as a FULL refresh from seed ∪ landed — it
     // lands as a new TablePointer generation, so a serving query racing
@@ -418,7 +366,6 @@ object Admit {
     */
   def standingStateReport(spark: SparkSession, bandTable: String,
                           outDir: String,
-                          semTable: Option[String] = None,
                           pqTable: Option[String] = None,
                           textTable: Option[String] = None): DataFrame = {
     import spark.implicits._
@@ -450,35 +397,31 @@ object Admit {
         .map(m => spark.table(hashT).select("doc_id").distinct().count()
           .toDouble - m.docsAtCal)
         .getOrElse(-1.0)))
-    for (t <- semTable.toSeq ++ pqTable.toSeq) {
+    for (t <- pqTable.toSeq) {
       val phys = graft.sources.TablePointer.resolve(spark, t)
-      val comp = if (semTable.contains(t)) "sem" else "pq"
-      val membersT = if (comp == "sem") s"${phys}_members" else phys
-      rows += ((comp, "generation",
+      rows += (("pq", "generation",
         graft.sources.TablePointer.generationOf(phys).toDouble))
-      rows += ((comp, "nlist",
+      rows += (("pq", "nlist",
         spark.table(s"${phys}_centroids").count().toDouble))
-      val nMembers = spark.table(membersT).count()
-      rows += ((comp, "members", nMembers.toDouble))
-      rows += ((comp, "files_per_cell_max",
-        graft.sources.Ingest.partitionFileCounts(spark, membersT)
+      val nMembers = spark.table(phys).count()
+      rows += (("pq", "members", nMembers.toDouble))
+      rows += (("pq", "files_per_cell_max",
+        graft.sources.Ingest.partitionFileCounts(spark, phys)
           .values.maxOption.getOrElse(0).toDouble))
-      if (comp == "pq") {
-        val m = spark.table(s"${phys}_meta").collect().head
-        rows += (("pq", "quantizer_kmeans",
-          if (m.getString(0) == "kmeans") 1.0 else 0.0))
-        rows += (("pq", "screen_nprobe",
-          m.getAs[Int]("screen_nprobe").toDouble))
-        rows += (("pq", "screen_recall_measured",
-          m.getAs[Double]("screen_recall_measured")))
-        // the PQ nprobe's staleness anchor (round 16 — the band/text
-        // cal_docs_* rows' third sibling): drift = members now vs the
-        // member count the sweep probed; −1 = uncalibrated
-        val dac = m.getAs[Long]("docs_at_cal")
-        rows += (("pq", "cal_docs_at_cal", dac.toDouble))
-        rows += (("pq", "cal_docs_drift",
-          if (dac >= 0) nMembers.toDouble - dac else -1.0))
-      }
+      val m = spark.table(s"${phys}_meta").collect().head
+      rows += (("pq", "quantizer_kmeans",
+        if (m.getString(0) == "kmeans") 1.0 else 0.0))
+      rows += (("pq", "screen_nprobe",
+        m.getAs[Int]("screen_nprobe").toDouble))
+      rows += (("pq", "screen_recall_measured",
+        m.getAs[Double]("screen_recall_measured")))
+      // the PQ nprobe's staleness anchor (round 16 — the band/text
+      // cal_docs_* rows' third sibling): drift = members now vs the
+      // member count the sweep probed; −1 = uncalibrated
+      val dac = m.getAs[Long]("docs_at_cal")
+      rows += (("pq", "cal_docs_at_cal", dac.toDouble))
+      rows += (("pq", "cal_docs_drift",
+        if (dac >= 0) nMembers.toDouble - dac else -1.0))
     }
     for (t <- textTable.toSeq) {
       val phys = graft.sources.TablePointer.resolve(spark, t)
@@ -546,21 +489,20 @@ object Admit {
   }
 
   /** Screen `docs` (doc_id, text, …) against the standing state and land
-    * the survivors. `embeddings` (vec_id aligned with doc_id) plus ONE
-    * of `semTable` (the banded semantic index) or `pqTable` (the
-    * standing IVF-PQ index — round 10's third standing-index option)
-    * enable the semantic screens; without them only the surface-form
-    * screens run. `recovery` supplies the WAL repair's
-    * rebuild source — REQUIRED for streaming use, where a replay after a
-    * crashed append window must self-heal (without it the cycle fails
-    * loudly naming the manual repair). Returns the per-batch accounting
+    * the survivors. `embeddings` (vec_id aligned with doc_id) plus
+    * `pqTable` (the standing IVF-PQ index) enable the semantic screens;
+    * without them only the surface-form screens run. `recovery`
+    * supplies the WAL repair's rebuild source — REQUIRED for streaming
+    * use, where a replay after a crashed append window must self-heal
+    * (without it the cycle fails loudly naming the manual repair).
+    * Returns the per-batch accounting
     * a pipeline publishes beside its landing (also persisted under
     * `outDir/_admit_reports/batch_id=<id>`).
     */
   def admitBatch(spark: SparkSession, docs: DataFrame, bandTable: String,
                  outDir: String, batchId: Long,
                  embeddings: Option[DataFrame] = None,
-                 semTable: Option[String] = None,
+                 pqTable: Option[String] = None,
                  eps: Double = 0.99,
                  recovery: Option[Standing] = None,
                  benchmarkGrams: Option[DataFrame] = None,
@@ -573,7 +515,6 @@ object Admit {
                  // crashing after its caller prepared the batch is the
                  // expensive way to lose the queue position
                  lockWaitMs: Long = 60 * 60 * 1000L,
-                 pqTable: Option[String] = None,
                  qualityFloor: Double = -1.0,
                  // round 14 third pass: the standing BM25 index joins
                  // the cycle's maintained state — admitted docs append
@@ -595,7 +536,7 @@ object Admit {
       Tuning.withShuffleWidth(spark,
         Tuning.scaledShufflePartitionsForFrame(spark, docs)) {
         admitBatchLocked(spark, docs, bandTable, outDir, batchId,
-          embeddings, vecIndexOf(semTable, pqTable), eps, recovery,
+          embeddings, pqTable, eps, recovery,
           benchmarkGrams, bloomMBits, qualityFloor, claim, textTable)
       }
     }
@@ -611,16 +552,15 @@ object Admit {
                                           bandTable: String, outDir: String,
                                           batchId: Long, claim: Locks.Claim,
                                           embeddings: Option[DataFrame] = None,
-                                          semTable: Option[String] = None,
                                           pqTable: Option[String] = None,
                                           eps: Double = 0.99): Report =
     admitBatchLocked(spark, docs, bandTable, outDir, batchId, embeddings,
-      vecIndexOf(semTable, pqTable), eps, None, None, 20, -1.0, claim, None)
+      pqTable, eps, None, None, 20, -1.0, claim, None)
 
   private def admitBatchLocked(spark: SparkSession, docs: DataFrame,
                                bandTable: String, outDir: String, batchId: Long,
                                embeddings: Option[DataFrame],
-                               vecIndex: Option[VecIndex], eps: Double,
+                               pqTable: Option[String], eps: Double,
                                recovery: Option[Standing],
                                benchmarkGrams: Option[DataFrame],
                                bloomMBits: Int,
@@ -633,14 +573,14 @@ object Admit {
     if (readWal(spark, outDir).contains(batchId)) {
       recovery match {
         case Some(st) =>
-          recoverWith(spark, bandTable, outDir, st, batchId, embeddings,
-            vecIndex, textTable)
+          recover(spark, bandTable, outDir, st, batchId, embeddings,
+            pqTable, textTable)
         case None => throw new IllegalStateException(
           s"admission WAL $outDir/_admit_wal shows batch $batchId already " +
             s"appended to $bandTable but never landed — a replay would " +
             "self-flag and land empty. Rebuild the indexes from seed ∪ " +
             "landed (Admit.recover / Dedup.refreshIndex + " +
-            "Ann.rebuildSemanticIndex) or pass recovery=Some(Standing(...)) " +
+            "Ann.rebuildPqIndex) or pass recovery=Some(Standing(...)) " +
             "to automate the repair.")
       }
     }
@@ -702,17 +642,16 @@ object Admit {
       .filter(col("n_shared_bands") >= bandThreshold)
       .select(col("doc_b").as("doc_id")).distinct()
     val surfaceUnique = exactUnique.join(nearSelfDropped, Seq("doc_id"), "left_anti")
-    val intraUniqueLazy = (embeddings, vecIndex) match {
-      case (Some(vecs), Some(idx)) =>
+    val intraUniqueLazy = (embeddings, pqTable) match {
+      case (Some(vecs), Some(pq)) =>
         val batchVecs = vecs
           .join(surfaceUnique.select(col("doc_id").as("vec_id")), "vec_id")
           .select("vec_id", "emb")
-        // both index families expose the same `_centroids` side table —
-        // the intra screen shares the standing cells either way,
-        // resolved to the CURRENT generation (round 14: refreshes land
-        // versioned generations behind an atomic pointer)
+        // the intra screen shares the standing index's `_centroids`
+        // cells, resolved to the CURRENT generation (round 14: refreshes
+        // land versioned generations behind an atomic pointer)
         val semSelfDropped = Ann.semIntraDups(
-            Ann.centroidsOf(spark, idx.table), batchVecs, eps)
+            Ann.centroidsOf(spark, pq), batchVecs, eps)
           .withColumnRenamed("vec_id", "doc_id")
         surfaceUnique.join(semSelfDropped, Seq("doc_id"), "left_anti")
       case _ => surfaceUnique
@@ -779,16 +718,15 @@ object Admit {
 
         // 2. semantic screen for the survivors that have vectors — a doc
         // without an embedding passes (absence is not evidence; the
-        // Curate convention). cache=false: the per-batch cell-assignment
-        // persist would accumulate forever on a stream (ADVICE r8); the
-        // assignment recomputes once more inside one bounded plan.
-        val admittedLazy = (embeddings, vecIndex) match {
-          case (Some(vecs), Some(idx)) =>
+        // Curate convention).
+        val admittedLazy = (embeddings, pqTable) match {
+          case (Some(vecs), Some(pq)) =>
             val survivorVecs = vecs
               .join(afterNear.select(col("doc_id").as("vec_id")), "vec_id")
-            val semDup = idx
-              .dupIds(spark, survivorVecs.select("vec_id", "emb"), eps)
-              .withColumnRenamed("vec_id", "doc_id")
+            val semDup = Ann
+              .probePqIndex(spark, pq, survivorVecs.select("vec_id", "emb"), eps)
+              .filter(col("is_dup") === 1)
+              .select(col("vec_id").as("doc_id"))
             afterNear.join(semDup, Seq("doc_id"), "left_anti")
           case _ => afterNear
         }
@@ -824,12 +762,12 @@ object Admit {
             claim.assertHeld(s"the band-index append for batch $batchId")
             Dedup.appendIndex(spark, bandTable,
               admittedDocs.select("doc_id", "text"))
-            for ((vecs, idx) <- embeddings.zip(vecIndex)) {
+            for ((vecs, pq) <- embeddings.zip(pqTable)) {
               val admittedVecs = vecs
                 .join(admittedDocs.select(col("doc_id").as("vec_id")), "vec_id")
               if (!admittedVecs.isEmpty) {
-                claim.assertHeld(s"the ${idx.table} append for batch $batchId")
-                idx.append(spark, admittedVecs.select("vec_id", "emb"))
+                claim.assertHeld(s"the $pq append for batch $batchId")
+                Ann.appendPqIndex(spark, pq, admittedVecs.select("vec_id", "emb"))
               }
             }
             for (t <- textTable) {

@@ -18,10 +18,12 @@ import org.apache.spark.sql.functions._
   * transforms (token permutation / component sign-flip), so it is
   * novel to every screen w.h.p. — the measured cycle pays both probe
   * joins, both index appends, and the landing, the expensive path.
+  * The semantic screen runs through the standing IVF-PQ index, and the
+  * serving path (searchPqIndex, 100 queries) is timed at the same scale.
   * `Admit.admitBatch` itself applies the [[Tuning]] width rule to the
   * cycle, so this main measures the production configuration.
   *
-  * Usage: `runMain graft.AdmitRehearsal <sfDir> [batchSize]`
+  * Usage: `runMain graft.AdmitRehearsal <sfDir> [batchSize] [--splits=N]`
   */
 object AdmitRehearsal {
 
@@ -35,13 +37,9 @@ object AdmitRehearsal {
     val sfDir = args(0)
     val batchSize = args.drop(1).filterNot(_.startsWith("--"))
       .headOption.map(_.toInt).getOrElse(1000)
-    // --pq: screen through the standing IVF-PQ index instead of the
-    // banded semantic index (the Admit seam's third option), and also
-    // time the serving path (searchPqIndex, 100 queries) at this scale.
     // --splits=N overrides the PQ quantizer's nlist (labels × N cells);
     // the default 0 engages the refresh-time nlist ∝ √N rule (round 11
     // — the rehearsal now measures the NO-KNOB configuration)
-    val usePq = args.contains("--pq")
     val splits = args.find(_.startsWith("--splits="))
       .map(_.stripPrefix("--splits=").toInt).getOrElse(0)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -62,14 +60,12 @@ object AdmitRehearsal {
     val (nDocs, nVecs) = (docs.count(), e.count())
 
     val band = "rehearsal_band"
-    val sem = "rehearsal_sem"
+    val pq = "rehearsal_pq"
     val (_, tBand) = timed(Dedup.refreshIndex(docs, band))
-    val (_, tSem) = timed(
-      if (usePq) Ann.refreshPqIndex(e, sem, splits)
-      else Ann.refreshSemanticIndex(e, sem, splits = splits))
+    val (_, tPq) = timed(Ann.refreshPqIndex(e, pq, splits))
     // the EFFECTIVE nlist (splits=0 means the √N rule computed it) —
     // read from the current generation (round 14 pointer resolution)
-    val nlist = Ann.centroidsOf(spark, sem).count()
+    val nlist = Ann.centroidsOf(spark, pq).count()
 
     // a novel batch: ScaleUp's replica transforms (token permutation /
     // component sign-flip) applied at replica key 777 — the rehearsal
@@ -96,22 +92,18 @@ object AdmitRehearsal {
     val out = s"$scratch/landing"
     val (report, tAdmit) = timed(
       Admit.admitBatch(spark, batch, band, out, 1L,
-        embeddings = Some(batchVecs),
-        semTable = if (usePq) None else Some(sem),
-        pqTable = if (usePq) Some(sem) else None,
+        embeddings = Some(batchVecs), pqTable = Some(pq),
         recovery = Some(Admit.Standing(docs, Some(e.select("vec_id", "emb"))))))
 
     // the serving path at this scale: 100-query top-10 against the
     // standing index (count() forces the full plan)
     val queries = e.limit(100).select("vec_id", "emb")
-    val (_, tServe) = timed(
-      (if (usePq) Ann.searchPqIndex(spark, sem, queries)
-       else Ann.searchSemanticIndex(spark, sem, queries)).count())
+    val (_, tServe) = timed(Ann.searchPqIndex(spark, pq, queries).count())
 
-    println(s"""{"sf":"$sfDir","mode":"${if (usePq) "pq" else "sem"}","splits":$splits,"nlist":$nlist,""" +
+    println(s"""{"sf":"$sfDir","mode":"pq","splits":$splits,"nlist":$nlist,""" +
       s""""docs":$nDocs,"vecs":$nVecs,""" +
       s""""batch":$batchSize,"refresh_band_s":${f"$tBand%.1f"},""" +
-      s""""refresh_sem_s":${f"$tSem%.1f"},"admit_s":${f"$tAdmit%.1f"},""" +
+      s""""refresh_sem_s":${f"$tPq%.1f"},"admit_s":${f"$tAdmit%.1f"},""" +
       s""""serve100_s":${f"$tServe%.1f"},""" +
       s""""admitted":${report.admitted},"near_rej":${report.nearDupRejected},""" +
       s""""sem_rej":${report.semanticRejected}}""")

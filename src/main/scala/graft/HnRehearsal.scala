@@ -66,7 +66,7 @@ object HnRehearsal {
 
     val mineS = minOf3 {
       Ann.mineHardNegatives(spark, table, queries, eps = 0.99, k = 10,
-        family = "pq", nprobe = 8).count()
+        nprobe = 8).count()
       ()
     }
     val bruteS = minOf3 {

@@ -115,7 +115,7 @@ object ServeRehearsal {
       // repeated calls
       def autoServe(): Set[(Long, Long)] =
         TextRank.hybridSearchIndexed(spark, textT, pqT, qt, queries,
-            k = 10, family = "pq", nprobe = 0, adcTopC = 0,
+            k = 10, nprobe = 0, adcTopC = 0,
             sparseDfFrac = 0.0)
           .select("q_id", "doc_id").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -58,6 +58,13 @@ object Tuning {
     */
   val TargetBytesPerPartition: Long = 32L * 1024 * 1024
 
+  /** Clamp on the frame-estimate width: upstream of a join the
+    * optimizer's estimate can be off by orders of magnitude, and the
+    * clamp bounds the scheduling overhead (AQE still coalesces inside
+    * it).
+    */
+  val MaxWidth = 4096
+
   /** Total on-disk bytes of the named parquet tables under `dir`
     * (file or directory per table). One driver-side file listing —
     * the same metadata read the scan planner itself performs.
@@ -72,19 +79,16 @@ object Tuning {
   }
 
   /** The shuffle width for a corpus-wide explode-and-aggregate over
-    * `bytes` of parquet input: `ceil(bytes × expansion / target)`,
-    * floored at the session's default parallelism (one partition per
+    * `bytes` of parquet input:
+    * `ceil(bytes × GramExpansion / TargetBytesPerPartition)`, floored
+    * at the session's default parallelism (one partition per
     * core — never narrower than the machine, exactly the pre-rule
     * behavior at small scale, so this helper changes nothing below the
     * boundary where the rule starts to matter).
     */
-  def scaledShufflePartitions(
-      spark: SparkSession,
-      bytes: Long,
-      expansion: Long = GramExpansion,
-      targetBytesPerPartition: Long = TargetBytesPerPartition): Int = {
-    val scaled = ((bytes * expansion + targetBytesPerPartition - 1) /
-      targetBytesPerPartition).toInt
+  def scaledShufflePartitions(spark: SparkSession, bytes: Long): Int = {
+    val scaled = ((bytes * GramExpansion + TargetBytesPerPartition - 1) /
+      TargetBytesPerPartition).toInt
     math.max(spark.sparkContext.defaultParallelism, scaled)
   }
 
@@ -99,25 +103,19 @@ object Tuning {
     * the admission cycle's batches arrive as frames, not directories):
     * input bytes come from the optimizer's OWN size estimate for the
     * frame's plan — file sizes for source scans, conservative
-    * propagated estimates elsewhere. Estimates above `maxWidth`
-    * partitions are clamped: upstream of a join the estimate can be
-    * off by orders of magnitude, the clamp bounds the scheduling
-    * overhead, and AQE still coalesces anything inside it. The floor
+    * propagated estimates elsewhere. Estimates above [[MaxWidth]]
+    * partitions are clamped. The floor
     * stays the session default, so below the boundary where the rule
     * matters this changes nothing — exactly [[scaledShufflePartitions]]'s
     * contract.
     */
   def scaledShufflePartitionsForFrame(
       spark: SparkSession,
-      df: org.apache.spark.sql.DataFrame,
-      expansion: Long = GramExpansion,
-      targetBytesPerPartition: Long = TargetBytesPerPartition,
-      maxWidth: Int = 4096): Int = {
+      df: org.apache.spark.sql.DataFrame): Int = {
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val bytes =
       if (est > BigInt(Long.MaxValue)) Long.MaxValue else est.toLong
-    math.min(maxWidth,
-      scaledShufflePartitions(spark, bytes, expansion, targetBytesPerPartition))
+    math.min(MaxWidth, scaledShufflePartitions(spark, bytes))
   }
 
   /** CPU-spread rule for a small-bytes, compute-heavy frame (round 18 —

@@ -447,10 +447,9 @@ object Ann {
 
   /** q130's PRODUCTION twin (round 12 — VERDICT r11 #4): hard-negative
     * mining over a STANDING index instead of the brute-force cross
-    * product. The candidate generator is [[searchPqIndex]] (`family =
-    * "pq"`, a [[refreshPqIndex]] table — sign or trained, the `_meta`
-    * row routes it) or [[searchSemanticIndex]] (`family = "sem"`); the
-    * threshold-split + rank seam is IDENTICAL to q130's: retrieved
+    * product. The candidate generator is [[searchPqIndex]] over a
+    * [[refreshPqIndex]] table (sign or trained, the `_meta` row routes
+    * it); the threshold-split + rank seam is IDENTICAL to q130's: retrieved
     * candidates at cosine ≥ `eps` are excluded as near-dups and counted
     * in `n_dups_excluded` (the audit column — a near-dup leaking into
     * the negatives is a false negative that corrupts a contrastive
@@ -471,10 +470,9 @@ object Ann {
     * in-query free discipline — the harnesses sweep result pins).
     */
   def mineHardNegatives(s: SparkSession, table: String, queries: DataFrame,
-                        eps: Double = 0.99, k: Int = 10,
-                        family: String = "pq", nprobe: Int = 3,
+                        eps: Double = 0.99, k: Int = 10, nprobe: Int = 3,
                         adcTopC: Int = 64, dupHeadroom: Int = 16): DataFrame = {
-    val (res, pin) = mineHardNegativesLazy(s, table, queries, eps, k, family,
+    val (res, pin) = mineHardNegativesLazy(s, table, queries, eps, k,
       nprobe, adcTopC, dupHeadroom)
     try res.localCheckpoint(true)
     finally pin.unpersist(false)
@@ -486,16 +484,11 @@ object Ann {
     * candidates).
     */
   private[graft] def mineHardNegativesLazy(s: SparkSession, table: String,
-      queries: DataFrame, eps: Double, k: Int, family: String, nprobe: Int,
+      queries: DataFrame, eps: Double, k: Int, nprobe: Int,
       adcTopC: Int, dupHeadroom: Int): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    val candK = k + dupHeadroom
-    val cand = (family match {
-      case "pq" => searchPqIndex(s, table, queries, candK, nprobe, adcTopC)
-      case "sem" => searchSemanticIndex(s, table, queries, candK, nprobe)
-      case other => throw new IllegalArgumentException(
-        s"family must be pq or sem, got $other")
-    }).persist()
+    val cand = searchPqIndex(s, table, queries, k + dupHeadroom, nprobe,
+      adcTopC).persist()
     val dups = cand.filter(col("cosine") >= eps)
       .groupBy("q_id").agg(count(lit(1)).as("n_dups_excluded"))
     val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("n_id"))
@@ -628,8 +621,8 @@ object Ann {
     * corpus-sized shuffles until the k-bounded vote aggregate (≤ k rows
     * per target). This is the exact-baseline grain (the q25 discipline);
     * a production run at 100 TB swaps the candidate generator for the
-    * standing-index probes ([[searchPqIndex]]/[[searchSemanticIndex]],
-    * seeds as the indexed side) and keeps the vote stages unchanged —
+    * standing-index probe ([[searchPqIndex]], seeds as the indexed
+    * side) and keeps the vote stages unchanged —
     * the candidates-then-verify seam every ANN path here shares.
     * Cosines are decimal folds ([[dotDec]]) — engine-portable.
     */
@@ -684,8 +677,8 @@ object Ann {
 
   /** The index-backed production twin of [[labelPropagate]] — the 100 TB
     * shape: candidate neighbors come from a STANDING index's serving
-    * path ([[searchPqIndex]]/[[searchSemanticIndex]] — nprobe cells per
-    * target, never the corpus) and the vote stage is shared verbatim
+    * path ([[searchPqIndex]] — nprobe cells per target, never the
+    * corpus) and the vote stage is shared verbatim
     * with the exact path. `labels` maps index member ids to their
     * curated labels (`s_id`, `label`) and is broadcast — a label set is
     * small by definition; candidates without a label row are skipped
@@ -694,14 +687,8 @@ object Ann {
     */
   def propagateLabelsIndexed(s: SparkSession, table: String,
       targets: DataFrame, labels: DataFrame, k: Int = 5,
-      family: String = "pq", nprobe: Int = 3, adcTopC: Int = 64): DataFrame = {
-    val cand = family match {
-      case "pq" => searchPqIndex(s, table, targets, k, nprobe, adcTopC)
-      case "sem" => searchSemanticIndex(s, table, targets, k, nprobe)
-      case other => throw new IllegalArgumentException(
-        s"family must be pq or sem, got $other")
-    }
-    val scored = cand
+      nprobe: Int = 3, adcTopC: Int = 64): DataFrame = {
+    val scored = searchPqIndex(s, table, targets, k, nprobe, adcTopC)
       .select(col("q_id").as("t_id"), col("n_id").as("s_id"), col("cosine"))
       .join(broadcast(labels.select(col("s_id"), col("label"))), "s_id")
     voteOnScored(scored, k)
@@ -742,8 +729,7 @@ object Ann {
     */
   def propagateLabelsMultiHop(s: SparkSession, table: String,
       targets: DataFrame, labels: DataFrame, k: Int = 5, rounds: Int = 2,
-      decay: Double = 0.5, family: String = "pq", nprobe: Int = 3,
-      adcTopC: Int = 64): DataFrame = {
+      decay: Double = 0.5, nprobe: Int = 3, adcTopC: Int = 64): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(decay > 0.0 && decay <= 1.0,
@@ -755,13 +741,7 @@ object Ann {
     var r = 1
     var fixedPoint = false
     while (r <= rounds && !fixedPoint) {
-      val cand = family match {
-        case "pq" => searchPqIndex(s, table, pending, k, nprobe, adcTopC)
-        case "sem" => searchSemanticIndex(s, table, pending, k, nprobe)
-        case other => throw new IllegalArgumentException(
-          s"family must be pq or sem, got $other")
-      }
-      val scored = cand
+      val scored = searchPqIndex(s, table, pending, k, nprobe, adcTopC)
         .select(col("q_id").as("t_id"), col("n_id").as("s_id"), col("cosine"))
         .join(broadcast(labelSet.select("s_id", "label", "confidence")), "s_id")
       val won = voteAdoptRound(scored, k, decay, r).localCheckpoint(true)
@@ -1781,9 +1761,9 @@ object Ann {
     * the standing corpus, `batch` (vec_id, emb) the probe set. One row
     * per batch vector: (vec_id, cell, match_vec_id, cosine, is_dup),
     * null match for batch vectors colliding nowhere. Self-contained
-    * composition of [[semanticIndexFrames]] + [[semProbeAgainst]]; a
-    * production ingest materializes the index once with
-    * [[refreshSemanticIndex]] and probes it with [[probeSemanticIndex]].
+    * composition of [[semanticIndexFrames]] + [[semProbeAgainst]]; the
+    * standing vector index a production ingest materializes once is
+    * [[refreshPqIndex]], probed with [[probePqIndex]].
     */
   def semProbe(index: DataFrame, batch: DataFrame, eps: Double = 0.99,
                verify: String = "dec"): DataFrame = {
@@ -1793,7 +1773,7 @@ object Ann {
 
   /** The 4×4-bit sign bands of an [[assignCells]] output, one row per
     * (vector, band) — the candidate join key of the whole semantic
-    * family (q95/q96 pair generation, q97's probe, the standing index).
+    * family (q95/q96 pair generation, q97's probe, the intra-batch screen).
     */
   private def bandedCells(assigned: DataFrame): DataFrame =
     assigned.select(
@@ -1802,8 +1782,8 @@ object Ann {
         shiftright(col("bucket"), 4 * b).bitwiseAND(lit(0xF))): _*))
         .as(Seq("band_idx", "band_val")))
 
-  /** The STANDING semantic index as two frames — compute ONCE per
-    * refresh, reuse across every probe:
+  /** The in-query semantic index as two frames — compute ONCE per
+    * corpus, reuse across every probe:
     *   - `centroids(cell, qcent, cnorm2)`: the deterministic coarse
     *     quantizer, nlist rows — always broadcast by consumers (it is
     *     what assigns a batch vector its cell without touching the
@@ -1832,11 +1812,9 @@ object Ann {
     (centroids, guardedFromAssigned(assignCells(index, centroids)))
   }
 
-  /** The guarded member index over an [[assignCells]] output — the one
-    * construction [[semanticIndexFrames]], [[appendSemanticIndex]] and
-    * [[rebuildSemanticIndex]] all share: band every assigned vector and
-    * apply [[Dedup.guardedIndex]]'s asymmetric hot-group guard per
-    * (cell, band) key.
+  /** The guarded member index over an [[assignCells]] output: band
+    * every assigned vector and apply [[Dedup.guardedIndex]]'s asymmetric
+    * hot-group guard per (cell, band) key.
     */
   private def guardedFromAssigned(assigned: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1847,130 +1825,6 @@ object Ann {
       .filter(col("grp_n") <= Dedup.MaxBucket || col("vec_id") === col("canon"))
       .select(col("vec_id").as("match_vec_id"), col("cell"),
         col("band_idx"), col("band_val"), col("emb").as("i_emb"))
-  }
-
-  /** Semantic-index refresh: materialize [[semanticIndexFrames]] as
-    * managed tables — the q97 docstring's promised write, the embedding
-    * twin of [[Dedup.refreshIndex]]. The guarded member index lands
-    * bucketed on the probe's exact join keys (cell, band_idx, band_val),
-    * so every later batch or stream probe's equi-join co-locates on the
-    * bucket key with NO index-side exchange: the corpus is assigned,
-    * banded, and guard-filtered once per refresh, and only the (small by
-    * definition) probe batch ever shuffles. Two side tables land beside
-    * it: `<table>_centroids` (nlist rows — the probe broadcasts it for
-    * cell assignment) and `<table>_members` (the unguarded one-row-per-
-    * member serving view, partitioned by cell, consumed by
-    * [[searchSemanticIndex]]). The triple is the complete standing state
-    * of the semantic-admission and semantic-serving paths.
-    */
-  def refreshSemanticIndex(index: DataFrame, table: String,
-                           numBuckets: Int = 32, splits: Int = 0): Unit = {
-    val s = index.sparkSession
-    // reader-side snapshot isolation (round 14 — VERDICT r13 #2): the
-    // refresh writes a complete NEW generation under versioned physical
-    // names and atomically re-points the logical name only when every
-    // table landed — a serving read that resolved the OLD generation
-    // keeps its files untouched ([[graft.sources.TablePointer]]); the
-    // previous generation retires one refresh later (the grace period)
-    val phys = graft.sources.TablePointer.stage(s, table)
-    // the same refresh-time nlist rule as [[refreshPqIndex]] (VERDICT
-    // r10 #2): splits ≤ 0 computes [[autoSplits]] so cells keep their
-    // SIZE as the corpus grows — the in-query twins (semProbe/q95/q97)
-    // stay label-seeded (splits = 1) because their DuckDB oracles replay
-    // that configuration; the standing index is the production shape.
-    // The probe/append/rebuild contract is split-invariant: assignment
-    // is argmax over whatever centroid table the refresh materialized.
-    val centroids = centroidTable(index, resolveSplits(index, splits))
-    val guarded = guardedFromAssigned(assignCells(index, centroids))
-    graft.sources.Ingest.writeBucketed(guarded, phys, "cell", numBuckets,
-      sortCol = None, moreBucketCols = Seq("band_idx", "band_val"))
-    graft.sources.Ingest.clearStaleLocation(s, s"${phys}_centroids")
-    centroids.write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${phys}_centroids")
-    // the SERVING view: one row per member, UNGUARDED (the hot-group
-    // guard bounds dedup pair generation; a top-k search must see every
-    // member), partitioned by cell so a broadcast nprobe-cell probe
-    // prunes partitions at the scan (DPP) instead of reading the corpus
-    graft.sources.Ingest.clearStaleLocation(s, s"${phys}_members")
-    assignCells(index, centroids)
-      .select(col("vec_id").as("member_id"), col("emb").as("m_emb"), col("cell"))
-      .repartition(col("cell")) // one file per cell per write (compaction-trigger discipline)
-      .write.mode("overwrite").format("parquet").partitionBy("cell")
-      .saveAsTable(s"${phys}_members")
-    // the COMMIT: one atomic pointer swap, then the grace-bounded retire
-    graft.sources.TablePointer.swap(s, table, phys)
-    graft.sources.TablePointer.retire(s, table, SemSuffixes)
-  }
-
-  /** The semantic family's companion-table suffixes (retire/drop). */
-  private val SemSuffixes = Seq("_centroids", "_members")
-
-  /** Incremental semantic-index maintenance: append an ADMITTED batch to
-    * the standing [[refreshSemanticIndex]] table without re-assigning
-    * the corpus — the embedding twin of [[Dedup.appendIndex]]. The batch
-    * is assigned against the STANDING centroids (cells are defined at
-    * refresh time and not moved by appends — the standard IVF
-    * maintenance contract), banded, guard-filtered alone, and appended
-    * under the table's bucket spec. Hot (cell, band) groups can grow
-    * past the cap across appends until the next full refresh
-    * re-tightens them; each append costs one batch-sized shuffle.
-    */
-  def appendSemanticIndex(s: SparkSession, table: String,
-                          batch: DataFrame): Unit = {
-    // appends mutate the CURRENT generation in place: they are additive
-    // (no location is cleared) and serialized with every other writer by
-    // the admission lock — only wholesale refreshes need a generation
-    val t = graft.sources.TablePointer.resolve(s, table)
-    val assigned = assignCells(batch, s.table(s"${t}_centroids")).persist()
-    try {
-      graft.sources.Ingest.appendBucketed(guardedFromAssigned(assigned), t, "cell",
-        Seq("band_idx", "band_val"))
-      assigned
-        .select(col("vec_id").as("member_id"), col("emb").as("m_emb"), col("cell"))
-        .repartition(col("cell")) // at most one new file per touched cell per append
-        .write.mode("append").format("parquet").partitionBy("cell")
-        .saveAsTable(s"${t}_members")
-      // refresh through the PROBING session `s` (see Dedup.appendIndex):
-      // the append frames' own session may be a different one when the
-      // batch plan's left side came from outside a foreachBatch clone
-      s.catalog.refreshTable(t)
-      s.catalog.refreshTable(s"${t}_members")
-    } finally assigned.unpersist()
-  }
-
-  /** Rebuild the guarded index + members serving view of a standing
-    * [[refreshSemanticIndex]] table from `vecs` alone, KEEPING the
-    * existing centroid table — the crash-recovery write
-    * ([[graft.Admit]]'s WAL repair): cells are defined at refresh time
-    * and must not move under a repair, and the rebuild source (seed ∪
-    * landed admissions) carries no label column to re-seed a quantizer
-    * from. Orphan appends — index rows whose batch's landing never
-    * committed — vanish because both writes are overwrites derived from
-    * `vecs` alone; the bucket spec is read from the catalog so the
-    * rebuilt table keeps its probe co-location contract.
-    */
-  def rebuildSemanticIndex(s: SparkSession, table: String, vecs: DataFrame): Unit = {
-    // the crash-repair rewrite targets the CURRENT generation (it runs
-    // under the admission lock; centroids must not move, so there is no
-    // complete new generation to stage — the declared in-place residual)
-    val t = graft.sources.TablePointer.resolve(s, table)
-    val numBuckets = s.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
-      .bucketSpec.map(_.numBuckets).getOrElse(32)
-    val assigned = assignCells(vecs, s.table(s"${t}_centroids")).persist()
-    try {
-      graft.sources.Ingest.writeBucketed(guardedFromAssigned(assigned), t,
-        "cell", numBuckets, sortCol = None,
-        moreBucketCols = Seq("band_idx", "band_val"))
-      graft.sources.Ingest.clearStaleLocation(s, s"${t}_members")
-      assigned
-        .select(col("vec_id").as("member_id"), col("emb").as("m_emb"), col("cell"))
-        .repartition(col("cell")) // one file per cell per write (compaction-trigger discipline)
-        .write.mode("overwrite").format("parquet").partitionBy("cell")
-        .saveAsTable(s"${t}_members")
-      s.catalog.refreshTable(t)
-      s.catalog.refreshTable(s"${t}_members")
-    } finally assigned.unpersist()
   }
 
   /** Intra-batch semantic twins: batch vectors matching an EARLIER
@@ -1997,87 +1851,6 @@ object Ann {
       .dropDuplicates("id_a", "id_b")
       .filter(cos >= eps)
       .select(col("id_b").as("vec_id")).distinct()
-  }
-
-  /** Probe a batch against a [[refreshSemanticIndex]]-materialized index
-    * — [[semProbeAgainst]] over the bucketed scan and its centroid
-    * side-table.
-    */
-  def probeSemanticIndex(s: SparkSession, table: String, batch: DataFrame,
-                         eps: Double = 0.99, verify: String = "dec",
-                         cache: Boolean = true): DataFrame = {
-    // one resolution per probe plan (the TablePointer reader contract)
-    val t = graft.sources.TablePointer.resolve(s, table)
-    semProbeAgainst(s.table(t), s.table(s"${t}_centroids"),
-      batch, eps, verify, cache)
-  }
-
-  /** Top-k cosine SEARCH against a [[refreshSemanticIndex]] table — the
-    * serving path of the materialized index (the dedup probe asks "is
-    * this a near-dup?"; this asks "what are the k nearest neighbors?").
-    * IVF shape over the standing state: each query is assigned its
-    * `nprobe` nearest cells by the broadcast centroid table, candidates
-    * come from those cells' members, the fused native cosine ranks them,
-    * and a per-query window keeps the top k (ties to the lower id).
-    *
-    * Candidates come from the `<table>_members` serving view (one row
-    * per member, UNGUARDED — the hot-group guard bounds dedup pair
-    * generation, a search must see every member), which the refresh
-    * writes partitioned by cell. The query set BROADCASTS — a serving
-    * batch is small by definition — so the member side is a pure scan
-    * with no exchange, and the broadcast join's cell keys prune the
-    * partitioned scan (DPP): probing 3 of nlist cells reads 3 cells'
-    * files, not the corpus.
-    *
-    * Load-shape guard (VERDICT r8 #7): the broadcast is the plan's
-    * premise, so a corpus-sized query frame must fail LOUDLY here — a
-    * silent attempt would OOM the driver mid-broadcast. Over
-    * `maxQueryRows` the call aborts naming the bulk paths
-    * ([[probeSemanticIndex]]/[[semProbeAgainst]], whose bucketed
-    * equi-join shuffles only the batch and never broadcasts vectors);
-    * the count itself is one cheap aggregation over the query frame.
-    */
-  def searchSemanticIndex(s: SparkSession, table: String, queries: DataFrame,
-                          k: Int = 10, nprobe: Int = 3,
-                          maxQueryRows: Long = 100000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val nQ = queries.count()
-    require(nQ <= maxQueryRows,
-      s"searchSemanticIndex broadcasts its query set, and $nQ query rows " +
-        s"exceed maxQueryRows=$maxQueryRows — this is a serving path for " +
-        "small probe batches. For corpus-sized probes use the bucketed " +
-        "dedup probe (Ann.probeSemanticIndex / Ann.semProbeAgainst), " +
-        "which shuffles only the batch side, or raise maxQueryRows " +
-        "deliberately.")
-    // resolve the CURRENT generation once — the whole plan binds to one
-    // consistent (centroids, members) pair, and a refresh landing mid-
-    // query cannot pull this reader's files out from under it
-    val t = graft.sources.TablePointer.resolve(s, table)
-    val centroids = s.table(s"${t}_centroids")
-    val probeW = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cell"))
-    val qe = queries
-      .withColumn("qemb", quantize(col("emb")))
-      .withColumn("qn2", expr(
-        "aggregate(zip_with(qemb, qemb, (x, y) -> x * y), CAST(0 AS BIGINT), (a, v) -> a + v)"))
-    val qdot = expr(
-      "CAST(aggregate(zip_with(qemb, qcent, (x, y) -> x * y), CAST(0 AS BIGINT), (a, v) -> a + v) AS DOUBLE)")
-    val probes = qe.crossJoin(broadcast(centroids))
-      .withColumn("csim",
-        qdot / sqrt(col("cnorm2").cast("double") * col("qn2").cast("double")))
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"), col("cell"))
-    val members = s.table(s"${t}_members")
-      .select(col("member_id").as("n_id"), col("cell"), col("m_emb"))
-    val rankW = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("n_id"))
-    broadcast(probes).join(members, Seq("cell"))
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-        Num.roundD(cosine(col("q_emb"), col("m_emb"))).as("cosine"))
-      .withColumn("rank", row_number().over(rankW))
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id", "cosine")
-      .orderBy("q_id", "rank")
   }
 
   /** The probe tail against a PREPARED index: assign each batch vector a
@@ -2824,11 +2597,9 @@ object Ann {
   // q110 is the production ANN stack, but as a QUERY it rebuilds the
   // codebook and re-encodes the corpus per run. This block gives the PQ
   // family the same day-2 lifecycle the band index (Dedup.refreshIndex)
-  // and semantic index (refreshSemanticIndex) got in r7/r8:
-  // refresh / append / probe / serve over materialized tables, with the
-  // rebuildSemanticIndex discipline extended one level — under an append
-  // or a crash repair, neither the coarse CELLS nor the PQ CODEWORDS
-  // move (both are defined at refresh time; re-deriving either against
+  // got in r7: refresh / append / probe / serve over materialized tables,
+  // and under an append or a crash repair neither the coarse CELLS nor
+  // the PQ CODEWORDS move (both are defined at refresh time; re-deriving either against
   // grown data would silently re-encode the standing corpus and
   // invalidate every stored code).
 
@@ -3146,7 +2917,7 @@ object Ann {
   }
 
   /** Incremental IVF-PQ maintenance: encode ONLY the batch and append
-    * it under the standing cells — the [[appendSemanticIndex]] contract
+    * it under the standing cells — the standard IVF maintenance contract
     * plus the codebook rule: cells come from the STANDING broadcast
     * centroids, codes from the refresh-time quantizer, and neither
     * table is touched (codewords must not move under an append — every
@@ -3154,7 +2925,9 @@ object Ann {
     * batch-sized pass; the corpus is never re-read.
     */
   def appendPqIndex(s: SparkSession, table: String, batch: DataFrame): Unit = {
-    // additive, lock-serialized, current-generation (appendSemanticIndex)
+    // appends mutate the CURRENT generation in place: they are additive
+    // (no location is cleared) and serialized with every other writer by
+    // the admission lock — only wholesale refreshes need a generation
     val t = graft.sources.TablePointer.resolve(s, table)
     writePqMembers(assignCellsLean(batch, s.table(s"${t}_centroids")),
       t, overwrite = false, encodeCodes(s, t, pqQuantizerOf(s, t)))
@@ -3165,15 +2938,14 @@ object Ann {
 
   /** Rebuild the members table of a standing [[refreshPqIndex]] index
     * from `vecs` alone, KEEPING centroids and codebook — the crash-
-    * recovery write ([[graft.Admit]]'s WAL repair, the
-    * [[rebuildSemanticIndex]] discipline): cells and codewords are
+    * recovery write ([[graft.Admit]]'s WAL repair): cells and codewords are
     * defined at refresh time and must not move under a repair; orphan
     * member rows from an uncommitted append vanish because the write is
     * an overwrite derived from `vecs` alone.
     */
   def rebuildPqIndex(s: SparkSession, table: String, vecs: DataFrame): Unit = {
     // crash-repair in-place rewrite of the CURRENT generation — under
-    // the admission lock, frozen centroids/codebook (rebuildSemanticIndex)
+    // the admission lock, frozen centroids/codebook
     val t = graft.sources.TablePointer.resolve(s, table)
     writePqMembers(assignCellsLean(vecs, s.table(s"${t}_centroids")),
       t, overwrite = true, encodeCodes(s, t, pqQuantizerOf(s, t)))
@@ -3191,9 +2963,9 @@ object Ann {
     * (`verify = "dec"` decimal-exact — bit-equal to q25's for the same
     * pair; `"float"` the fused native kernel for serving).
     *
-    * Query frames BROADCAST (their LUTs are |Q|×128 rows), so the same
-    * load-shape guard as [[searchSemanticIndex]] applies: corpus-sized
-    * query sets must fail loudly, not OOM the driver.
+    * Query frames BROADCAST (their LUTs are |Q|×128 rows), so the
+    * serving entry points guard the load shape: corpus-sized query sets
+    * must fail loudly, not OOM the driver.
     */
   private def pqTopK(s: SparkSession, table: String, queries: DataFrame,
                      k: Int, nprobe: Int, adcTopC: Int,
@@ -3314,8 +3086,10 @@ object Ann {
   }
 
   /** Top-k ANN SEARCH against a standing [[refreshPqIndex]] table — the
-    * serving path ([[searchSemanticIndex]]'s role for the PQ family),
-    * with the same loud load-shape guard on the broadcast premise.
+    * serving path (what are the k nearest neighbors?), with a loud
+    * load-shape guard on the broadcast premise: over `maxQueryRows` the
+    * call aborts naming the bulk path instead of OOMing the driver
+    * mid-broadcast.
     */
   def searchPqIndex(s: SparkSession, table: String, queries: DataFrame,
                     k: Int = 10, nprobe: Int = 3, adcTopC: Int = 32,
@@ -3326,16 +3100,16 @@ object Ann {
       s"searchPqIndex broadcasts its query set (the per-query ADC LUTs), " +
         s"and $nQ query rows exceed maxQueryRows=$maxQueryRows — this is a " +
         "serving path for small probe batches. For corpus-sized probes " +
-        "use the bucketed dedup probe (Ann.probeSemanticIndex), or raise " +
-        "maxQueryRows deliberately.")
+        "use the bucketed dedup probe (Ann.semProbe), which shuffles only " +
+        "the batch side, or raise maxQueryRows deliberately.")
     pqTopK(s, table, queries, k, nprobe, adcTopC, verify)
       .select("q_id", "rank", "n_id", "cosine")
       .orderBy("q_id", "rank")
   }
 
   /** Near-dup PROBE of a batch against a standing [[refreshPqIndex]]
-    * table — the admission-screen shape ([[probeSemanticIndex]]'s
-    * contract: one row per batch vector, null match for vectors
+    * table — the admission-screen shape ([[semProbe]]'s contract: one
+    * row per batch vector, null match for vectors
     * matching nowhere, `is_dup` at `eps`), served by the IVF-PQ-rerank
     * read path: the best SURVIVING candidate's exact cosine decides,
     * so a paraphrase that ADC ranks highly is verified on real floats
@@ -3357,7 +3131,7 @@ object Ann {
     require(nB <= maxBatchRows,
       s"probePqIndex broadcasts its batch's ADC LUTs, and $nB batch rows " +
         s"exceed maxBatchRows=$maxBatchRows — for corpus-sized probes use " +
-        "the bucketed semantic probe (Ann.probeSemanticIndex), or raise " +
+        "the bucketed semantic probe (Ann.semProbe), or raise " +
         "maxBatchRows deliberately.")
     val best = pqTopK(s, table, batch, k = 1, np, adcTopC, verify)
       .select(col("q_id"), col("n_id").as("match_vec_id"), col("cosine"))

@@ -53,20 +53,13 @@ object Clusters {
     */
   def connectedComponents(edges: DataFrame, nodes: DataFrame,
                           maxIter: Int = 20): DataFrame = {
-    def timed[T](tag: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] $tag ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
     // eager checkpoint: runs the (possibly expensive) edge pipeline
     // exactly once and cuts its plan out of every downstream round
-    val e = timed("edges")(edges.select(col("src"), col("dst")).localCheckpoint(true))
-    val bidir = timed("bidir")(e
+    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
+    val bidir = e
       .unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .localCheckpoint(true))
+      .localCheckpoint(true)
     // e is folded into bidir's materialized blocks — release it now, and
     // release each round's labels the moment the next round supersedes
     // them. Without this the loop pins O(rounds) snapshots for its whole
@@ -75,8 +68,8 @@ object Clusters {
     // q46; bounded at ≤2 live snapshots the eviction pressure is gone.
     graft.Frames.freePinned(e)
     val active = bidir.select(col("src").as("id")).distinct()
-    var labels = timed("labels0")(active.select(col("id"), col("id").as("cluster_id"))
-      .localCheckpoint(true))
+    var labels = active.select(col("id"), col("id").as("cluster_id"))
+      .localCheckpoint(true)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -92,11 +85,8 @@ object Clusters {
           least(col("cluster_id"),
             coalesce(col("neighbor_min"), col("cluster_id"))).as("cluster_id"),
           col("cluster_id").as("prev"))
-      val checkpointed = timed(s"round$iter")(updated.localCheckpoint(true))
-      val t0 = System.nanoTime()
+      val checkpointed = updated.localCheckpoint(true)
       val changed = checkpointed.filter(col("cluster_id") =!= col("prev")).count()
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] iter=$iter changed=$changed ${(System.nanoTime() - t0) / 1e9}%.2fs")
       graft.Frames.freePinned(labels) // superseded round: nothing reads it again
       labels = checkpointed
       converged = changed == 0

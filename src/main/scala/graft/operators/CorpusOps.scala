@@ -832,11 +832,9 @@ object CorpusOps {
     * rows (the snapshot-card discipline applied to serving state).
     */
   def servingStateRows(s: SparkSession, bandTable: String, outDir: String,
-                       semTable: Option[String] = None,
                        pqTable: Option[String] = None,
                        textTable: Option[String] = None): DataFrame =
-    graft.Admit.standingStateReport(s, bandTable, outDir, semTable,
-        pqTable, textTable)
+    graft.Admit.standingStateReport(s, bandTable, outDir, pqTable, textTable)
       .select(concat_ws("_", lit("serving"), col("component"),
         col("metric")).as("metric"), col("value"))
 
@@ -845,12 +843,10 @@ object CorpusOps {
     * with, one (metric, value) row each.
     */
   def dataCardWithServing(d: DataFrame, bandTable: String, outDir: String,
-                          semTable: Option[String] = None,
                           pqTable: Option[String] = None,
                           textTable: Option[String] = None): DataFrame =
     dataCardOf(d).unionByName(
-        servingStateRows(d.sparkSession, bandTable, outDir, semTable,
-          pqTable, textTable))
+        servingStateRows(d.sparkSession, bandTable, outDir, pqTable, textTable))
       .orderBy("metric")
 
   /** Doc-grain diff of two PUBLISHED snapshot versions — q65's diff

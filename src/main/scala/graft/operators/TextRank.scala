@@ -328,11 +328,11 @@ object TextRank {
   /** Term-bucket PARTITION count for the postings table. Postings are
     * partitioned (directories, not buckets) by `tb = pmod(xxhash64(term),
     * TermBuckets)` so a broadcast query panel prunes unmatched term
-    * buckets at the scan via dynamic partition pruning — the `_members`
-    * cell-partitioning trick applied to posting lists. With selective
-    * query terms a search reads only its terms' buckets; a panel of
-    * stopwords degrades to the full postings scan, which is the data's
-    * floor, not the plan's.
+    * buckets at the scan via dynamic partition pruning — the IVF-PQ
+    * members' cell-partitioning trick applied to posting lists. With
+    * selective query terms a search reads only its terms' buckets; a
+    * panel of stopwords degrades to the full postings scan, which is
+    * the data's floor, not the plan's.
     */
   private val TermBuckets = 32
 
@@ -561,8 +561,8 @@ object TextRank {
           .select("term")), "term")
     // the panel joins on (tb, term): tb is the postings table's
     // partition column, so the broadcast side's bucket values prune
-    // unmatched term-bucket directories at the scan (DPP — the
-    // `_members` cell-probe shape)
+    // unmatched term-bucket directories at the scan (DPP — the PQ
+    // members' cell-probe shape)
     val contrib = broadcast(panel.withColumn("tb", termBucket(col("term"))))
       .join(post, Seq("tb", "term"))
       .filter(col("doc_id") =!= col("q_id"))
@@ -825,7 +825,7 @@ object TextRank {
     * the row-232 discipline applied to the composition knob q150 grades
     * but nothing previously chose from.
     */
-  case class HybridCal(dfFrac: Double, nprobe: Int, family: String,
+  case class HybridCal(dfFrac: Double, nprobe: Int,
                        target: Double, measured: Double, docsAtCal: Long,
                        // the dense arm's ADC shortlist depth (round 16
                        // second pass): ServeRehearsal measured the FIXED
@@ -844,14 +844,14 @@ object TextRank {
     else s.table(s"${phys}_cal").collect().headOption
       .filter(_.getAs[Int]("fused_nprobe") >= 1)
       .map(r => HybridCal(r.getAs[Double]("fused_df_frac"),
-        r.getAs[Int]("fused_nprobe"), r.getAs[String]("fused_family"),
+        r.getAs[Int]("fused_nprobe"),
         r.getAs[Double]("fused_recall_target"),
         r.getAs[Double]("fused_recall_measured"),
         r.getAs[Long]("fused_docs_at_cal"), r.getAs[Int]("fused_adc_top_c")))
   }
 
   /** The `_cal` row, whole: sparse serving knobs + the fused pair (−1 /
-    * empty sentinels when the hybrid sweep hasn't run). One writer so
+    * sentinels when the hybrid sweep hasn't run). One writer so
     * the two sweeps can never tear each other's columns.
     */
   private def writeTextCal(s: SparkSession, phys: String, cal: TextCal,
@@ -862,14 +862,13 @@ object TextRank {
         cal.champMeasured, cal.docsAtCal,
         fused.map(_.dfFrac).getOrElse(-1.0),
         fused.map(_.nprobe).getOrElse(-1),
-        fused.map(_.family).getOrElse(""),
         fused.map(_.target).getOrElse(-1.0),
         fused.map(_.measured).getOrElse(-1.0),
         fused.map(_.docsAtCal).getOrElse(-1L),
         fused.map(_.adcTopC).getOrElse(-1)))
       .toDF("max_df_frac", "champ_m", "recall_target", "prune_measured",
         "champ_measured", "docs_at_cal", "fused_df_frac", "fused_nprobe",
-        "fused_family", "fused_recall_target", "fused_recall_measured",
+        "fused_recall_target", "fused_recall_measured",
         "fused_docs_at_cal", "fused_adc_top_c")
       .write.mode("overwrite").format("parquet").saveAsTable(s"${phys}_cal")
   }
@@ -904,7 +903,7 @@ object TextRank {
     */
   def calibrateHybridServing(s: SparkSession, textTable: String,
       vecTable: String, targetRecall: Double, k: Int = 10,
-      family: String = "pq", adcTopC: Int = 64, nPanel: Int = 12): HybridCal = {
+      adcTopC: Int = 64, nPanel: Int = 12): HybridCal = {
     import s.implicits._
     val phys = graft.sources.TablePointer.resolve(s, textTable)
     val sparseCal = textCalOf(s, phys).getOrElse(throw new IllegalStateException(
@@ -980,7 +979,7 @@ object TextRank {
         val ladder = (Seq(1, 2, 4, 8).filter(_ < nlist) :+ nlist).distinct
         def recallAt(frac: Double, np: Int, adc: Int): Double = {
           val fused = hybridSearchIndexed(s, phys, vphys, qt, queries, k,
-              family, np, adc, frac)
+              nprobe = np, adcTopC = adc, sparseDfFrac = frac)
             .select(col("q_id"), col("doc_id"), lit(1).as("hit"))
           truth.join(fused, Seq("q_id", "doc_id"), "left")
             .agg(count(col("hit"))).head().getLong(0) / nTruth
@@ -1020,7 +1019,7 @@ object TextRank {
               "documented complement")
           (1.0, nlist, deepest, lastCeil)
         }
-        val hc = HybridCal(cf, cn, family, targetRecall, measured, nDocs, ca)
+        val hc = HybridCal(cf, cn, targetRecall, measured, nDocs, ca)
         writeTextCal(s, phys, sparseCal, Some(hc))
         hc
       } finally graft.Frames.freePinned(truth)
@@ -1384,17 +1383,20 @@ object TextRank {
   /** The fully index-backed production twin of [[q146HybridRetrieval]]:
     * the sparse arm serves from the standing BM25 index
     * ([[searchTextIndex]]), the dense arm from a standing vector index
-    * ([[Ann.searchPqIndex]]/[[Ann.searchSemanticIndex]] — nprobe cells
-    * per query, never the corpus), and [[fuseRrf]] is shared verbatim.
+    * ([[Ann.searchPqIndex]] — nprobe cells per query, never the
+    * corpus), and [[fuseRrf]] is shared verbatim.
     * `qt` carries the query terms (`q_id`, `term`), `queries` the query
     * vectors (`vec_id`, `emb`) — same ids, the two sides of one query
     * panel. At 100 TB this is the hybrid serving path: both arms
     * exchange-free on their index side, fusion a ≤ |Q|·k join.
+    * `family` names the standing vector index kind and accepts only
+    * `"pq"` (IVF-PQ is the one standing vector index).
     */
   def hybridSearchIndexed(s: SparkSession, textTable: String,
       vecTable: String, qt: DataFrame, queries: DataFrame, k: Int = 10,
       family: String = "pq", nprobe: Int = 3, adcTopC: Int = 64,
       sparseDfFrac: Double = 1.0): DataFrame = {
+    require(family == "pq", s"family must be pq, got $family")
     // sparseDfFrac < 1.0 serves the sparse arm through index
     // elimination (the q147-graded tier) — the hybrid twin of the dense
     // arm's nprobe knob, for corpora whose stopword posting lists
@@ -1402,12 +1404,10 @@ object TextRank {
     // nprobe = 0 / sparseDfFrac = 0.0 are AUTO (round 16 — VERDICT r15
     // #5): serve at the JOINTLY calibrated fused pair
     // ([[calibrateHybridServing]], persisted in the text `_cal`); with
-    // no fused pair — or one measured on a DIFFERENT vector family,
-    // which must not silently govern this one — degrade toward
-    // EXACTNESS: frac 1.0, nprobe = every cell (the dense arm's
-    // residual is then only its ADC/rerank cuts).
+    // no fused pair, degrade toward EXACTNESS: frac 1.0, nprobe = every
+    // cell (the dense arm's residual is then only its ADC/rerank cuts).
     val hc = if (nprobe == 0 || sparseDfFrac == 0.0 || adcTopC == 0)
-      textHybridCalOf(s, textTable).filter(_.family == family) else None
+      textHybridCalOf(s, textTable) else None
     val npEff =
       if (nprobe != 0) nprobe
       else hc.map(_.nprobe).getOrElse(Ann.centroidsOf(s, vecTable).count().toInt)
@@ -1422,12 +1422,8 @@ object TextRank {
       else hc.map(_.adcTopC).getOrElse(64)
     val sparse = searchTextIndex(s, textTable, qt, k, maxDfFrac = fracEff)
       .select(col("q_id"), col("doc_id"), col("rk").as("sparse_rank"))
-    val dense = (family match {
-      case "pq" => Ann.searchPqIndex(s, vecTable, queries, k, npEff, adcEff)
-      case "sem" => Ann.searchSemanticIndex(s, vecTable, queries, k, npEff)
-      case other => throw new IllegalArgumentException(
-        s"family must be pq or sem, got $other")
-    }).select(col("q_id"), col("n_id").as("doc_id"), col("rank").as("dense_rank"))
+    val dense = Ann.searchPqIndex(s, vecTable, queries, k, npEff, adcEff)
+      .select(col("q_id"), col("n_id").as("doc_id"), col("rank").as("dense_rank"))
     fuseRrf(sparse, dense, k).orderBy("q_id", "rank")
   }
 
@@ -1516,8 +1512,7 @@ object TextRank {
     * arm — the sparse arm's df-threshold pruning (`prunedFrac`, the
     * [[hybridSearchIndexed]] `sparseDfFrac` knob) and the dense arm's
     * IVF cell probing (`nprobe` top cells of the label-seeded
-    * deterministic quantizer, the q98 leg — exactly the standing
-    * semantic index's serving restriction at splits = 1) — and scores
+    * deterministic quantizer, the q98 leg) — and scores
     * micro-averaged recall@k of the fused output against the fused
     * truth. The (exact, exact) row is the grid's self-check (recall 1
     * by construction). Candidate-restriction only: approximate-arm
@@ -1571,7 +1566,7 @@ object TextRank {
         e.select(col("vec_id").as("doc_id"), col("emb").as("nemb")))
       .withColumn("nn", Ann.dotDec("nemb", "nemb"))
     val denseExact0 = denseRank(n.crossJoin(broadcast(q)))
-    // the IVF arm: label-seeded deterministic centroids (the standing
+    // the IVF arm: label-seeded deterministic centroids (the in-query
     // semantic family's splits=1 quantizer), corpus argmax assignment,
     // panel probes its top-nprobe cells; candidate cosines are the
     // exact decimal folds, so restriction is the ONLY approximation

@@ -374,9 +374,9 @@ object Ingest {
   }
 
   /** Files per PARTITION of a partitioned managed table (the
-    * `cell=…`-directory layout of the semantic `_members` and IVF-PQ
-    * member tables, whose appends add files per touched partition the
-    * way bucketed appends add files per bucket). Pure metadata: one
+    * `cell=…`-directory layout of the IVF-PQ member table, whose
+    * appends add files per touched partition the way bucketed appends
+    * add files per bucket). Pure metadata: one
     * two-level listing, no data read. Round 10 — the bucketed trigger
     * left the PARTITIONED standing tables unwatched.
     */
@@ -402,17 +402,15 @@ object Ingest {
     * since the last refresh, so the threshold is literally "refresh
     * after N appends" — decided from the table's own layout, never a
     * counter someone forgets to persist. Callers answer `true` with the
-    * family's refresh ([[graft.operators.Dedup.refreshIndex]] /
-    * [[graft.operators.Ann.rebuildSemanticIndex]]), which rewrites one
-    * file per bucket AND re-tightens the per-append hot-bucket guard.
+    * family's refresh ([[graft.operators.Dedup.refreshIndex]]), which
+    * rewrites one file per bucket AND re-tightens the per-append
+    * hot-bucket guard.
     *
     * Non-bucketed tables dispatch to the PARTITION grain
-    * ([[partitionFileCounts]] — round 10): the IVF-PQ member table and
-    * the semantic `_members` serving view are cell-partitioned, and
-    * their appends grow per-partition files on exactly the same
-    * schedule; their compaction answer is the family's members rewrite
-    * ([[graft.operators.Ann.rebuildPqIndex]] /
-    * [[graft.operators.Ann.rebuildSemanticIndex]]).
+    * ([[partitionFileCounts]] — round 10): the IVF-PQ member table is
+    * cell-partitioned, and its appends grow per-partition files on
+    * exactly the same schedule; its compaction answer is the members
+    * rewrite ([[graft.operators.Ann.rebuildPqIndex]]).
     */
   def needsCompaction(spark: SparkSession, table: String,
                       maxFilesPerBucket: Int): Boolean = {

@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * then `saveAsTable(overwrite)` drops and recreates), and while every
   * WRITER serializes under the admission lock, the SERVING reads
   * ([[graft.operators.Ann.searchPqIndex]] /
-  * [[graft.operators.Ann.searchSemanticIndex]] from another session)
+  * [[graft.operators.TextRank.searchTextIndex]] from another session)
   * take no lock — a reader racing a refresh could observe a partially
   * rewritten table or a cleared location. A real table format's commit
   * protocol hands that reader the OLD snapshot; this is that protocol

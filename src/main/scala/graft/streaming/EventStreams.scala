@@ -292,11 +292,10 @@ object EventStreams {
     * q97's probe as a stream: each arriving vector is assigned a cell by
     * the STANDING broadcast centroids, banded, and joined against the
     * standing guarded member index ([[graft.operators.Ann.semanticIndexFrames]],
-    * built once outside the stream — or `spark.table(...)` pairs from a
-    * [[graft.operators.Ann.refreshSemanticIndex]] materialization) with
-    * ZERO streaming state. What makes this streamable is that cell
-    * assignment is a per-row projection against an nlist-row broadcast —
-    * no corpus-wide aggregation ever runs inside the stream — so the
+    * built once outside the stream) with ZERO streaming state. What
+    * makes this streamable is that cell assignment is a per-row
+    * projection against an nlist-row broadcast — no corpus-wide
+    * aggregation ever runs inside the stream — so the
     * whole probe is scan → assign → band explode → stream-static join,
     * and the per-vector best-match window runs INSIDE foreachBatch where
     * a vector's 4 band rows are guaranteed co-batched. `cache = false`
@@ -353,12 +352,11 @@ object EventStreams {
   def admissionQuery(docs: DataFrame, bandTable: String, outDir: String,
                      checkpoint: String,
                      embeddings: Option[DataFrame] = None,
-                     semTable: Option[String] = None,
+                     pqTable: Option[String] = None,
                      eps: Double = 0.99,
                      recovery: Option[graft.Admit.Standing] = None,
                      maxFilesPerBucket: Int = 0,
                      benchmarkGrams: Option[DataFrame] = None,
-                     pqTable: Option[String] = None,
                      qualityFloor: Double = -1.0,
                      // round 14 third pass: the standing BM25 index
                      // grows per micro-batch like the other standing
@@ -376,9 +374,9 @@ object EventStreams {
         // cached it is a scan of one small frame, uncached it recomputes
         // whatever lineage produced the gram set
         graft.Admit.admitBatch(s, batch, bandTable,
-          outDir, batchId, embeddings, semTable, eps, recovery,
-          benchmarkGrams = benchmarkGrams, pqTable = pqTable,
-          qualityFloor = qualityFloor, textTable = textTable)
+          outDir, batchId, embeddings, pqTable, eps, recovery,
+          benchmarkGrams = benchmarkGrams, qualityFloor = qualityFloor,
+          textTable = textTable)
         for (st <- recovery) {
           // the PQ member table is cell-PARTITIONED, not bucketed —
           // needsCompaction dispatches to the partition grain for it
@@ -395,7 +393,7 @@ object EventStreams {
           val bandPhys = graft.sources.TablePointer.resolve(s, bandTable)
           val watched =
             Seq(bandPhys, graft.operators.Dedup.hashTableOf(bandPhys)) ++
-            (semTable.toSeq ++ pqTable.toSeq)
+            pqTable.toSeq
               .map(t => graft.sources.TablePointer.resolve(s, t)) ++
             // the postings table is term-bucket PARTITIONED; the
             // partition-grain file count watches it like the PQ cells
@@ -409,8 +407,7 @@ object EventStreams {
           if (trip) graft.Locks.withLock(s, s"$outDir/.admit-running",
             graft.Admit.DefaultStaleAfterMs) {
             graft.Admit.recover(s, bandTable, outDir, st,
-              excludeBatchId = -1L, embeddings, semTable, pqTable,
-              textTable)
+              excludeBatchId = -1L, embeddings, pqTable, textTable)
           }
         }
         ()

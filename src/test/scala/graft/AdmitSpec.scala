@@ -12,17 +12,12 @@ import org.apache.spark.sql.functions._
   */
 class AdmitSpec extends SparkSpec {
 
-  private def dropIndexTables(band: String, sem: String): Unit = {
-    // the band family is generation-versioned since round 15 — dropAll
-    // clears the pointer and every generation, legacy names included
+  private def dropIndexTables(band: String, pq: String): Unit = {
+    // both families are generation-versioned — dropAll clears the
+    // pointer and every generation
     graft.sources.TablePointer.dropAll(spark, band, Dedup.BandSuffixes)
-    for (t <- Seq(sem, s"${sem}_centroids", s"${sem}_members")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir") + s"/$t")
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
+    graft.sources.TablePointer.dropAll(spark, pq,
+      Seq("_centroids", "_codebook", "_meta"))
   }
 
   private def novelVec(seed: Int): Seq[Double] =
@@ -31,14 +26,14 @@ class AdmitSpec extends SparkSpec {
   test("admission screens each batch against a standing state the previous cycle grew") {
     import spark.implicits._
     val band = "admit_band_test"
-    val sem = "admit_sem_test"
-    dropIndexTables(band, sem)
+    val pq = "admit_pq_test"
+    dropIndexTables(band, pq)
     val d = Tables.load(spark, Sf, "documents").select("doc_id", "text")
     val e = Tables.load(spark, Sf, "embeddings")
       .withColumn("emb", expr("transform(embedding, x -> cast(x as double))"))
       .select("vec_id", "emb", "label")
     Dedup.refreshIndex(d, band, numBuckets = 8)
-    Ann.refreshSemanticIndex(e, sem, numBuckets = 8)
+    Ann.refreshPqIndex(e, pq)
     val out = java.nio.file.Files.createTempDirectory("admit").toString
 
     val corpusDoc10 = d.filter(col("doc_id") === 10L)
@@ -66,13 +61,13 @@ class AdmitSpec extends SparkSpec {
       (600003L, vec5.map(_ * 0.99))).toDF("vec_id", "emb")
     // the standing copy rejects at the EXACT screen (round 13): a
     // verbatim re-submission never reaches the band probe
-    val r1 = Admit.admitBatch(spark, b1, band, out, 1L, Some(b1v), Some(sem))
+    val r1 = Admit.admitBatch(spark, b1, band, out, 1L, Some(b1v), Some(pq))
     assert(r1 == Admit.Report(1L, 3, 0, 0, 0, 1, 1, exactRejected = 1),
       r1.toString)
 
     // batch 2: a copy of doc A (caught ONLY because cycle 1 appended its
     // content hash), a re-encode of doc A's vector under new text (caught
-    // ONLY because cycle 1 appended its cell/bands), and doc E (admit)
+    // ONLY because cycle 1 appended its PQ codes), and doc E (admit)
     val b2 = Seq(
       (700001L, textA),
       (700002L, "wholly different surface form reciting dune-colored " +
@@ -81,7 +76,7 @@ class AdmitSpec extends SparkSpec {
     val b2v = Seq(
       (700002L, novelVec(901).map(_ * 0.99)),
       (700003L, novelVec(902))).toDF("vec_id", "emb")
-    val r2 = Admit.admitBatch(spark, b2, band, out, 2L, Some(b2v), Some(sem))
+    val r2 = Admit.admitBatch(spark, b2, band, out, 2L, Some(b2v), Some(pq))
     assert(r2 == Admit.Report(2L, 3, 0, 0, 0, 1, 1, exactRejected = 1),
       r2.toString)
 
@@ -117,14 +112,14 @@ class AdmitSpec extends SparkSpec {
   test("intra-batch twins are screened before the standing probes: one representative survives") {
     import spark.implicits._
     val band = "admit_band_intra"
-    val sem = "admit_sem_intra"
-    dropIndexTables(band, sem)
+    val pq = "admit_pq_intra"
+    dropIndexTables(band, pq)
     val d = Tables.load(spark, Sf, "documents").select("doc_id", "text")
     val e = Tables.load(spark, Sf, "embeddings")
       .withColumn("emb", expr("transform(embedding, x -> cast(x as double))"))
       .select("vec_id", "emb", "label")
     Dedup.refreshIndex(d, band, numBuckets = 8)
-    Ann.refreshSemanticIndex(e, sem, numBuckets = 8)
+    Ann.refreshPqIndex(e, pq)
     val out = java.nio.file.Files.createTempDirectory("admit-intra").toString
 
     // long enough that a 3-token suffix barely moves the shingle set —
@@ -152,7 +147,7 @@ class AdmitSpec extends SparkSpec {
       (900004L, novelVec(921)),
       (900005L, novelVec(921).map(_ * 0.995)),
       (900006L, novelVec(922))).toDF("vec_id", "emb")
-    val r = Admit.admitBatch(spark, b, band, out, 1L, Some(bv), Some(sem))
+    val r = Admit.admitBatch(spark, b, band, out, 1L, Some(bv), Some(pq))
     // dropped intra-batch: 900002 (exact copy), 900003 (near-dup),
     // 900005 (semantic re-encode) — the lowest-id representative of each
     // group survives; nothing matches the standing corpus
@@ -165,8 +160,7 @@ class AdmitSpec extends SparkSpec {
   test("two racing cycles serialize under the admission lock: a twin split across them is admitted once") {
     import spark.implicits._
     val band = "admit_band_race"
-    val sem = "admit_sem_race"
-    dropIndexTables(band, sem)
+    dropIndexTables(band, "admit_pq_race")
     val d = Tables.load(spark, Sf, "documents").select("doc_id", "text")
     Dedup.refreshIndex(d, band, numBuckets = 8)
     val out = java.nio.file.Files.createTempDirectory("admit-race").toString
@@ -225,15 +219,15 @@ class AdmitSpec extends SparkSpec {
   test("WAL repair: a batch replayed after its appends but before its landing loses nothing and admits no duplicates") {
     import spark.implicits._
     val band = "admit_band_wal"
-    val sem = "admit_sem_wal"
-    dropIndexTables(band, sem)
+    val pq = "admit_pq_wal"
+    dropIndexTables(band, pq)
     val seedDocs = Tables.load(spark, Sf, "documents")
       .select("doc_id", "text").filter(col("doc_id") < 200)
     val seedVecs = Tables.load(spark, Sf, "embeddings")
       .withColumn("emb", expr("transform(embedding, x -> cast(x as double))"))
       .select("vec_id", "emb", "label").filter(col("vec_id") < 200)
     Dedup.refreshIndex(seedDocs, band, numBuckets = 8)
-    Ann.refreshSemanticIndex(seedVecs, sem, numBuckets = 8)
+    Ann.refreshPqIndex(seedVecs, pq)
     val out = java.nio.file.Files.createTempDirectory("admit-wal").toString
     val standing = Admit.Standing(seedDocs, Some(seedVecs))
 
@@ -249,7 +243,7 @@ class AdmitSpec extends SparkSpec {
     // no-repair fast path)
     val b1 = Seq((930001L, textB1)).toDF("doc_id", "text")
     val r1 = Admit.admitBatch(spark, b1, band, out, 1L, Some(sideVecs),
-      Some(sem), recovery = Some(standing))
+      Some(pq), recovery = Some(standing))
     assert(r1.admitted == 1, r1.toString)
 
     // simulate the crash window for batch 2: the cycle wrote its WAL and
@@ -261,7 +255,7 @@ class AdmitSpec extends SparkSpec {
     val os = fs.create(wal, true)
     os.write("2".getBytes(java.nio.charset.StandardCharsets.UTF_8)); os.close()
     Dedup.appendIndex(spark, band, b2)
-    Ann.appendSemanticIndex(spark, sem,
+    Ann.appendPqIndex(spark, pq,
       sideVecs.filter(col("vec_id") === 940001L).select("vec_id", "emb"))
 
     // WITHOUT the orphan-append repair this replay self-flags: prove the
@@ -274,7 +268,7 @@ class AdmitSpec extends SparkSpec {
     // standing state from seed ∪ landed (batch 1 only), re-screens, and
     // lands batch 2's novel doc — nothing lost, nothing duplicated
     val r2 = Admit.admitBatch(spark, b2, band, out, 2L, Some(sideVecs),
-      Some(sem), recovery = Some(standing))
+      Some(pq), recovery = Some(standing))
     assert(r2 == Admit.Report(2L, 1, 0, 0, 0, 0, 1), r2.toString)
     val landed = spark.read.parquet(out)
       .select("batch_id", "doc_id").as[(Int, Long)].collect().toSet
@@ -290,7 +284,7 @@ class AdmitSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val b3v = Seq((950002L, novelVec(931).map(_ * 0.99))).toDF("vec_id", "emb")
     val r3 = Admit.admitBatch(spark, b3, band, out, 3L, Some(b3v),
-      Some(sem), recovery = Some(standing))
+      Some(pq), recovery = Some(standing))
     assert(r3 == Admit.Report(3L, 2, 0, 0, 0, 1, 0, exactRejected = 1),
       r3.toString)
 
@@ -308,7 +302,7 @@ class AdmitSpec extends SparkSpec {
   test("admission-time decontamination rejects benchmark-overlapping docs") {
     import spark.implicits._
     val band = "admit_decon_band"
-    dropIndexTables(band, "admit_decon_sem")
+    dropIndexTables(band, "admit_decon_pq")
     val d = Tables.load(spark, Sf, "documents").select("doc_id", "text")
     val benchText = "the canary benchmark asks about copper lighthouses and " +
       "seventeen astronomers measuring quiet eclipses during winter storms"
@@ -333,7 +327,7 @@ class AdmitSpec extends SparkSpec {
 
     // with the screen: the contaminated doc is rejected BEFORE the
     // probes, the clean doc still lands, and the accounting says why
-    dropIndexTables(band, "admit_decon_sem")
+    dropIndexTables(band, "admit_decon_pq")
     Dedup.refreshIndex(d, band, numBuckets = 8)
     val out = java.nio.file.Files.createTempDirectory("admitdecon").toString
     val r = Admit.admitBatch(spark, batch, band, out, 1L,
@@ -351,7 +345,7 @@ class AdmitSpec extends SparkSpec {
   test("admission-time quality screen rejects garbage before any probe") {
     import spark.implicits._
     val band = "admit_quality_band"
-    dropIndexTables(band, "admit_quality_sem")
+    dropIndexTables(band, "admit_quality_pq")
     val d = Tables.load(spark, Sf, "documents").select("doc_id", "text")
     Dedup.refreshIndex(d, band, numBuckets = 8)
     // score 0.424 (< 0.5): 3 tokens (length term 0.024), no stopwords
@@ -400,13 +394,6 @@ class AdmitSpec extends SparkSpec {
   private def pqCycleCase(quantizer: String, band: String, pq: String): Unit = {
     import spark.implicits._
     dropIndexTables(band, pq)
-    for (side <- Seq("codebook", "meta")) {
-      spark.sql(s"DROP TABLE IF EXISTS ${pq}_$side")
-      val cbLoc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir") + s"/${pq}_$side")
-      val cbFs = cbLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (cbFs.exists(cbLoc)) cbFs.delete(cbLoc, true)
-    }
     val d = Tables.load(spark, Sf, "documents").select("doc_id", "text")
     val e = Tables.load(spark, Sf, "embeddings")
       .withColumn("emb", expr("transform(embedding, x -> cast(x as double))"))
@@ -444,13 +431,6 @@ class AdmitSpec extends SparkSpec {
     val r2 = Admit.admitBatch(spark, b2, band, out, 2L, Some(b2v),
       pqTable = Some(pq))
     assert(r2 == Admit.Report(2L, 1, 0, 0, 0, 1, 0), r2.toString)
-
-    // passing BOTH index options is a loud error, not a silent pick
-    val exBoth = intercept[IllegalArgumentException] {
-      Admit.admitBatch(spark, b2, band, out, 3L, Some(b2v),
-        semTable = Some("whatever"), pqTable = Some(pq))
-    }
-    assert(exBoth.getMessage.contains("not both"), exBoth.getMessage)
 
     // WAL repair through the PQ rebuild: simulate the crash window for a
     // batch 3 (WAL + appends landed, no landing), then replay — the

@@ -112,7 +112,7 @@ class CorpusOpsSpec extends SparkSpec {
     TextRank.refreshTextIndex(docs, t1)
     assert(key(TextRank.searchTextIndex(spark, t1, qt).collect()) == exact)
     // the postings scan is term-bucket partitioned and the broadcast
-    // panel prunes it dynamically (the _members cell-probe shape)
+    // panel prunes it dynamically (the PQ members' cell-probe shape)
     val plan = planString(TextRank.searchTextIndex(spark, t1, qt))
     assert(plan.contains("dynamicpruning"), plan.take(800))
     // additive maintenance: refresh half, append the rest — df and meta
@@ -689,17 +689,17 @@ class CorpusOpsSpec extends SparkSpec {
     assert(byOp(("pruned", "ivf")) >= 0.25 && byOp.values.forall(_ <= 1.0),
       byOp.toString)
     // the DEPLOYMENT point: hybridSearchIndexed over standing text +
-    // semantic indexes at (sparseDfFrac, nprobe) clears the same floor
+    // IVF-PQ indexes at (sparseDfFrac, nprobe) clears the same floor
     // against the same exact-fused truth
-    val (textT, vecT) = ("hybfid_text", "hybfid_sem")
+    val (textT, vecT) = ("hybfid_text", "hybfid_pq")
     TablePointer.dropAll(spark, textT, Seq("_df", "_meta", "_champ", "_cal"))
-    TablePointer.dropAll(spark, vecT, Seq("_centroids", "_members"))
+    TablePointer.dropAll(spark, vecT, Seq("_centroids", "_codebook", "_meta"))
     val docs = Tables.load(spark, Sf, "documents")
     val e = Tables.load(spark, Sf, "embeddings")
       .withColumn("emb", expr("transform(embedding, x -> cast(x as double))"))
       .select("vec_id", "emb", "label")
     TextRank.refreshTextIndex(docs, textT)
-    graft.operators.Ann.refreshSemanticIndex(e, vecT, splits = 1)
+    graft.operators.Ann.refreshPqIndex(e, vecT, splits = 1)
     val isQ = (c: org.apache.spark.sql.Column) => c % 101 === 0 && c < 1200
     val qt = docs.filter(isQ(col("doc_id")))
       .select(col("doc_id").as("q_id"),
@@ -707,7 +707,7 @@ class CorpusOpsSpec extends SparkSpec {
       .filter(length(col("term")) > 0)
     val queries = e.filter(isQ(col("vec_id"))).select("vec_id", "emb")
     val served = TextRank.hybridSearchIndexed(spark, textT, vecT, qt,
-        queries, family = "sem", nprobe = 2, sparseDfFrac = 0.10)
+        queries, nprobe = 2, sparseDfFrac = 0.10)
       .select("q_id", "doc_id").collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("doc_id"))).toSet
     val truth = TextRank.q146HybridRetrieval(spark, Sf).collect()
@@ -716,17 +716,16 @@ class CorpusOpsSpec extends SparkSpec {
     val recall = served.intersect(truth).size.toDouble / truth.size
     assert(recall >= 0.25, s"deployment recall $recall vs floor 0.25")
     TablePointer.dropAll(spark, textT, Seq("_df", "_meta", "_champ", "_cal"))
-    TablePointer.dropAll(spark, vecT, Seq("_centroids", "_members"))
+    TablePointer.dropAll(spark, vecT, Seq("_centroids", "_codebook", "_meta"))
   }
 
   test("joint hybrid calibration: the fused pair persists in _cal, auto serving reproduces it, degrades to exactness without it, and survives a sparse resweep") {
     import spark.implicits._
     import graft.operators.{Ann, TextRank}
     import graft.sources.TablePointer
-    val (textT, vecT, semT) = ("hybcal_text", "hybcal_pq", "hybcal_sem")
+    val (textT, vecT) = ("hybcal_text", "hybcal_pq")
     TablePointer.dropAll(spark, textT, Seq("_df", "_meta", "_champ", "_cal"))
     TablePointer.dropAll(spark, vecT, Seq("_centroids", "_codebook", "_meta"))
-    TablePointer.dropAll(spark, semT, Seq("_centroids", "_members"))
     val docs = Tables.load(spark, Sf, "documents")
     val e = Tables.load(spark, Sf, "embeddings")
       .withColumn("emb", expr("transform(embedding, x -> cast(x as double))"))
@@ -740,7 +739,7 @@ class CorpusOpsSpec extends SparkSpec {
     val hc = TextRank.calibrateHybridServing(spark, textT, vecT,
       targetRecall = 0.6)
     assert(TextRank.textHybridCalOf(spark, textT).contains(hc))
-    assert(hc.family == "pq" && hc.nprobe >= 1 && hc.dfFrac > 0.0 &&
+    assert(hc.nprobe >= 1 && hc.dfFrac > 0.0 &&
       hc.target == 0.6 && hc.docsAtCal == docs.count(), hc.toString)
     assert(hc.measured >= 0.6 || (hc.dfFrac == 1.0 && hc.nprobe == nlistPq),
       s"an out-of-spec sweep must persist the exactness end: $hc")
@@ -752,23 +751,12 @@ class CorpusOpsSpec extends SparkSpec {
         explode(array_distinct(slice(split(lower(trim(col("text"))), " "), 1, 6))).as("term"))
       .filter(length(col("term")) > 0)
     val queries = e.filter(isQ(col("vec_id"))).select("vec_id", "emb")
-    def run(np: Int, frac: Double, adc: Int = 64, fam: String = "pq") =
+    def run(np: Int, frac: Double, adc: Int = 64) =
       TextRank.hybridSearchIndexed(spark, textT, vecT, qt, queries,
-        family = fam, nprobe = np, adcTopC = adc, sparseDfFrac = frac)
+        nprobe = np, adcTopC = adc, sparseDfFrac = frac)
         .collect().map(_.toString).toSeq
     assert(run(0, 0.0, adc = 0) == run(hc.nprobe, hc.dfFrac, hc.adcTopC),
       "auto fused serving must reproduce the persisted triple exactly")
-
-    // a persisted pair measured on ANOTHER family must not govern this
-    // one: serving family=sem under auto degrades to its exactness end
-    Ann.refreshSemanticIndex(e, semT, splits = 1)
-    val nlistSem = spark.table(s"${phys(semT)}_centroids").count().toInt
-    def runSem(np: Int, frac: Double) =
-      TextRank.hybridSearchIndexed(spark, textT, semT, qt, queries,
-        family = "sem", nprobe = np, sparseDfFrac = frac)
-        .collect().map(_.toString).toSeq
-    assert(runSem(0, 0.0) == runSem(nlistSem, 1.0),
-      "a pq-measured pair must not silently govern sem serving")
 
     // the SPARSE resweep rewrites its own knobs without tearing the
     // fused columns (one `_cal` writer)
@@ -784,6 +772,5 @@ class CorpusOpsSpec extends SparkSpec {
       "without a fused pair auto serving must degrade toward exactness")
     TablePointer.dropAll(spark, textT, Seq("_df", "_meta", "_champ", "_cal"))
     TablePointer.dropAll(spark, vecT, Seq("_centroids", "_codebook", "_meta"))
-    TablePointer.dropAll(spark, semT, Seq("_centroids", "_members"))
   }
 }

@@ -212,59 +212,6 @@ class DedupAnnSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
-  test("materialized semantic index: two batches probe one bucketed table with no index-side exchange") {
-    import org.apache.spark.sql.functions._
-    val table = "sem_index_test"
-    for (t <- Seq(table, s"${table}_centroids", s"${table}_members")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir") + s"/$t")
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
-    val e = Tables.load(spark, Sf, "embeddings")
-      .withColumn("emb", expr("transform(embedding, x -> cast(x as double))"))
-      .select("vec_id", "emb", "label")
-    // splits = 1 pins the label-seeded configuration this test's
-    // EQUALITY assertions need: the self-contained q97 twin (semProbe)
-    // is the DuckDB-replayed shape, which is label-seeded by contract.
-    // The auto-splits default gets its own case below.
-    Ann.refreshSemanticIndex(e, table, numBuckets = 8, splits = 1)
-
-    // batch 1 (re-encodes, must flag) and batch 2 (inversions, must pass)
-    // probe the SAME standing table pair — the index is never re-assigned
-    // or re-banded between ingests
-    val b1 = e.filter(col("vec_id") % 7 === 0)
-      .withColumn("vec_id", col("vec_id") + 40000)
-      .withColumn("emb", expr("transform(emb, x -> x * 0.99)"))
-      .select("vec_id", "emb")
-    val b2 = e.filter(col("vec_id") % 11 === 0)
-      .withColumn("vec_id", col("vec_id") + 50000)
-      .withColumn("emb", expr("transform(emb, x -> -x)"))
-      .select("vec_id", "emb")
-    for (b <- Seq(b1, b2)) {
-      val fromTable = Ann.probeSemanticIndex(spark, table, b)
-      val selfContained = Ann.semProbe(e, b)
-      assert(fromTable.exceptAll(selfContained).count() == 0 &&
-        selfContained.exceptAll(fromTable).count() == 0,
-        "table-backed probe must equal the self-contained q97 path")
-    }
-    val flagged = Ann.probeSemanticIndex(spark, table, b1)
-    assert(flagged.filter(col("is_dup") =!= 1).count() == 0 &&
-      flagged.count() > 0, "every re-encoded batch vector must flag")
-
-    // co-location: force the shuffle-join path (broadcast would hide the
-    // bucketing) and assert the only (cell, band) exchange is the probe
-    // side's — the index scan is bucketed on the join keys
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val p = planString(Ann.probeSemanticIndex(spark, table, b1))
-      assert(p.contains("Bucketed: true"), p.take(600))
-      assert("Exchange hashpartitioning\\(cell".r.findAllIn(p).size == 1,
-        s"only the probe side may exchange on the cell/band keys:\n${p.take(800)}")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
-
   test("appendIndex: an admitted batch joins the standing band index without a corpus rebuild") {
     import org.apache.spark.sql.functions._
     val table = "neardup_append_test"
@@ -300,85 +247,6 @@ class DedupAnnSpec extends SparkSpec {
       assert("Exchange hashpartitioning\\(band_idx".r.findAllIn(p).size == 1,
         p.take(800))
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
-
-  test("appendSemanticIndex: appended vectors are probe-visible without corpus re-assignment") {
-    import org.apache.spark.sql.functions._
-    val table = "sem_append_test"
-    for (t <- Seq(table, s"${table}_centroids", s"${table}_members")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir") + s"/$t")
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
-    val e = Tables.load(spark, Sf, "embeddings")
-      .withColumn("emb", expr("transform(embedding, x -> cast(x as double))"))
-      .select("vec_id", "emb", "label")
-    Ann.refreshSemanticIndex(e.filter(col("vec_id") % 2 === 0), table, numBuckets = 8)
-    Ann.appendSemanticIndex(spark, table,
-      e.filter(col("vec_id") % 2 === 1).select("vec_id", "emb"))
-
-    // re-encodes of APPENDED vectors must flag against their source at
-    // cosine 1 — the append is probe-visible, centroids untouched
-    val probe = e.filter(col("vec_id") % 2 === 1 && col("vec_id") < 40)
-      .withColumn("vec_id", col("vec_id") + 90000)
-      .withColumn("emb", expr("transform(emb, x -> x * 0.99)"))
-      .select("vec_id", "emb")
-    val out = Ann.probeSemanticIndex(spark, table, probe).collect()
-    assert(out.nonEmpty)
-    out.foreach { r =>
-      assert(r.getAs[Int]("is_dup") == 1 &&
-        r.getAs[java.lang.Long]("match_vec_id") ==
-          r.getAs[Long]("vec_id") - 90000, r.toString)
-    }
-  }
-
-  test("searchSemanticIndex serves top-k neighbors from the members view") {
-    import org.apache.spark.sql.functions._
-    val table = "sem_search_test"
-    for (t <- Seq(table, s"${table}_centroids", s"${table}_members")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir") + s"/$t")
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
-    val e = Tables.load(spark, Sf, "embeddings")
-      .withColumn("emb", expr("transform(embedding, x -> cast(x as double))"))
-      .select("vec_id", "emb", "label")
-    Ann.refreshSemanticIndex(e, table, numBuckets = 8)
-
-    // re-encoded corpus vectors as queries: the source must come back
-    // as the rank-1 neighbor at cosine 1
-    val queries = e.filter(col("vec_id") < 3)
-      .withColumn("vec_id", col("vec_id") + 70000)
-      .withColumn("emb", expr("transform(emb, x -> x * 0.99)"))
-      .select("vec_id", "emb")
-    val out = Ann.searchSemanticIndex(spark, table, queries, k = 5).collect()
-    assert(out.length == 15, s"3 queries × k=5, got ${out.length}")
-    for (q <- 0L until 3L) {
-      val rows = out.filter(_.getAs[Long]("q_id") == q + 70000)
-      assert(rows.map(_.getAs[Int]("rank")).toSeq == Seq(1, 2, 3, 4, 5))
-      assert(rows.head.getAs[Long]("n_id") == q &&
-        rows.head.getAs[Double]("cosine") == 1.0,
-        s"query $q rank-1 must be its source: ${rows.head}")
-      val cos = rows.map(_.getAs[Double]("cosine")).toSeq
-      assert(cos == cos.sorted.reverse, s"cosines must be non-increasing: $cos")
-    }
-    // serving plan: the member side never shuffles — the only exchanges
-    // are the query broadcast and the per-query top-k window
-    val p = planString(Ann.searchSemanticIndex(spark, table, queries, k = 5))
-    assert(!p.contains("Exchange hashpartitioning(cell"),
-      s"member side must not shuffle on cell:\n${p.take(800)}")
-
-    // load-shape guard (VERDICT r8 #7): a corpus-sized query frame fails
-    // LOUDLY, naming the bulk probe path — never an OOM mid-broadcast
-    val ex = intercept[IllegalArgumentException] {
-      Ann.searchSemanticIndex(spark, table,
-        e.select("vec_id", "emb"), k = 5, maxQueryRows = 2)
-    }
-    assert(ex.getMessage.contains("semProbeAgainst"), ex.getMessage)
   }
 
   test("compaction trigger: appends grow per-bucket files, the refresh restores one file per bucket and re-tightens the guard") {
@@ -670,8 +538,7 @@ class DedupAnnSpec extends SparkSpec {
     // labeled in round 2: the exact 2-hop case one-hop propagation
     // geometrically cannot reach)
     val table = "labelprop_hops"
-    graft.sources.TablePointer.dropAll(spark, table,
-      Seq("_centroids", "_members"))
+    dropPqTables(table)
     def vec(deg: Double): Seq[Double] = {
       val r = math.toRadians(deg)
       Seq(math.cos(r), math.sin(r)) ++ Seq.fill(62)(0.0)
@@ -679,17 +546,17 @@ class DedupAnnSpec extends SparkSpec {
     val members = Seq(
       (1L, vec(0), "c0"), (2L, vec(50), "c0"), (3L, vec(110), "c0"))
       .toDF("vec_id", "emb", "label")
-    Ann.refreshSemanticIndex(members, table, numBuckets = 2, splits = 1)
+    Ann.refreshPqIndex(members, table, splits = 1)
     val targets = members.filter(col("vec_id") > 1L).select("vec_id", "emb")
     val labels = Seq((1L, "red")).toDF("s_id", "label")
     // ONE hop: only A labels (B's sole k=1 candidate is unlabeled A)
     val oneHop = Ann.propagateLabelsIndexed(spark, table, targets, labels,
-      k = 1, family = "sem", nprobe = 1).collect()
+      k = 1, nprobe = 1).collect()
     assert(oneHop.map(_.getAs[Long]("vec_id")).toSet == Set(2L), oneHop.mkString)
     // TWO hops: B adopts A's label in round 2 at decay² confidence
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = Ann.propagateLabelsMultiHop(spark, table, targets, labels,
-        k = 1, rounds = 2, decay = 0.5, family = "sem", nprobe = 1)
+        k = 1, rounds = 2, decay = 0.5, nprobe = 1)
     val rows = out.collect().map(r => r.getAs[Long]("vec_id") ->
       (r.getAs[String]("pred_label"), r.getAs[Double]("confidence"),
         r.getAs[Int]("round"))).toMap
@@ -722,8 +589,7 @@ class DedupAnnSpec extends SparkSpec {
         assert(r.getAs[Int]("round") == 2 &&
           r.getAs[Double]("confidence") == 0.25, r.toString)
     }
-    graft.sources.TablePointer.dropAll(spark, table,
-      Seq("_centroids", "_members"))
+    dropPqTables(table)
   }
 
   test("q137 contrastive pairs: every anchor's positive is its planted twin; negatives stay under eps") {
@@ -774,7 +640,7 @@ class DedupAnnSpec extends SparkSpec {
   test("mineHardNegatives: the index-backed twin keeps q130's contract over both standing families") {
     import org.apache.spark.sql.functions._
     // round 12 (VERDICT r11 #4): same threshold-split + rank seam as
-    // q130, candidates from the STANDING indexes instead of the brute
+    // q130, candidates from the STANDING index instead of the brute
     // cross product — built on the planted re-encode corpus so the
     // exclusion audit genuinely bites
     val corpus = Ann.embCorpus(spark, Sf)
@@ -787,51 +653,44 @@ class DedupAnnSpec extends SparkSpec {
     dropPqTables(pqT)
     Ann.refreshPqIndex(corpus.select("vec_id", "emb", "label"), pqT,
       quantizer = "kmeans")
-    val semT = "hn_sem_test"
-    dropWarehouseTables(semT, s"${semT}_centroids", s"${semT}_members")
-    Ann.refreshSemanticIndex(corpus.withColumn("label", lit("x")), semT,
-      numBuckets = 8)
-
-    for ((family, table) <- Seq("pq" -> pqT, "sem" -> semT)) {
-      val rows = Ann.mineHardNegatives(spark, table, queries,
-        eps = 0.99, k = 10, family = family, nprobe = 8).collect()
-      val byQ = rows.groupBy(_.getAs[Long]("q_id"))
-      assert(byQ.nonEmpty, family)
-      byQ.foreach { case (q, rs) =>
-        val ordered = rs.sortBy(_.getAs[Int]("rank"))
-        assert(ordered.map(_.getAs[Int]("rank")).toSeq == (1 to rs.length),
-          s"$family q $q ranks")
-        val cosines = ordered.map(_.getAs[Double]("cosine"))
-        assert(cosines.zip(cosines.tail).forall { case (a, b) => a >= b },
-          s"$family q $q order")
-        assert(cosines.forall(_ < 0.99), s"$family q $q leaked a near-dup")
-        assert(!rs.exists(_.getAs[Long]("n_id") == q), s"$family q $q self")
-        assert(rs.map(_.getAs[Long]("n_dups_excluded")).distinct.length == 1)
-      }
-      // query 0's planted re-encode (vec 10000, cosine ≈ 1) must be
-      // surfaced by the index, excluded, and counted
-      val q0 = byQ(0L)
-      assert(!q0.exists(_.getAs[Long]("n_id") == 10000L),
-        s"$family planted dup leaked")
-      assert(q0.head.getAs[Long]("n_dups_excluded") >= 1L,
-        s"$family exclusion not counted")
-      // recall floor vs the exact top-10: the index surfaces a usable
-      // fraction of the TRUE hardest negatives (these synthetic vectors
-      // have no cluster geometry, so nprobe bounds absolute recall —
-      // the gate is a floor, not equality)
-      val overlap = byQ.map { case (q, rs) =>
-        rs.map(_.getAs[Long]("n_id")).toSet.intersect(exact(q)).size.toDouble /
-          exact(q).size
-      }
-      val mean = overlap.sum / overlap.size
-      assert(mean >= 0.2, s"$family mean recall vs exact negatives: $mean")
+    val rows = Ann.mineHardNegatives(spark, pqT, queries,
+      eps = 0.99, k = 10, nprobe = 8).collect()
+    val byQ = rows.groupBy(_.getAs[Long]("q_id"))
+    assert(byQ.nonEmpty)
+    byQ.foreach { case (q, rs) =>
+      val ordered = rs.sortBy(_.getAs[Int]("rank"))
+      assert(ordered.map(_.getAs[Int]("rank")).toSeq == (1 to rs.length),
+        s"q $q ranks")
+      val cosines = ordered.map(_.getAs[Double]("cosine"))
+      assert(cosines.zip(cosines.tail).forall { case (a, b) => a >= b },
+        s"q $q order")
+      assert(cosines.forall(_ < 0.99), s"q $q leaked a near-dup")
+      assert(!rs.exists(_.getAs[Long]("n_id") == q), s"q $q self")
+      assert(rs.map(_.getAs[Long]("n_dups_excluded")).distinct.length == 1)
     }
+    // query 0's planted re-encode (vec 10000, cosine ≈ 1) must be
+    // surfaced by the index, excluded, and counted
+    val q0 = byQ(0L)
+    assert(!q0.exists(_.getAs[Long]("n_id") == 10000L),
+      "planted dup leaked")
+    assert(q0.head.getAs[Long]("n_dups_excluded") >= 1L,
+      "exclusion not counted")
+    // recall floor vs the exact top-10: the index surfaces a usable
+    // fraction of the TRUE hardest negatives (these synthetic vectors
+    // have no cluster geometry, so nprobe bounds absolute recall —
+    // the gate is a floor, not equality)
+    val overlap = byQ.map { case (q, rs) =>
+      rs.map(_.getAs[Long]("n_id")).toSet.intersect(exact(q)).size.toDouble /
+        exact(q).size
+    }
+    val mean = overlap.sum / overlap.size
+    assert(mean >= 0.2, s"mean recall vs exact negatives: $mean")
 
     // the lazy body's plan: candidates only ever ride broadcast joins —
     // never a corpus-sized shuffle join or a cartesian (the q112Lazy
     // plan-assert pattern; the public entry pins its result eagerly)
     val (lazyRes, pin) = Ann.mineHardNegativesLazy(spark, pqT, queries,
-      0.99, 10, "pq", 8, 64, 16)
+      0.99, 10, 8, 64, 16)
     // unpersist FIRST: a pinned candidate frame would hide the join
     // shapes behind an InMemoryTableScan and make the assertion vacuous
     pin.unpersist(false)
@@ -1112,8 +971,8 @@ class DedupAnnSpec extends SparkSpec {
         s"an inverted vector must not flag: $r")
     }
     // and the self-contained query equals the table-backed production
-    // path over the same state (the q97↔probeSemanticIndex relationship,
-    // PQ family edition) — exercised via the standing-index test above
+    // path over the same state — exercised via the standing-index test
+    // above
   }
 
   private def dropPqTables(table: String): Unit =
@@ -1185,8 +1044,7 @@ class DedupAnnSpec extends SparkSpec {
     assert(passed.forall(_.getAs[Int]("is_dup") == 0),
       "inverted vectors must not flag")
     // the table-backed probe equals the self-contained q112 oracle query
-    // over the same batch and the same (materialized vs inline) state —
-    // the q97↔probeSemanticIndex relationship, PQ family edition
+    // over the same batch and the same (materialized vs inline) state
     val fromTable = Ann.probePqIndex(spark, table, b1.unionByName(b2),
       verify = "dec")
     val selfContained = Ann.q112PqProbe(spark, Sf)
@@ -1207,7 +1065,7 @@ class DedupAnnSpec extends SparkSpec {
       Ann.searchPqIndex(spark, table, e.select("vec_id", "emb"),
         maxQueryRows = 2)
     }
-    assert(ex.getMessage.contains("probeSemanticIndex"), ex.getMessage)
+    assert(ex.getMessage.contains("semProbe"), ex.getMessage)
   }
 
   test("the nlist knob: splits > 1 multiplies the cells and the probe contract still holds") {
@@ -1364,24 +1222,6 @@ class DedupAnnSpec extends SparkSpec {
       assert(out.nonEmpty && out.forall(_.getAs[Int]("is_dup") == 1))
     }
 
-    // the semantic index shares the rule: same auto nlist, probe green
-    val semTable = "sem_auto_test"
-    for (t <- Seq(semTable, s"${semTable}_centroids", s"${semTable}_members")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir") + s"/$t")
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
-    Ann.refreshSemanticIndex(e, semTable, numBuckets = 8)
-    assert(spark.table(s"${phys(semTable)}_centroids").count() ==
-      nLabels * Ann.autoSplits(e.count(), nLabels))
-    val probe = e.filter(col("vec_id") < 40)
-      .withColumn("vec_id", col("vec_id") + 90000)
-      .withColumn("emb", expr("transform(emb, x -> x * 0.99)"))
-      .select("vec_id", "emb")
-    val out = Ann.probeSemanticIndex(spark, semTable, probe).collect()
-    assert(out.nonEmpty && out.forall(_.getAs[Int]("is_dup") == 1))
   }
 
   test("appendPqIndex: appended vectors serve and flag without re-encoding; codebook and centroids untouched") {
@@ -1762,25 +1602,6 @@ class DedupAnnSpec extends SparkSpec {
     assert(spark.catalog.tableExists(s"default.${table}__g2"),
       "gen 2 must survive its grace period")
 
-    // the SEMANTIC family shares the protocol: a search resolved on its
-    // generation completes bit-equal while the next one lands
-    val semT = "sem_reader_iso"
-    graft.sources.TablePointer.dropAll(spark, semT,
-      Seq("_centroids", "_members"))
-    Ann.refreshSemanticIndex(e.filter(col("vec_id") % 2 === 0), semT,
-      numBuckets = 8)
-    val semBaseline = Ann.searchSemanticIndex(spark, semT, queries, k = 5)
-      .collect()
-    val semOldReader = Ann.searchSemanticIndex(spark, semT, queries, k = 5)
-    Ann.refreshSemanticIndex(e, semT, numBuckets = 8)
-    assert(graft.sources.TablePointer
-      .generationOf(phys(semT)) == 2, phys(semT))
-    assert(semOldReader.collect().toSeq.map(_.toString) ==
-      semBaseline.toSeq.map(_.toString),
-      "a sem reader holding the old resolution must see the old snapshot")
-    assert(Ann.searchSemanticIndex(spark, semT, queries, k = 5).collect()
-      .exists(_.getAs[Long]("n_id") % 2 == 1),
-      "a post-swap sem reader must see the new generation's members")
   }
 
   test("band reader isolation: probes resolved before a refresh complete on their own generation") {

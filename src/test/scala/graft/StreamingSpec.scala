@@ -192,8 +192,7 @@ class StreamingSpec extends SparkSpec {
     val e = Tables.load(spark, Sf, "embeddings")
       .withColumn("emb", expr("transform(embedding, x -> cast(x as double))"))
       .select("vec_id", "emb", "label")
-    // standing state, built ONCE outside the stream (a production run
-    // reads the refreshSemanticIndex table pair instead)
+    // standing state, built ONCE outside the stream
     val (centroids, guarded) = Ann.semanticIndexFrames(e)
     val c = centroids.cache()
     val g = guarded.cache()
@@ -232,15 +231,11 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     import graft.operators.{Ann, Dedup}
     val band = "stream_admit_band"
-    val sem = "stream_admit_sem"
+    val pq = "stream_admit_pq"
     val text = "stream_admit_text"
-    for (t <- Seq(band, sem, s"${sem}_centroids", s"${sem}_members")) {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir") + s"/$t")
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
+    graft.sources.TablePointer.dropAll(spark, band, Dedup.BandSuffixes)
+    graft.sources.TablePointer.dropAll(spark, pq,
+      Seq("_centroids", "_codebook", "_meta"))
     graft.sources.TablePointer.dropAll(spark, text,
       Seq("_df", "_meta", "_champ", "_cal"))
     val d = Tables.load(spark, Sf, "documents").select("doc_id", "text")
@@ -249,7 +244,7 @@ class StreamingSpec extends SparkSpec {
         "transform(embedding, x -> cast(x as double))"))
       .select("vec_id", "emb", "label")
     Dedup.refreshIndex(d, band, numBuckets = 8)
-    Ann.refreshSemanticIndex(e, sem, numBuckets = 8)
+    Ann.refreshPqIndex(e, pq)
     graft.operators.TextRank.refreshTextIndex(d, text)
 
     val textA = "entirely fresh streaming prose about quantum marble " +
@@ -271,7 +266,7 @@ class StreamingSpec extends SparkSpec {
     // and the REFRESHED state must keep screening later batches
     val q = EventStreams.admissionQuery(
       input.toDF.toDF("doc_id", "text"), band, out, ckpt,
-      Some(sideVecs), Some(sem),
+      Some(sideVecs), Some(pq),
       recovery = Some(graft.Admit.Standing(d, Some(e))),
       maxFilesPerBucket = 1,
       textTable = Some(text))
@@ -304,11 +299,13 @@ class StreamingSpec extends SparkSpec {
     val exa = spark.read.parquet(s"$out/_admit_reports")
       .select("batch_id", "exact_rejected").as[(Int, Long)].collect().toMap
     assert(exa == Map(0 -> 0L, 1 -> 2L), exa.toString)
-    // the compaction ran: both index tables are back to one file per
-    // bucket even though two admitting micro-batches appended to them
-    for (t <- Seq(phys(band), phys(sem)))
-      assert(graft.sources.Ingest.bucketFileCounts(spark, t).values.max == 1,
-        s"$t not compacted: ${graft.sources.Ingest.bucketFileCounts(spark, t)}")
+    // the compaction ran: the band table is back to one file per bucket
+    // and the cell-partitioned PQ member table to one file per cell even
+    // though two admitting micro-batches appended to them
+    assert(graft.sources.Ingest.bucketFileCounts(spark, phys(band)).values.max == 1,
+      s"$band not compacted: ${graft.sources.Ingest.bucketFileCounts(spark, phys(band))}")
+    assert(graft.sources.Ingest.partitionFileCounts(spark, phys(pq)).values.max == 1,
+      s"$pq not compacted: ${graft.sources.Ingest.partitionFileCounts(spark, phys(pq))}")
     // the standing BM25 index rode the same cycles (round 14 third
     // pass): both admitted prose docs are retrieval-servable after the
     // stream, the rejected verbatim copy's id never entered the
@@ -365,9 +362,9 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val q = EventStreams.admissionQuery(
       input.toDF.toDF("doc_id", "text"), band, out, ckpt,
-      Some(sideVecs), semTable = None,
+      Some(sideVecs), Some(pq),
       recovery = Some(graft.Admit.Standing(d, Some(e.select("vec_id", "emb")))),
-      maxFilesPerBucket = 1, pqTable = Some(pq))
+      maxFilesPerBucket = 1)
     try {
       // micro-batch 0: doc A novel on both screens — admitted
       input.addData((820001L, textA))
