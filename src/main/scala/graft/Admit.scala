@@ -111,6 +111,17 @@ object Admit {
   /** Locks older than this are crash debris ([[Pipeline]]'s bound). */
   val DefaultStaleAfterMs: Long = 6 * 60 * 60 * 1000L
 
+  /** How long a standing-state writer queues on the `.admit-running`
+    * lock before failing loudly — an HOUR, not the 10-minute withLock
+    * default (review r12): the other side of the serialization can
+    * legitimately hold the lock through a long kmeans refresh or a large
+    * batch's screens, and a writer crashing after its caller prepared
+    * the work is the expensive way to lose the queue position. Shared by
+    * every admission-lock writer ([[admitBatch]], the recalibrations,
+    * [[Curate.refreshStandingIndexes]]).
+    */
+  val LockWaitMs: Long = 60 * 60 * 1000L
+
   private def walPath(outDir: String) = new Path(s"$outDir/_admit_wal")
 
   private def readWal(spark: SparkSession, outDir: String): Option[Long] = {
@@ -169,17 +180,13 @@ object Admit {
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
         graft.sources.TablePointer.resolve(spark, bandTable)))
       .bucketSpec.map(_.numBuckets).getOrElse(32)
-    // the tokenizer mode carries over (round 16 — the text family's
-    // rule applied to the band family: a robust-mode index rebuilt
-    // under the default would fragment its own shingles), and the
-    // CALIBRATED threshold carries too — refreshIndex copies the
+    // the CALIBRATED threshold carries over — refreshIndex copies the
     // previous generation's `_meta` knob row forward on an uncalibrated
     // refresh (ADVICE r15, the medium finding: a WAL repair must not
     // silently revert auto probes to the historical default), keeping
     // its original docs_at_cal anchor so the post-incident drift is
     // visible until recalibrateBandScreen or a calibrated refresh
-    Dedup.refreshIndex(docs, bandTable, numBuckets = numBuckets,
-      tokMode = Dedup.bandTokModeOf(spark, bandTable))
+    Dedup.refreshIndex(docs, bandTable, numBuckets = numBuckets)
     for ((vecs, pq) <- embeddings.zip(pqTable)) {
       val landedVecs = landedDocs.map(ld =>
         vecs.join(ld.select(col("doc_id").as("vec_id")), "vec_id")
@@ -212,10 +219,7 @@ object Admit {
         .getTableMetadata(
           org.apache.spark.sql.catalyst.TableIdentifier(s"${phys}_df"))
         .bucketSpec.map(_.numBuckets).getOrElse(32)
-      // the tokenizer mode carries over too (round 15): a robust-mode
-      // index rebuilt under the default would fragment its postings
-      operators.TextRank.refreshTextIndex(docs, t, numBuckets = nb,
-        tokMode = operators.TextRank.textTokModeOf(spark, phys))
+      operators.TextRank.refreshTextIndex(docs, t, numBuckets = nb)
     }
   }
 
@@ -232,10 +236,10 @@ object Admit {
     * calibrated tier the moment the `_cal` lands.
     */
   def recalibrateTextServing(spark: SparkSession, textTable: String,
-                             outDir: String, targetRecall: Double,
-                             lockWaitMs: Long = 60 * 60 * 1000L): operators.TextRank.TextCal =
+                             outDir: String,
+                             targetRecall: Double): operators.TextRank.TextCal =
     Locks.withLock(spark, s"$outDir/.admit-running", DefaultStaleAfterMs,
-        maxWaitMs = lockWaitMs) {
+        maxWaitMs = LockWaitMs) {
       operators.TextRank.calibrateTextServing(spark, textTable, targetRecall)
     }
 
@@ -249,16 +253,14 @@ object Admit {
     * the calibration's anchor, or after a WAL repair carried an old
     * knob forward. `docs` must be the corpus the index currently holds
     * (the calibration plants its twins from it — the
-    * [[operators.Dedup.calibrateBandThreshold]] contract); the index's
-    * persisted tokenizer mode is preserved and the fresh docs_at_cal
-    * anchor lands with the new threshold.
+    * [[operators.Dedup.calibrateBandThreshold]] contract); the fresh
+    * docs_at_cal anchor lands with the new threshold.
     */
   def recalibrateBandScreen(spark: SparkSession, bandTable: String,
                             outDir: String, docs: DataFrame,
-                            targetRecall: Double,
-                            lockWaitMs: Long = 60 * 60 * 1000L): (Int, Double) =
+                            targetRecall: Double): (Int, Double) =
     Locks.withLock(spark, s"$outDir/.admit-running", DefaultStaleAfterMs,
-        maxWaitMs = lockWaitMs) {
+        maxWaitMs = LockWaitMs) {
       Dedup.calibrateBandThreshold(spark, bandTable, docs,
         targetRecall = targetRecall)
     }
@@ -269,10 +271,9 @@ object Admit {
     * `_meta` knob row alone, and runs under the admission lock.
     */
   def recalibratePqScreen(spark: SparkSession, pqTable: String,
-                          outDir: String, targetRecall: Double,
-                          lockWaitMs: Long = 60 * 60 * 1000L): (Int, Double) =
+                          outDir: String, targetRecall: Double): (Int, Double) =
     Locks.withLock(spark, s"$outDir/.admit-running", DefaultStaleAfterMs,
-        maxWaitMs = lockWaitMs) {
+        maxWaitMs = LockWaitMs) {
       Ann.calibratePqScreenNprobe(spark, pqTable, targetRecall)
     }
 
@@ -388,8 +389,6 @@ object Admit {
     // ids — every doc has a hash key; band rows miss sub-3-word docs).
     // −1 = never calibrated.
     val bandMeta = Dedup.bandMetaOf(spark, bandPhys)
-    rows += (("band", "tok_mode_robust",
-      if (bandMeta.exists(_.tokMode == "robust")) 1.0 else 0.0))
     rows += (("band", "cal_docs_at_cal",
       bandMeta.map(_.docsAtCal.toDouble).getOrElse(-1.0)))
     rows += (("band", "cal_docs_drift",
@@ -506,15 +505,7 @@ object Admit {
                  eps: Double = 0.99,
                  recovery: Option[Standing] = None,
                  benchmarkGrams: Option[DataFrame] = None,
-                 bloomMBits: Int = 20,
                  staleAfterMs: Long = DefaultStaleAfterMs,
-                 // an HOUR, aligned with Curate.refreshStandingIndexes
-                 // (review r12, second pass): the other side of the same
-                 // serialization can legitimately hold the lock through a
-                 // long kmeans refresh, and a default-configured cycle
-                 // crashing after its caller prepared the batch is the
-                 // expensive way to lose the queue position
-                 lockWaitMs: Long = 60 * 60 * 1000L,
                  qualityFloor: Double = -1.0,
                  // round 14 third pass: the standing BM25 index joins
                  // the cycle's maintained state — admitted docs append
@@ -526,7 +517,7 @@ object Admit {
                  // the band/hash/vector screens.
                  textTable: Option[String] = None): Report =
     Locks.withLockClaim(spark, s"$outDir/.admit-running", staleAfterMs,
-      maxWaitMs = lockWaitMs) { claim =>
+      maxWaitMs = LockWaitMs) { claim =>
       // the width rule (graft.Tuning, VERDICT r9 #6): admission is
       // open-ended-input production code — its screens explode the
       // batch into grams/bands, so the shuffle width must scale with
@@ -537,7 +528,7 @@ object Admit {
         Tuning.scaledShufflePartitionsForFrame(spark, docs)) {
         admitBatchLocked(spark, docs, bandTable, outDir, batchId,
           embeddings, pqTable, eps, recovery,
-          benchmarkGrams, bloomMBits, qualityFloor, claim, textTable)
+          benchmarkGrams, qualityFloor, claim, textTable)
       }
     }
 
@@ -555,7 +546,7 @@ object Admit {
                                           pqTable: Option[String] = None,
                                           eps: Double = 0.99): Report =
     admitBatchLocked(spark, docs, bandTable, outDir, batchId, embeddings,
-      pqTable, eps, None, None, 20, -1.0, claim, None)
+      pqTable, eps, None, None, -1.0, claim, None)
 
   private def admitBatchLocked(spark: SparkSession, docs: DataFrame,
                                bandTable: String, outDir: String, batchId: Long,
@@ -563,7 +554,6 @@ object Admit {
                                pqTable: Option[String], eps: Double,
                                recovery: Option[Standing],
                                benchmarkGrams: Option[DataFrame],
-                               bloomMBits: Int,
                                qualityFloor: Double,
                                claim: Locks.Claim,
                                textTable: Option[String]): Report = {
@@ -623,15 +613,13 @@ object Admit {
     // semantic twins (standing-centroid cells, in-cell sign-band
     // self-join) keep their lowest-id representative. All three kernels
     // run cache-free: this is per-micro-batch code.
-    // ONE `_meta` read serves the whole cycle: the calibrated threshold
-    // AND the index's tokenizer mode (round 16 — the intra-batch screens
-    // must normalize/sign the way the standing screens do, or a
-    // punctuated twin PAIR inside one batch would slip the intra pass
-    // that the standing probe would have caught a batch later)
-    val bandMeta = Dedup.bandMetaOf(spark, bandTable)
-    val bandThreshold = bandMeta.map(_.threshold).filter(_ >= 1)
+    // ONE `_meta` read serves the whole cycle's threshold. The intra-
+    // batch screens normalize/sign under the standing tokenizer (round
+    // 16 — or a punctuated twin PAIR inside one batch would slip the
+    // intra pass that the standing probe would catch a batch later).
+    val bandThreshold = Dedup.bandThresholdOf(spark, bandTable)
       .getOrElse(Dedup.DefaultBandThreshold)
-    val bandTok = bandMeta.map(_.tokMode).getOrElse("default")
+    val bandTok = operators.TextRank.StandingTok
     val wExact = org.apache.spark.sql.expressions.Window
       .partitionBy(md5(Dedup.normTextFor(col("text"), bandTok)))
       .orderBy(col("doc_id"))
@@ -692,8 +680,9 @@ object Admit {
         case Some(bg) =>
           val grams = operators.Curation.gramHashes(postExact)
           val contaminated = operators.Curation.bloomScreened(grams,
-              operators.Curation.bloomBuild(bg, "md5", bloomMBits),
-              "md5", bloomMBits)
+              operators.Curation.bloomBuild(bg, "md5",
+                operators.Curation.DefaultBloomMBits),
+              "md5", operators.Curation.DefaultBloomMBits)
             .filter(col("scr") === 1)
             .join(bg, Seq("gh")).select("doc_id").distinct()
           val p = postExact.join(contaminated, Seq("doc_id"), "left_anti")

@@ -31,6 +31,9 @@ object Curate {
                      manifestPacks: Long = -1L, afterClassifier: Long = -1L,
                      bpeMergesLearned: Long = -1L, indexedDocs: Long = -1L)
 
+  /** SemDeDup's cosine threshold for the `semanticDedup` stage. */
+  private val SemanticEps = 0.99
+
   /** `packShards` is the packing-parallelism knob (VERDICT r8 #5): the
     * pack window partitions by (split, lang, shard) with `shard = doc_id
     * % packShards`, so at 100 TB the per-(split, lang) packing fan-out
@@ -41,7 +44,6 @@ object Curate {
           qualityFloor: Double = 0.5,
           substringCut: Boolean = false,
           semanticDedup: Boolean = false,
-          semanticEps: Double = 0.99,
           packShards: Int = 32,
           trainManifest: Boolean = false,
           manifestShards: Int = 16,
@@ -196,7 +198,7 @@ object Curate {
             .withColumn("emb", expr("transform(embedding, x -> cast(x as double))"))
             .select("vec_id", "emb", "label")
             .join(deduped.select(col("doc_id").as("vec_id")), "vec_id")
-          val droppedSem = Ann.semDedup(vecs, semanticEps, verify = "float")
+          val droppedSem = Ann.semDedup(vecs, SemanticEps, verify = "float")
             .filter(col("kept") === 0)
             .select(col("vec_id").as("doc_id"))
           val sd = deduped.join(droppedSem, Seq("doc_id"), "left_anti")
@@ -336,28 +338,18 @@ object Curate {
     * catalog-unknown table directory — both are only safe while no
     * admission cycle is mid-flight, so a handoff racing a cycle WAITS
     * for it (and a cycle arriving mid-handoff waits in turn).
-    * `lockDir` must be the admission outDir those cycles pass.
-    *
-    * `lockWaitMs` bounds how long the handoff queues behind a live
-    * cycle before failing loudly — the default is an HOUR, not the
-    * 10-minute withLock default (review r12): the serialization's whole
-    * point is that both sides can legitimately hold the lock for long
-    * stretches (a large batch's screens + landing on one side, a kmeans
-    * PQ refresh that grows with √N-many Lloyd cells on the other), and
-    * a handoff that crashes after the entire curation pipeline already
-    * ran is the expensive way to lose the race. Admission cycles
-    * queueing behind a LONG handoff raise their own `lockWaitMs`
-    * ([[Admit.admitBatch]]'s knob) to match.
+    * `lockDir` must be the admission outDir those cycles pass. The
+    * handoff queues at most [[Admit.LockWaitMs]] behind a live cycle,
+    * the same bound the cycles queue behind a handoff.
     *
     * `corpus` is (doc_id, text, …); `vecs` is (vec_id, emb, …) aligned
     * with doc_id. Returns the indexed doc count.
     */
   def refreshStandingIndexes(spark: SparkSession, corpus: DataFrame,
                              vecs: DataFrame, indexPrefix: String,
-                             lockDir: String,
-                             lockWaitMs: Long = 60 * 60 * 1000L): Long =
+                             lockDir: String): Long =
     Locks.withLockClaim(spark, s"$lockDir/.admit-running",
-      Admit.DefaultStaleAfterMs, maxWaitMs = lockWaitMs) { claim =>
+      Admit.DefaultStaleAfterMs, maxWaitMs = Admit.LockWaitMs) { claim =>
       // queue-time parity with the admission report (round 13): a
       // handoff that waited out a long cycle should say so, not look
       // like a slow refresh
@@ -371,15 +363,8 @@ object Curate {
       // index's own recall curve, the boundary threshold meeting 0.75
       // recall at that tier lands in `_meta`, and every day-2 cycle's
       // probeIndex / intra-batch screen reads it.
-      // tokMode = robust is the SHIPPED configuration (round 16 —
-      // VERDICT r15 #1): on punctuation-free text it is bit-identical
-      // to the default kernel; on real text it stops `word,`-perturbed
-      // re-submissions from escaping the exact and band screens
-      // (TextRehearsal --tok measured that class rewriting the text
-      // ranking wholesale). The mode persists in `_meta`, so every
-      // day-2 probe/append/rebuild tokenizes the same way.
       graft.operators.Dedup.refreshIndex(kept, s"${indexPrefix}_band",
-        screenRecallTarget = 0.75, tokMode = "robust")
+        screenRecallTarget = 0.75)
       if (!vecs.isEmpty)
         // the admission nprobe is CALIBRATED at handoff time (round 13 —
         // VERDICT r12 #2): the smallest nprobe meeting a 0.99 held-out
@@ -395,11 +380,9 @@ object Curate {
       // knobs (df-threshold, champion depth) are CALIBRATED here like
       // every other screen/serving knob: smallest values meeting 0.9
       // recall@10 against the exact ranking, persisted in `_cal`, read
-      // by the serving paths' auto sentinels. Robust tokenizer mode —
-      // the band family's rule above, for the same reason (a punctuated
-      // corpus fragments the default vocabulary 4×, TextRehearsal --tok)
+      // by the serving paths' auto sentinels.
       graft.operators.TextRank.refreshTextIndex(kept, s"${indexPrefix}_text",
-        serveRecallTarget = 0.9, tokMode = "robust")
+        serveRecallTarget = 0.9)
       // the JOINT hybrid pair (round 16 — VERDICT r15 #5): with both
       // arms' indexes landed, the fused deployment knob is calibrated
       // here too — smallest (nprobe, dfFrac) meeting 0.7 fused

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *
   *   - fused recall@10 of the AUTO-served ranking against the
   *     fused-exact truth on the q150 panel (held out from the
-  *     calibration panel, which uses the nPanel smallest doc ids);
+  *     calibration panel, which uses the PanelDocs = 12 smallest doc ids);
   *   - the serving p50 over repeated auto calls (the deployment read);
   *   - the multi-hop label-propagation price (VERDICT r15 #6):
   *     [[graft.operators.Ann.propagateLabelsMultiHop]] rounds over the
@@ -62,8 +62,7 @@ object ServeRehearsal {
       // handoff lands them (robust tokenizer, text serving at 0.9,
       // trained PQ at screen 0.99) + the round-16 fused pair at 0.7
       val (_, tBuild) = timed {
-        TextRank.refreshTextIndex(docs, textT, serveRecallTarget = 0.9,
-          tokMode = "robust")
+        TextRank.refreshTextIndex(docs, textT, serveRecallTarget = 0.9)
         Ann.refreshPqIndex(e, pqT, quantizer = "kmeans",
           screenRecallTarget = 0.99)
       }

@@ -454,8 +454,8 @@ object Ann {
     * in `n_dups_excluded` (the audit column — a near-dup leaking into
     * the negatives is a false negative that corrupts a contrastive
     * loss), the survivors re-rank, and the top-`k` per query ship.
-    * `dupHeadroom` extra candidates are retrieved so excluding a
-    * query's dups cannot starve its negative set.
+    * [[HardNegativeHeadroom]] extra candidates are retrieved so
+    * excluding a query's dups cannot starve its negative set.
     *
     * Differences from the oracle query, by construction: candidates
     * (and therefore the dup count) are those the index SURFACES —
@@ -464,19 +464,22 @@ object Ann {
     * the scan touches nprobe cells' code rows instead of the corpus.
     * Self-matches are already excluded by the read paths. Shape: the
     * searches broadcast query-sized frames only (their serving guard),
-    * the candidate frame is pinned once (|Q| × (k + dupHeadroom) rows)
+    * the candidate frame is pinned once (|Q| × (k + headroom) rows)
     * so the dup rollup and the ranking share one index pass, and the
     * returned frame is batch-sized and eagerly pinned (the q112
     * in-query free discipline — the harnesses sweep result pins).
     */
   def mineHardNegatives(s: SparkSession, table: String, queries: DataFrame,
                         eps: Double = 0.99, k: Int = 10, nprobe: Int = 3,
-                        adcTopC: Int = 64, dupHeadroom: Int = 16): DataFrame = {
+                        adcTopC: Int = 64): DataFrame = {
     val (res, pin) = mineHardNegativesLazy(s, table, queries, eps, k,
-      nprobe, adcTopC, dupHeadroom)
+      nprobe, adcTopC)
     try res.localCheckpoint(true)
     finally pin.unpersist(false)
   }
+
+  /** Extra candidates [[mineHardNegatives]] retrieves per query. */
+  private val HardNegativeHeadroom = 16
 
   /** [[mineHardNegatives]] without the eager result pin — the lazy body
     * DedupAnnSpec plan-asserts (the q112Lazy pattern: a checkpointed
@@ -485,9 +488,9 @@ object Ann {
     */
   private[graft] def mineHardNegativesLazy(s: SparkSession, table: String,
       queries: DataFrame, eps: Double, k: Int, nprobe: Int,
-      adcTopC: Int, dupHeadroom: Int): (DataFrame, DataFrame) = {
+      adcTopC: Int): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    val cand = searchPqIndex(s, table, queries, k + dupHeadroom, nprobe,
+    val cand = searchPqIndex(s, table, queries, k + HardNegativeHeadroom, nprobe,
       adcTopC).persist()
     val dups = cand.filter(col("cosine") >= eps)
       .groupBy("q_id").agg(count(lit(1)).as("n_dups_excluded"))
@@ -2825,6 +2828,9 @@ object Ann {
       .localCheckpoint(true)
   }
 
+  /** The top of [[calibratePqScreenNprobe]]'s nprobe sweep. */
+  private val MaxScreenNprobe = 8
+
   /** Derive the admission nprobe from a target screen recall (round 13
     * — VERDICT r12 #2): sweep nprobe upward from 1 against a held-out
     * re-encode sample of the index's own members, pick the SMALLEST
@@ -2833,15 +2839,14 @@ object Ann {
     * [[probePqIndex]]'s auto default (nprobe = 0) then reads it, so
     * every admission cycle runs at a knob the index's own recall
     * artifact justified rather than a hand-set constant. When even
-    * `maxNprobe` misses the target, maxNprobe is persisted with its
+    * [[MaxScreenNprobe]] misses the target, it is persisted with its
     * measured recall — the residual is then the persisted target's
-    * documented complement, never a silent choice. Cost: ≤ maxNprobe
-    * batch-sized probe runs, paid once per refresh.
+    * documented complement, never a silent choice. Cost: ≤
+    * MaxScreenNprobe batch-sized probe runs, paid once per refresh.
     */
   def calibratePqScreenNprobe(s: SparkSession, table0: String,
                               targetRecall: Double = 0.99,
                               nSample: Int = 100,
-                              maxNprobe: Int = 8,
                               eps: Double = 0.99): (Int, Double) = {
     // resolve ONCE: the sweep's probes and the meta write must target
     // the same generation (refreshPqIndex passes the staged physical
@@ -2852,25 +2857,25 @@ object Ann {
       val n = probes.count()
       // mirror pqScreenRecall's guard (ADVICE r13): an empty probe set
       // would make every recall 0/0 = NaN, every `>= target` false, and
-      // silently persist maxNprobe with a NaN measured recall
+      // silently persist MaxScreenNprobe with a NaN measured recall
       require(n > 0, s"calibration probe set for $table is empty — " +
         "the index has no members to re-encode against")
       var np = 1
       var recall = 0.0
       var done = false
-      while (np <= maxNprobe && !done) {
+      while (np <= MaxScreenNprobe && !done) {
         val flagged = probePqIndex(s, table, probes, eps, np)
           .filter(col("is_dup") === 1).count()
         recall = flagged.toDouble / n
-        if (recall >= targetRecall || np == maxNprobe) done = true
+        if (recall >= targetRecall || np == MaxScreenNprobe) done = true
         else np += 1
       }
       (np, recall)
     } finally graft.Frames.freePinned(probes)
     if (measured < targetRecall) System.err.println(
       s"[graft.Ann] screen-recall calibration on $table: even nprobe " +
-        s"$maxNprobe reaches only $measured < target $targetRecall — " +
-        "persisting maxNprobe; the residual is the target's complement")
+        s"$MaxScreenNprobe reaches only $measured < target $targetRecall — " +
+        "persisting it; the residual is the target's complement")
     // docs_at_cal: the member count the sweep probed against (VERDICT
     // r15 #2 — appends growing the index past this anchor show as drift
     // in the standing-state report, and recalibratePqScreen is the

@@ -398,7 +398,7 @@ object Clusters {
     * dedup state the index ships (the batch kernel's star edges exist
     * to keep those members connected pre-collapse; post-index they are
     * already deduplicated away). Per-bucket pair emission is bounded by
-    * the refresh guard's maxBucket², and the self-join co-locates on
+    * the refresh guard's MaxBucket², and the self-join co-locates on
     * the table's own bucketing — both scan sides share the bucket
     * partitioning, so the only real shuffle is the edge aggregate.
     */

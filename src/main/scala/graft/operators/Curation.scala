@@ -518,7 +518,7 @@ object Curation {
     * partitions the screen — either way the knob is theirs. k stays 3;
     * the three 20-bit slices simply mask down to mBits ≤ 20.
     */
-  private val DefaultBloomMBits = 20
+  private[graft] val DefaultBloomMBits = 20
 
   /** q99: Bloom-screened benchmark decontamination — q51's semantics at
     * the scale where the benchmark gram set itself stops broadcasting.

@@ -390,9 +390,7 @@ object Dedup {
                    // split, so a `word,`-perturbed re-submission signs
                    // IDENTICALLY to its source instead of perturbing
                    // every shingle past the band screen. Standing
-                   // indexes persist their mode in `_meta` and every
-                   // probe/append reads it back — an index can never
-                   // mix modes.
+                   // indexes always sign under [[TextRank.StandingTok]].
                    tokMode: String = "default",
                    // CPU-spread the signature scan (round 18 —
                    // Tuning.spreadSmall): corpus-sized batch callers keep
@@ -513,8 +511,7 @@ object Dedup {
     * + bands + knobs as one atomic unit — a crash before the swap
     * leaves the old generation fully live).
     */
-  def refreshIndex(docs: DataFrame, table: String, hashMode: String = "md5",
-                   maxBucket: Int = MaxBucket, numBuckets: Int = 32,
+  def refreshIndex(docs: DataFrame, table: String, numBuckets: Int = 32,
                    // ≥ 0 calibrates the band-probe THRESHOLD at refresh
                    // time (round 14 — VERDICT r13 #1): the boundary
                    // shared-band threshold whose planted-twin recall at
@@ -523,13 +520,10 @@ object Dedup {
                    // — the nlist/nprobe move applied to the LAST
                    // hand-set screen knob
                    screenRecallTarget: Double = -1.0,
-                   // the [[TextRank.tokWords]] mode (round 16 — VERDICT
-                   // r15 #1): persisted in `_meta` exactly like the text
-                   // family's, read back by every probe/append/rebuild;
-                   // `robust` additionally lands a punctuation-collapsed
-                   // exact-hash key in `_hashes` so the EXACT screen
-                   // closes against the same perturbation class
-                   tokMode: String = "default"): Unit = {
+                   // accepts only [[TextRank.StandingTok]]; kept while
+                   // callers still pass it by name
+                   tokMode: String = TextRank.StandingTok): Unit = {
+    TextRank.requireStandingTok(tokMode)
     // the content-hash companion (round 13 — VERDICT r12 #1): the band
     // screen has a geometric floor — a document too short to shingle
     // (< 3 words) has no bands, so an EXACT re-submission of it sails
@@ -558,35 +552,38 @@ object Dedup {
     // re-derives it; a refresh WITH a target overwrites everything fresh.
     val prev = bandMetaOf(s, table)
     val phys = graft.sources.TablePointer.stage(s, table)
-    graft.sources.Ingest.writeBucketed(contentHashKeys(docs, tokMode),
+    graft.sources.Ingest.writeBucketed(contentHashKeys(docs),
       hashTableOf(phys), "h", numBuckets)
-    graft.sources.Ingest.writeBucketed(
-      guardedIndex(minhashBands(docs, hashMode, tokMode), maxBucket),
+    graft.sources.Ingest.writeBucketed(standingBands(docs, spread = true),
       phys, "band_idx", numBuckets, sortCol = None,
       moreBucketCols = Seq("band_hash"))
-    // `_meta` lands on EVERY refresh now (round 16): it carries the
-    // tokenizer mode per commit — the text family's rule — plus the
-    // carried-over calibration (threshold -1 = never calibrated; the
-    // auto probe then uses the historical default)
+    // `_meta` lands on EVERY refresh: the carried-over calibration
+    // (threshold -1 = never calibrated; the auto probe then uses the
+    // historical default)
     writeBandMeta(s, phys,
       prev.map(_.threshold).getOrElse(-1),
       prev.map(_.policyTier).getOrElse(-1),
       prev.map(_.target).getOrElse(-1.0),
       prev.map(_.measured).getOrElse(-1.0),
-      tokMode,
       prev.map(_.docsAtCal).getOrElse(-1L))
     // calibration must probe the index it will screen against, so it
     // runs LAST, against the just-staged generation (refreshPqIndex's
     // rule) — the swap then publishes index + knobs as one unit
     if (screenRecallTarget >= 0)
-      calibrateBandThreshold(s, phys, docs,
-        targetRecall = screenRecallTarget, hashMode = hashMode)
+      calibrateBandThreshold(s, phys, docs, targetRecall = screenRecallTarget)
     graft.sources.TablePointer.swap(s, table, phys)
     graft.sources.TablePointer.retire(s, table, BandSuffixes)
   }
 
   /** The band family's companion-table suffixes (stage/retire/drop). */
   val BandSuffixes: Seq[String] = Seq("_hashes", "_meta")
+
+  /** A standing band index's rows: md5 band keys over
+    * [[TextRank.StandingTok]] shingles, [[MaxBucket]]-guarded — the one
+    * encoding every refresh, append and probe of the family shares.
+    */
+  private def standingBands(docs: DataFrame, spread: Boolean): DataFrame =
+    guardedIndex(minhashBands(docs, "md5", TextRank.StandingTok, spread))
 
   /** The [[refreshIndex]] content-hash companion's table name. */
   def hashTableOf(table: String): String = s"${table}_hashes"
@@ -616,26 +613,18 @@ object Dedup {
     * trailing/leading residue a plain space the trim then removes,
     * closing the whole whitespace class, not just 0x20 runs.
     *
-    * Under `tokMode = "robust"` (round 16 — VERDICT r15 #1) a THIRD key
-    * joins the set: md5 of the punctuation-collapsed normalization
-    * ([[normTextFor]]) — a `word,`-perturbed re-submission's robust key
-    * equals its source's, so the exact screen catches the class that
-    * previously escaped both hash keys AND (via perturbed shingles) the
-    * band screen. The two legacy keys stay, so verbatim/whitespace
-    * re-submissions match exactly as before; default-mode indexes are
-    * bit-identical to the pre-mode layout.
+    * A THIRD key (round 16 — VERDICT r15 #1) joins the set: md5 of the
+    * [[TextRank.StandingTok]] normalization ([[normTextFor]]) — a
+    * `word,`-perturbed re-submission's key equals its source's, so the
+    * exact screen catches the class that would otherwise escape both
+    * hash keys AND (via perturbed shingles) the band screen.
     */
-  private def contentHashKeys(docs: DataFrame,
-                              tokMode: String = "default"): DataFrame = {
-    val base = Seq(
-      md5(lower(trim(col("text")))),
-      md5(lower(trim(regexp_replace(col("text"), "\\s+", " ")))))
-    val keys =
-      if (tokMode == "default") base
-      else base :+ md5(normTextFor(col("text"), tokMode))
+  private def contentHashKeys(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      explode(array_distinct(array(keys: _*))).as("h"))
-  }
+      explode(array_distinct(array(
+        md5(lower(trim(col("text")))),
+        md5(lower(trim(regexp_replace(col("text"), "\\s+", " ")))),
+        md5(normTextFor(col("text"), TextRank.StandingTok))))).as("h"))
 
   /** Incremental index maintenance: append an ADMITTED batch's bands to
     * the standing [[refreshIndex]] table without re-shingling the corpus
@@ -646,20 +635,13 @@ object Dedup {
     * hot-bucket guard is therefore per-append: a bucket can grow past
     * the cap ACROSS appends until the next full [[refreshIndex]]
     * re-tightens it — the standard delta-plus-compaction trade, priced
-    * at one capped batch per append vs a corpus rebuild. `hashMode` must
-    * match the refresh.
+    * at one capped batch per append vs a corpus rebuild.
     */
-  def appendIndex(s: SparkSession, table: String, batch: DataFrame,
-                  hashMode: String = "md5", maxBucket: Int = MaxBucket): Unit = {
+  def appendIndex(s: SparkSession, table: String, batch: DataFrame): Unit = {
     // appends land in the CURRENT generation (the text family's rule):
     // additive growth, never a rewrite a concurrent reader could tear
     val phys = graft.sources.TablePointer.resolve(s, table)
-    // the batch signs under the INDEX's persisted tokenizer mode (the
-    // appendTextIndex rule) — an index can never mix modes
-    val tokMode = bandTokModeOf(s, phys)
-    graft.sources.Ingest.appendBucketed(
-      guardedIndex(minhashBands(batch, hashMode, tokMode, spread = false),
-        maxBucket),
+    graft.sources.Ingest.appendBucketed(standingBands(batch, spread = false),
       phys, "band_idx", Seq("band_hash"))
     // refresh through the PROBING session `s`, not just the writing
     // frame's session: the two differ whenever the batch plan's left
@@ -669,17 +651,16 @@ object Dedup {
     s.catalog.refreshTable(phys)
     // the content-hash companion grows in lockstep (every refresh lands
     // it corpus-complete)
-    graft.sources.Ingest.appendBucketed(contentHashKeys(batch, tokMode),
+    graft.sources.Ingest.appendBucketed(contentHashKeys(batch),
       hashTableOf(phys), "h")
     s.catalog.refreshTable(hashTableOf(phys))
   }
 
   /** Probe a batch against a [[refreshIndex]]-materialized index table —
-    * [[incrementalProbe]] over the bucketed scan. `hashMode` must match
-    * the refresh (md5 band keys are strings, xxhash64 keys longs).
+    * [[incrementalProbe]] over the bucketed scan, the batch signed under
+    * the index's own encoding (md5, [[TextRank.StandingTok]]).
     */
   def probeIndex(s: SparkSession, table: String, batch: DataFrame,
-                 hashMode: String = "md5",
                  // 0 = AUTO (round 14): use the `_meta`-persisted
                  // calibrated threshold when [[calibrateBandThreshold]]
                  // ran on this table, else the historical default 4 —
@@ -687,17 +668,12 @@ object Dedup {
                  // to the band family
                  threshold: Int = 0): DataFrame = {
     // resolve ONCE per plan (the searchTextIndex rule): a refresh
-    // landing mid-probe never moves this probe's files; ONE `_meta`
-    // read serves both the auto threshold and the tokenizer mode (the
-    // batch must sign under the INDEX's mode — mixing modes would
-    // perturb the very shingles the robust mode unifies)
+    // landing mid-probe never moves this probe's files
     val phys = graft.sources.TablePointer.resolve(s, table)
-    val meta = bandMetaOf(s, phys)
-    incrementalProbe(s.table(phys), batch, hashMode,
+    incrementalProbe(s.table(phys), batch, "md5",
       if (threshold >= 1) threshold
-      else meta.map(_.threshold).filter(_ >= 1)
-        .getOrElse(DefaultBandThreshold),
-      meta.map(_.tokMode).getOrElse("default"))
+      else bandThresholdOf(s, phys).getOrElse(DefaultBandThreshold),
+      TextRank.StandingTok)
   }
 
   /** Probe `batch` documents against a prepared [[guardedIndex]] — the
@@ -749,12 +725,12 @@ object Dedup {
     val phys = graft.sources.TablePointer.resolve(s, table)
     val standing = s.table(hashTableOf(phys))
       .select(col("doc_id").as("match_doc_id"), col("h"))
-    // the probe emits EVERY key form the index's mode persists (raw-
-    // normalized, whitespace-collapsed, and under robust mode the
-    // punctuation-collapsed key — [[contentHashKeys]]): a batch doc
-    // matching a standing doc under any normalization hits, and the
-    // min-aggregate already collapses a doc whose keys multi-match
-    val matches = contentHashKeys(batch, bandTokModeOf(s, phys))
+    // the probe emits EVERY key form the index persists (raw-
+    // normalized, whitespace-collapsed, punctuation-collapsed —
+    // [[contentHashKeys]]): a batch doc matching a standing doc under
+    // any normalization hits, and the min-aggregate already collapses a
+    // doc whose keys multi-match
+    val matches = contentHashKeys(batch)
       .select(col("doc_id").as("batch_doc_id"), col("h"))
       .join(standing, Seq("h"))
       .groupBy("batch_doc_id").agg(min("match_doc_id").as("match_doc_id"))
@@ -775,16 +751,15 @@ object Dedup {
   def metaTableOf(table: String): String = s"${table}_meta"
 
   /** The persisted knob row of a standing band index (its `_meta`):
-    * the calibrated probe threshold with its policy/targets, the
-    * tokenizer mode the generation was shingled and hash-keyed under,
-    * and the corpus size when the calibration sweep ran (round 16 —
+    * the calibrated probe threshold with its policy/targets and the
+    * corpus size when the calibration sweep ran (round 16 —
     * VERDICT r15 #2: the staleness anchor `docs_now − docs_at_cal` is
     * the drift signal [[graft.Admit.standingStateReport]] surfaces, the
     * text family's `_cal` contract applied to this knob). Sentinels:
     * threshold −1 / docsAtCal −1 = never calibrated.
     */
   case class BandMeta(threshold: Int, policyTier: Int, target: Double,
-                      measured: Double, tokMode: String, docsAtCal: Long)
+                      measured: Double, docsAtCal: Long)
 
   /** Read a band index's `_meta` row — None only when the resolved
     * generation has no catalogued tables: before the index's first
@@ -796,7 +771,7 @@ object Dedup {
     else s.table(metaTableOf(table)).collect().headOption.map(r =>
       BandMeta(r.getAs[Int]("band_threshold"), r.getAs[Int]("policy_tier"),
         r.getAs[Double]("recall_target"), r.getAs[Double]("recall_measured"),
-        r.getAs[String]("tok_mode"), r.getAs[Long]("docs_at_cal")))
+        r.getAs[Long]("docs_at_cal")))
   }
 
   /** The calibrated band-probe threshold of a standing index, from its
@@ -805,21 +780,14 @@ object Dedup {
   def bandThresholdOf(s: SparkSession, table0: String): Option[Int] =
     bandMetaOf(s, table0).map(_.threshold).filter(_ >= 1)
 
-  /** The [[TextRank.tokWords]] mode a standing band index was refreshed
-    * with.
-    */
-  def bandTokModeOf(s: SparkSession, table0: String): String =
-    bandMetaOf(s, table0).map(_.tokMode).getOrElse("default")
-
   private def writeBandMeta(s: SparkSession, table: String, threshold: Int,
                             policyTier: Int, target: Double,
-                            measured: Double, tokMode: String,
-                            docsAtCal: Long): Unit = {
+                            measured: Double, docsAtCal: Long): Unit = {
     import s.implicits._
     graft.sources.Ingest.clearStaleLocation(s, metaTableOf(table))
-    Seq((threshold, policyTier, target, measured, tokMode, docsAtCal))
+    Seq((threshold, policyTier, target, measured, docsAtCal))
       .toDF("band_threshold", "policy_tier", "recall_target",
-        "recall_measured", "tok_mode", "docs_at_cal")
+        "recall_measured", "docs_at_cal")
       .write.mode("overwrite").format("parquet")
       .saveAsTable(metaTableOf(table))
   }
@@ -856,17 +824,11 @@ object Dedup {
   def calibrateBandThreshold(s: SparkSession, table0: String, docs: DataFrame,
                              policyTier: Int = 90,
                              targetRecall: Double = 0.75,
-                             nSample: Int = 200,
-                             hashMode: String = "md5"): (Int, Double) = {
+                             nSample: Int = 200): (Int, Double) = {
     // resolve at entry: the `_meta` must land beside the generation it
     // measured (a refresh passes the staged physical — identity here)
     val table = graft.sources.TablePointer.resolve(s, table0)
-    // the sweep measures the index AS SERVED: twins are built and probed
-    // under the generation's persisted tokenizer mode, and the rewrite
-    // preserves that mode (the calibration owns the knob columns only)
-    val tokMode = bandTokModeOf(s, table)
-    val nsbHist = bandScreenHist(s, table, docs, policyTier, nSample,
-      hashMode, tokMode)
+    val nsbHist = bandScreenHist(s, table, docs, policyTier, nSample)
     val n = nsbHist.values.sum
     def recallAt(t: Int): Double =
       nsbHist.filter(_._1 >= t).values.sum.toDouble / n
@@ -883,7 +845,7 @@ object Dedup {
     // staleness anchor; appends growing the corpus past this show as
     // drift in the standing-state report)
     writeBandMeta(s, table, chosen, policyTier, targetRecall, measured,
-      tokMode, docs.count())
+      docs.count())
     (chosen, measured)
   }
 
@@ -896,9 +858,8 @@ object Dedup {
     */
   def bandScreenRecall(s: SparkSession, table: String, docs: DataFrame,
                        threshold: Int, policyTier: Int = 90,
-                       nSample: Int = 200, hashMode: String = "md5"): Double = {
-    val nsbHist = bandScreenHist(s, table, docs, policyTier, nSample,
-      hashMode, bandTokModeOf(s, table))
+                       nSample: Int = 200): Double = {
+    val nsbHist = bandScreenHist(s, table, docs, policyTier, nSample)
     val n = nsbHist.values.sum
     nsbHist.filter(_._1 >= threshold).values.sum.toDouble / n
   }
@@ -910,20 +871,15 @@ object Dedup {
     * re-probing).
     */
   private def bandScreenHist(s: SparkSession, table: String, docs: DataFrame,
-                             policyTier: Int, nSample: Int,
-                             hashMode: String,
-                             tokMode: String = "default"): Map[Long, Long] = {
+                             policyTier: Int, nSample: Int): Map[Long, Long] = {
     require(policyTier >= 1 && policyTier <= 100,
       s"policyTier must be a percentage, got $policyTier")
     // q141's eligibility: ≥ 7 words keeps every tier ≥ 3 words — the
     // shingle floor (a twin with no shingles has no bands to recall).
-    // Words come from the index's OWN tokenizer mode so the planted
-    // twins measure the geometry the screen actually runs on (under
-    // default the expression is the historical split verbatim).
+    // Words come from the index's own tokenizer so the planted twins
+    // measure the geometry the screen actually runs on.
     val eligible = docs
-      .withColumn("_w",
-        if (tokMode == "default") split(col("text"), " ")
-        else TextRank.tokWords(col("text"), tokMode))
+      .withColumn("_w", TextRank.tokWords(col("text"), TextRank.StandingTok))
       .withColumn("_n", size(col("_w")).cast("long"))
       .filter(col("_n") >= 7)
     val nElig = eligible.count()
@@ -941,7 +897,7 @@ object Dedup {
           " ").as("text"))
       .localCheckpoint(true)
     try {
-      val hist = probeIndex(s, table, twins, hashMode, threshold = 1)
+      val hist = probeIndex(s, table, twins, threshold = 1)
         .groupBy("n_shared_bands").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       require(hist.values.sum > 0,
@@ -1233,9 +1189,9 @@ object Dedup {
     * source (8 shared bands, exact-hash hit), under `default` it
     * escapes both — the hole and its closure in one DuckDB-replayed
     * grid. The admission stack runs this class through the SAME kernels
-    * ([[probeIndex]]/[[probeHashIndex]] auto-read the index's persisted
-    * mode), so AdmitSpec's rejection case and ComposeRehearsal's
-    * adversarial batch are anchored to these values.
+    * ([[probeIndex]]/[[probeHashIndex]] always encode under the `robust`
+    * arm, [[TextRank.StandingTok]]), so AdmitSpec's rejection case and
+    * ComposeRehearsal's adversarial batch are anchored to these values.
     *
     * Scale shape: two band passes over the corpus + two batch-sized
     * probes (the q83 read shape twice) and two hash equi-joins — no new

@@ -345,9 +345,8 @@ object TextRank {
     * single-space corpus. `robust` is the INDEX-side option for real
     * text: punctuation runs collapse to spaces before a `\s+` split,
     * so `word.` / `word,` / `(word)` variants stop fragmenting postings
-    * and inflating df. Oracle kernels keep the default by contract —
-    * the robust mode exists on the standing index, where the refresh
-    * persists its choice in `_meta` so appends can never mix modes.
+    * and inflating df. Oracle kernels keep the default by contract;
+    * every standing index tokenizes under [[StandingTok]].
     */
   def tokWords(c: Column, mode: String): Column = mode match {
     case "default" => split(lower(trim(c)), " ")
@@ -357,15 +356,26 @@ object TextRank {
       s"tokenizer mode must be default or robust, got $other")
   }
 
+  /** The one tokenizer of the standing text state — band and `_hashes`
+    * ([[Dedup.refreshIndex]]) and BM25 ([[refreshTextIndex]]) alike, so
+    * index and probe share one normalization by construction. On
+    * punctuation-free single-space text it equals `default`.
+    */
+  val StandingTok = "robust"
+
+  /** Refuses a standing-index `tokMode` other than [[StandingTok]]. */
+  private[operators] def requireStandingTok(tokMode: String): Unit =
+    require(tokMode == StandingTok,
+      s"standing indexes tokenize $StandingTok only, got tokMode=$tokMode")
+
   /** Posting rows of a docs frame: one row per (doc, term) with the
     * term frequency and the doc's token length DENORMALIZED onto the
     * posting (the classic posting-list layout — a search needs tf and
     * dl together and must never join back to the corpus).
     */
-  private def postingsOf(docs: DataFrame,
-                         tokMode: String = "default"): DataFrame = {
+  private def postingsOf(docs: DataFrame): DataFrame = {
     val toks = docs
-      .select(col("doc_id"), explode(tokWords(col("text"), tokMode)).as("term"))
+      .select(col("doc_id"), explode(tokWords(col("text"), StandingTok)).as("term"))
       .filter(length(col("term")) > 0)
     val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")).join(dl, "doc_id")
@@ -376,16 +386,10 @@ object TextRank {
     * `total_tokens` define avgdl. Readers SUM the partials, so appends
     * stay purely additive — no in-place rewrite on the serving path.
     */
-  private def metaPartial(docs: DataFrame, post: DataFrame,
-                          tokMode: String = "default"): DataFrame =
+  private def metaPartial(docs: DataFrame, post: DataFrame): DataFrame =
     docs.agg(count(lit(1)).as("n_docs")).crossJoin(
       post.select("doc_id", "dl").distinct()
         .agg(count(lit(1)).as("token_docs"), sum("dl").as("total_tokens")))
-      // the tokenizer mode rides every commit's partial as a constant:
-      // readers agg the numeric columns (unaffected), appends read the
-      // first row so a batch can never be tokenized under a different
-      // mode than the standing postings
-      .withColumn("tok_mode", lit(tokMode))
 
   /** One commit's champion-list PARTIAL: the top-[[ChampM]] postings per
     * term of THIS commit's corpus slice, by impact (tf desc, doc_id asc —
@@ -435,12 +439,13 @@ object TextRank {
                        // meets the target land in a `_cal` companion,
                        // and the serving paths' auto sentinels read them
                        serveRecallTarget: Double = -1.0,
-                       // [[tokWords]] mode — persisted per commit in
-                       // `_meta`, read back by appends
-                       tokMode: String = "default"): Unit = {
+                       // accepts only [[StandingTok]]; kept while callers
+                       // still pass it by name
+                       tokMode: String = StandingTok): Unit = {
+    requireStandingTok(tokMode)
     val s = docs.sparkSession
     val phys = graft.sources.TablePointer.stage(s, table)
-    val post = postingsOf(docs, tokMode).persist()
+    val post = postingsOf(docs).persist()
     try {
       graft.sources.Ingest.clearStaleLocation(s, phys)
       post.select(col("term"), col("doc_id"), col("tf"), col("dl"),
@@ -454,7 +459,7 @@ object TextRank {
       graft.sources.Ingest.writeBucketed(
         champPartial(post), s"${phys}_champ", "term", numBuckets)
       graft.sources.Ingest.clearStaleLocation(s, s"${phys}_meta")
-      metaPartial(docs, post, tokMode).write.mode("overwrite").format("parquet")
+      metaPartial(docs, post).write.mode("overwrite").format("parquet")
         .saveAsTable(s"${phys}_meta")
       // calibration probes the just-written staged generation (the
       // refreshPqIndex rule), so the swap publishes index + knobs as
@@ -467,14 +472,6 @@ object TextRank {
     } finally post.unpersist(false)
   }
 
-  /** The [[tokWords]] mode a standing text index was refreshed with —
-    * read from its `_meta` partials. `table0` may be logical or physical.
-    */
-  def textTokModeOf(s: SparkSession, table0: String): String = {
-    val phys = graft.sources.TablePointer.resolve(s, table0)
-    s.table(s"${phys}_meta").select("tok_mode").head().getString(0)
-  }
-
   /** Incremental text-index maintenance: append a batch's postings, df
     * partials, and meta partial to the CURRENT generation — one
     * batch-sized shuffle, never a corpus rebuild, and purely ADDITIVE
@@ -484,10 +481,7 @@ object TextRank {
     */
   def appendTextIndex(s: SparkSession, table: String, docs: DataFrame): Unit = {
     val phys = graft.sources.TablePointer.resolve(s, table)
-    // the batch tokenizes under the INDEX's persisted mode — mixing
-    // modes would fragment the very postings the robust mode unifies
-    val tokMode = textTokModeOf(s, phys)
-    val post = postingsOf(docs, tokMode).persist()
+    val post = postingsOf(docs).persist()
     try {
       post.select(col("term"), col("doc_id"), col("tf"), col("dl"),
           termBucket(col("term")).as("tb"))
@@ -498,7 +492,7 @@ object TextRank {
         post.groupBy("term").agg(count(lit(1)).as("df")), s"${phys}_df", "term")
       graft.sources.Ingest.appendBucketed(
         champPartial(post), s"${phys}_champ", "term")
-      metaPartial(docs, post, tokMode)
+      metaPartial(docs, post)
         .write.mode("append").format("parquet")
         .saveAsTable(s"${phys}_meta")
     } finally post.unpersist(false)
@@ -656,13 +650,41 @@ object TextRank {
         r.getAs[Double]("champ_measured"), r.getAs[Long]("docs_at_cal")))
   }
 
+  /** Docs in the serving calibrations' query panel. */
+  private val PanelDocs = 12
+
+  /** The serving calibrations' query panel, derived from the postings
+    * alone so a rebuild or a spec re-derives it without the source docs:
+    * the [[PanelDocs]] smallest doc ids, each with its ≤ 6
+    * lexicographically-first distinct terms. Bounded by construction —
+    * pulled once and re-broadcast as a literal frame so the grid jobs
+    * never re-derive it. Returns (panel doc ids, (q_id, term) panel).
+    */
+  private def servingPanel(s: SparkSession, phys: String,
+                           what: String): (DataFrame, DataFrame) = {
+    import s.implicits._
+    val post = s.table(phys)
+    val panelDocs = post.select("doc_id").distinct().orderBy("doc_id")
+      .limit(PanelDocs)
+    val tw = Window.partitionBy("q_id").orderBy("term")
+    val panelRows = post.join(broadcast(panelDocs), "doc_id")
+      .select(col("doc_id").as("q_id"), col("term")).distinct()
+      .withColumn("tr", row_number().over(tw)).filter(col("tr") <= 6)
+      .select("q_id", "term")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    require(panelRows.nonEmpty,
+      s"$what panel for $phys is empty — the index has no postings")
+    (panelDocs, broadcast(panelRows.toDF("q_id", "term")))
+  }
+
   /** Derive BOTH approximate-serving knobs from the standing index's own
     * measured recall curves and persist them beside it (round 14 third
     * pass — the screen-knob discipline applied to serving: nlist rule,
     * nprobe calibration, band threshold, now `maxDfFrac`/`m`).
     *
-    * Panel: the `nPanel` smallest doc ids' ≤ 6 lexicographically-first
-    * distinct terms, derived from the POSTINGS table itself — so a
+    * Panel ([[servingPanel]]): the [[PanelDocs]] smallest doc ids' ≤ 6
+    * lexicographically-first distinct terms, derived from the POSTINGS
+    * table itself — so a
     * rebuild or a spec re-derives the identical panel without the source
     * docs frame, and the panel is bounded by construction. Truth: the
     * exact index ranking for that panel.
@@ -684,24 +706,11 @@ object TextRank {
     * residual is the target's documented complement.
     */
   def calibrateTextServing(s: SparkSession, table0: String,
-                           targetRecall: Double, k: Int = 10,
-                           nPanel: Int = 12): TextCal = {
+                           targetRecall: Double, k: Int = 10): TextCal = {
     import s.implicits._
     val phys = graft.sources.TablePointer.resolve(s, table0)
     val post = s.table(phys)
-    val panelDocs = post.select("doc_id").distinct().orderBy("doc_id")
-      .limit(nPanel)
-    val tw = Window.partitionBy("q_id").orderBy("term")
-    // bounded by construction (≤ nPanel × 6 rows) — pulled once and
-    // re-broadcast as a literal frame so the grid jobs never re-derive it
-    val panelRows = post.join(broadcast(panelDocs), "doc_id")
-      .select(col("doc_id").as("q_id"), col("term")).distinct()
-      .withColumn("tr", row_number().over(tw)).filter(col("tr") <= 6)
-      .select("q_id", "term")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    require(panelRows.nonEmpty,
-      s"calibration panel for $phys is empty — the index has no postings")
-    val qt = broadcast(panelRows.toDF("q_id", "term"))
+    val (_, qt) = servingPanel(s, phys, "calibration")
     val qterms = qt.select("term").distinct()
     val meta = s.table(s"${phys}_meta")
       .agg(sum("n_docs").cast("double").as("n"),
@@ -903,7 +912,7 @@ object TextRank {
     */
   def calibrateHybridServing(s: SparkSession, textTable: String,
       vecTable: String, targetRecall: Double, k: Int = 10,
-      adcTopC: Int = 64, nPanel: Int = 12): HybridCal = {
+      adcTopC: Int = 64): HybridCal = {
     import s.implicits._
     val phys = graft.sources.TablePointer.resolve(s, textTable)
     val sparseCal = textCalOf(s, phys).getOrElse(throw new IllegalStateException(
@@ -911,19 +920,8 @@ object TextRank {
         "refresh) first; the fused sweep extends the text calibration, " +
         "never replaces it"))
     val vphys = graft.sources.TablePointer.resolve(s, vecTable)
-    // the text sweep's panel derivation, verbatim — same docs, same terms
-    val post = s.table(phys)
-    val panelDocs = post.select("doc_id").distinct().orderBy("doc_id")
-      .limit(nPanel)
-    val tw = Window.partitionBy("q_id").orderBy("term")
-    val panelRows = post.join(broadcast(panelDocs), "doc_id")
-      .select(col("doc_id").as("q_id"), col("term")).distinct()
-      .withColumn("tr", row_number().over(tw)).filter(col("tr") <= 6)
-      .select("q_id", "term")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    require(panelRows.nonEmpty,
-      s"hybrid calibration panel for $phys is empty — the index has no postings")
-    val qt = broadcast(panelRows.toDF("q_id", "term"))
+    // the text sweep's panel — same docs, same terms
+    val (panelDocs, qt) = servingPanel(s, phys, "hybrid calibration")
     val queries = s.table(vphys).select("vec_id", "emb")
       .join(broadcast(panelDocs.select(col("doc_id").as("vec_id"))), "vec_id")
       .localCheckpoint(true)

@@ -265,23 +265,19 @@ object EventStreams {
     * `batch_id=<id>` partition — a replayed batch (crash between the
     * parquet write and the checkpoint commit) rewrites the same partition
     * instead of appending duplicates. Readers get the flag table via
-    * partition discovery over `outDir`. `hashMode` must match the mode
-    * the guarded index was built with (md5 keys are strings, xxhash64
-    * keys are longs — mixing them would silently join zero rows).
+    * partition discovery over `outDir`. The stream signs md5 band keys;
+    * `tokMode` must be the tokenizer the guarded index was signed under —
+    * `"robust"` ([[graft.operators.TextRank.StandingTok]]) against a
+    * [[graft.operators.Dedup.refreshIndex]] table.
     */
   def nearDupQuery(docs: DataFrame, guardedIdx: DataFrame, outDir: String,
                    checkpoint: String,
-                   hashMode: String = "md5",
-                   // must match the index's persisted mode (the stream
-                   // binds one generation for its lifetime — read
-                   // `Dedup.bandTokModeOf` at bind time, the hashMode
-                   // contract's round-16 twin)
                    tokMode: String = "default"): org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Dedup.incrementalProbe(guardedIdx, batch, hashMode,
+        graft.operators.Dedup.incrementalProbe(guardedIdx, batch, "md5",
             tokMode = tokMode)
           .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
         ()

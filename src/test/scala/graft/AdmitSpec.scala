@@ -697,7 +697,6 @@ class AdmitSpec extends SparkSpec {
     assert(rep3(("band", "cal_docs_at_cal")) == d.count().toDouble,
       rep3.toString)
     assert(rep3(("band", "cal_docs_drift")) == 1.0, rep3.toString)
-    assert(rep3(("band", "tok_mode_robust")) == 0.0)
     assert(rep3(("pq", "cal_docs_at_cal")) == e.count().toDouble, rep3.toString)
     assert(rep3(("pq", "cal_docs_drift")) == 0.0, rep3.toString)
 
@@ -804,7 +803,7 @@ class AdmitSpec extends SparkSpec {
     assert(r1.admitted == 1, r1.toString)
   }
 
-  test("a punctuation-perturbed re-submission rejects at the exact screen when the band index runs the robust mode (and slips everything under the default)") {
+  test("a punctuation-perturbed re-submission rejects at the exact screen") {
     import spark.implicits._
     val d = Tables.load(spark, Sf, "documents").select("doc_id", "text")
     val corpusDoc10 = d.filter(col("doc_id") === 10L)
@@ -813,11 +812,11 @@ class AdmitSpec extends SparkSpec {
       "past amber silos while nine cartographers argue about meridians"
     def punct(t: String): String = t.split(" ").mkString(", ")
 
-    // the CLOSED path: a robust-mode standing index — admitted content
-    // and corpus content both reject on punctuated replay
+    // admitted content and corpus content both reject on punctuated
+    // replay against the standing index
     val band = "admit_band_punct"
     graft.sources.TablePointer.dropAll(spark, band, Dedup.BandSuffixes)
-    Dedup.refreshIndex(d, band, numBuckets = 8, tokMode = "robust")
+    Dedup.refreshIndex(d, band, numBuckets = 8)
     val out = java.nio.file.Files.createTempDirectory("admit_punct").toString
     val r1 = Admit.admitBatch(spark, Seq((810001L, textA)).toDF("doc_id", "text"),
       band, out, 1L)
@@ -829,20 +828,6 @@ class AdmitSpec extends SparkSpec {
     val r2 = Admit.admitBatch(spark, b2, band, out, 2L)
     assert(r2.admitted == 0 && r2.exactRejected == 2,
       s"punctuated copies must reject at the exact screen: $r2")
-
-    // the CONTROL: the identical replay against a default-mode index —
-    // the hole VERDICT r15 named, demonstrated (both copies admit)
-    val band2 = "admit_band_punct_dft"
-    graft.sources.TablePointer.dropAll(spark, band2, Dedup.BandSuffixes)
-    Dedup.refreshIndex(d, band2, numBuckets = 8)
-    val out2 = java.nio.file.Files.createTempDirectory("admit_punct2").toString
-    val c1 = Admit.admitBatch(spark, Seq((810001L, textA)).toDF("doc_id", "text"),
-      band2, out2, 1L)
-    assert(c1.admitted == 1, c1.toString)
-    val c2 = Admit.admitBatch(spark, b2, band2, out2, 2L)
-    assert(c2.admitted == 2,
-      s"under the default mode the punctuated class slips every screen: $c2")
     graft.sources.TablePointer.dropAll(spark, band, Dedup.BandSuffixes)
-    graft.sources.TablePointer.dropAll(spark, band2, Dedup.BandSuffixes)
   }
 }

@@ -618,13 +618,13 @@ class CorpusOpsSpec extends SparkSpec {
     assert(rows.head.getAs[String]("shape") == "heaps", rows.head.toString)
   }
 
-  test("robust tokenizer mode: a punctuated corpus retrieves its clean-form twin; default mode is bit-stable; appends inherit the mode") {
+  test("standing text index: punctuated docs and appends retrieve by clean-form terms") {
     import spark.implicits._
     import graft.operators.TextRank
     import graft.sources.TablePointer
     val suf = Seq("_df", "_meta", "_champ", "_cal")
-    val (tr, td) = ("text_tok_robust", "text_tok_default")
-    Seq(tr, td).foreach(TablePointer.dropAll(spark, _, suf))
+    val tr = "text_tok_robust"
+    TablePointer.dropAll(spark, tr, suf)
     // real-text shapes: trailing punctuation, commas, parentheses —
     // every variant of the same lexical content
     val docs = Seq(
@@ -633,39 +633,25 @@ class CorpusOpsSpec extends SparkSpec {
       (3L, "unrelated prose about tidal ledgers and slate"))
       .toDF("doc_id", "text")
     val qt = Seq((10L, "lighthouse"), (10L, "copper")).toDF("q_id", "term")
-    // DEFAULT mode fragments: "(copper)" is a term, "copper" is not —
-    // the clean query term retrieves nothing from doc 1
-    TextRank.refreshTextIndex(docs, td)
-    assert(TextRank.textTokModeOf(spark, td) == "default")
-    val defHits = TextRank.searchTextIndex(spark, td, Seq((10L, "copper"))
-        .toDF("q_id", "term")).collect()
-    assert(defHits.isEmpty, defHits.mkString)
-    // and the default postings are byte-stable with the house kernel:
-    // the punctuated variants survive as distinct terms
-    val defTerms = spark.table(s"${TablePointer.resolve(spark, td)}_df")
-      .select("term").as[String].collect().toSet
-    assert(defTerms.contains("(copper)") && defTerms.contains("hello,"),
-      defTerms.toString)
-    // ROBUST mode unifies: both hello-docs retrieve under the clean
-    // terms, and doc 1's parenthesized token answers for "copper"
-    TextRank.refreshTextIndex(docs, tr, tokMode = "robust")
-    assert(TextRank.textTokModeOf(spark, tr) == "robust")
+    // the standing tokenizer unifies: both hello-docs retrieve under the
+    // clean terms, and doc 1's parenthesized token answers for "copper"
+    TextRank.refreshTextIndex(docs, tr)
     val hits = TextRank.searchTextIndex(spark, tr, qt).collect()
       .map(_.getAs[Long]("doc_id")).toSet
     assert(hits == Set(1L, 2L), hits.toString)
-    // an APPEND inherits the index's persisted mode — a punctuated
-    // batch doc is servable by its clean form with no caller knob
+    // an APPEND tokenizes the same way — a punctuated batch doc is
+    // servable by its clean form with no caller knob
     TextRank.appendTextIndex(spark, tr,
       Seq((4L, "A NEW chronicle; the COPPER semaphore!")).toDF("doc_id", "text"))
     val hits2 = TextRank.searchTextIndex(spark, tr,
         Seq((11L, "semaphore")).toDF("q_id", "term")).collect()
       .map(_.getAs[Long]("doc_id")).toSet
     assert(hits2 == Set(4L), hits2.toString)
-    // an unknown mode refuses loudly
+    // any other mode refuses loudly
     val e = intercept[IllegalArgumentException](
       TextRank.refreshTextIndex(docs, tr, tokMode = "stemmed"))
-    assert(e.getMessage.contains("default or robust"))
-    Seq(tr, td).foreach(TablePointer.dropAll(spark, _, suf))
+    assert(e.getMessage.contains("tokenize robust only"))
+    TablePointer.dropAll(spark, tr, suf)
   }
 
   test("q150 hybrid fidelity: the exact-exact row self-checks at 1.0 and the index-backed deployment point clears the floor") {

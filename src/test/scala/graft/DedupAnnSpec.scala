@@ -690,7 +690,7 @@ class DedupAnnSpec extends SparkSpec {
     // never a corpus-sized shuffle join or a cartesian (the q112Lazy
     // plan-assert pattern; the public entry pins its result eagerly)
     val (lazyRes, pin) = Ann.mineHardNegativesLazy(spark, pqT, queries,
-      0.99, 10, 8, 64, 16)
+      0.99, 10, 8, 64)
     // unpersist FIRST: a pinned candidate frame would hide the join
     // shapes behind an InMemoryTableScan and make the assertion vacuous
     pin.unpersist(false)
@@ -1653,20 +1653,16 @@ class DedupAnnSpec extends SparkSpec {
     graft.sources.TablePointer.dropAll(spark, table, Dedup.BandSuffixes)
   }
 
-  test("band tokenizer mode: a robust index catches punctuation-perturbed re-submissions the default index provably misses; appends inherit the mode") {
+  test("standing band index: punctuated copies flag on both screens, appended docs too") {
     import spark.implicits._
     val rob = "band_tok_robust"
-    val dft = "band_tok_default"
     graft.sources.TablePointer.dropAll(spark, rob, Dedup.BandSuffixes)
-    graft.sources.TablePointer.dropAll(spark, dft, Dedup.BandSuffixes)
     val d = Tables.load(spark, Sf, "documents").select("doc_id", "text")
-    Dedup.refreshIndex(d, rob, numBuckets = 8, tokMode = "robust")
-    Dedup.refreshIndex(d, dft, numBuckets = 8)
-    // the mode rides `_meta` per commit (threshold stays the -1 sentinel
-    // on an uncalibrated refresh; the docs anchor is unknowable)
+    Dedup.refreshIndex(d, rob, numBuckets = 8)
+    // threshold stays the -1 sentinel on an uncalibrated refresh; the
+    // docs anchor is unknowable
     val m = Dedup.bandMetaOf(spark, rob).get
-    assert(m.tokMode == "robust" && m.threshold == -1 && m.docsAtCal == -1L, m)
-    assert(Dedup.bandTokModeOf(spark, dft) == "default")
+    assert(m.threshold == -1 && m.docsAtCal == -1L, m)
 
     // q152's adversarial class: every space rewritten to ", " — every
     // word but the last gains a trailing comma, perturbing EVERY word
@@ -1679,7 +1675,7 @@ class DedupAnnSpec extends SparkSpec {
     val nB = batch.count()
     assert(nB >= 10, s"adversarial batch too small: $nB")
 
-    // the robust index catches every copy on BOTH standing screens...
+    // the standing index catches every copy on BOTH screens
     // (match is the source, or a LOWER id when the source itself has a
     // normalization-equal corpus twin — the tie rule; sf0.001 ships two
     // such pairs, 12≡360 and 16≡369)
@@ -1696,16 +1692,8 @@ class DedupAnnSpec extends SparkSpec {
       .forall(_.getAs[Int]("is_exact_dup") == 1),
       "the robust third hash key must flag every punctuated copy")
 
-    // ...and the default index provably misses it on both (the hole)
-    assert(Dedup.probeIndex(spark, dft, batch).collect()
-      .forall(_.getAs[Int]("is_near_dup") == 0),
-      "the default band screen must miss the punctuated class (the hole)")
-    assert(Dedup.probeHashIndex(spark, dft, batch).collect()
-      .forall(_.getAs[Int]("is_exact_dup") == 0),
-      "the default hash keys must miss the punctuated class (the hole)")
-
-    // appends inherit the persisted mode: a PUNCTUATED novel doc admitted
-    // once flags on its CLEAN replay — both directions normalize to one key
+    // appends share the encoding: a PUNCTUATED novel doc admitted once
+    // flags on its CLEAN replay — both directions normalize to one key
     val novel = Seq((980001L,
       "granite, pelicans, rehearse, slow, cartography, over, nine, tidal, mirrors"))
       .toDF("doc_id", "text")
@@ -1720,12 +1708,12 @@ class DedupAnnSpec extends SparkSpec {
     assert(replayNear.getAs[Int]("is_near_dup") == 1 &&
       replayNear.getAs[Long]("match_doc_id") == 980001L, replayNear.mkString)
 
-    // unknown modes refuse loudly — never a silently mixed index
-    intercept[IllegalArgumentException] {
+    // any other mode refuses loudly — never a silently mixed index
+    val e = intercept[IllegalArgumentException] {
       Dedup.refreshIndex(d.limit(5), "band_tok_bogus", tokMode = "weird")
     }
+    assert(e.getMessage.contains("tokenize robust only"), e.getMessage)
     graft.sources.TablePointer.dropAll(spark, rob, Dedup.BandSuffixes)
-    graft.sources.TablePointer.dropAll(spark, dft, Dedup.BandSuffixes)
     graft.sources.TablePointer.dropAll(spark, "band_tok_bogus", Dedup.BandSuffixes)
   }
 
@@ -1863,11 +1851,10 @@ class DedupAnnSpec extends SparkSpec {
     def cols(t: String, suffix: String) = table(t, suffix).columns.toSet
     assert(cols(band, "_hashes") == Set("doc_id", "h"))
     assert(cols(band, "_meta") == Set("band_threshold", "policy_tier",
-      "recall_target", "recall_measured", "tok_mode", "docs_at_cal"))
+      "recall_target", "recall_measured", "docs_at_cal"))
     assert(cols(text, "_df") == Set("term", "df"))
     assert(cols(text, "_champ") == Set("term", "doc_id", "tf", "dl", "rn"))
-    assert(cols(text, "_meta") ==
-      Set("n_docs", "token_docs", "total_tokens", "tok_mode"))
+    assert(cols(text, "_meta") == Set("n_docs", "token_docs", "total_tokens"))
     assert(cols(pq, "_centroids") == Set("cell", "qcent", "cnorm2"))
     assert(cols(pq, "_codebook") == Set("sub", "code", "jj", "cw"))
     assert(cols(pq, "_meta") == Set("quantizer", "screen_nprobe",
