@@ -29,7 +29,8 @@ import org.apache.spark.sql.functions._
   *      verbatim re-submission rejects regardless of shingle geometry —
   *      the band screen's one measured floor was a shipped sub-3-word
   *      document whose re-submission had no shingles, no bands, and
-  *      sailed through (ComposeRehearsal r12: 199/200). Exact copies
+  *      sailed through (199/200 in PLANS.md "Round-12: the full
+  *      composition, timed end-to-end"). Exact copies
   *      are the most common duplicate class; they cost one bucketed
   *      hash join here, never a band miss;
   *   0.5 decontamination screen (optional, `benchmarkGrams`): survivors

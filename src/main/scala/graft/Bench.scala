@@ -3,19 +3,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // NOTE: capping spark.sql.codegen.cache.maxEntries (default 100)
-      // was tried to relieve code-cache pressure at 60+ queries and made
-      // things WORSE (32 entries → q51 recompiled across its runs,
-      // 2.0 s → 7.0 s). The per-query System.gc() below is the fix that
-      // works; leave the codegen cache at its default.
-      .withExtensions(graft.functions.GraftFunctions.register)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the per-query System.gc() below, not a codegen cache cap, is what
+    // relieves code-cache pressure at 60+ queries (see Session)
+    val spark = Session.local()
     // steady-state timing: two warmup runs, then the minimum of THREE
     // timed executions (round 5 — r4 burned analysis on q15's phantom
     // 1.5x "regression", pure run-to-run drift; min-of-3 is the published

@@ -404,15 +404,7 @@ object Curate {
   def main(args: Array[String]): Unit = {
     val (flags, pos) = args.partition(_.startsWith("--"))
     val Array(dataDir, outDir) = pos
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(graft.functions.GraftFunctions.register)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // input-proportional shuffle width (the sf3 rehearsal rule): the
     // ladder's gram/LSH stages are the posting-list shuffles Tuning
     // calibrates for, and Curate's input is open-ended — unlike the

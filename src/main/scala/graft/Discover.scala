@@ -68,15 +68,7 @@ object Discover {
   def main(args: Array[String]): Unit = {
     val Array(dataDir, storeDir, runDate) = args.take(3)
     val minRho = args.lift(3).map(_.toDouble).getOrElse(0.25)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(graft.functions.GraftFunctions.register)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val s = run(spark, dataDir, storeDir, runDate, minRho)
     spark.stop()
     println(s"""{"run_date":"${s.runDate}","findings":${s.findings},""" +

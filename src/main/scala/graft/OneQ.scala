@@ -1,18 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+/** The fresh-JVM child that graft.Bench forks for its isolated section:
+  * times each named query in a new JVM. It builds the same
+  * [[Session.local]] as the suite (the fork inherits SPARK_GRAFT_CPUS),
+  * so an isolated read and its in-suite twin differ only by the JVM's
+  * history, which is what Bench's 1.5 × in-suite re-fork rule assumes.
+  */
 object OneQ {
   def main(args: Array[String]): Unit = {
-    // SPARK_GRAFT_SHUFFLE overrides the shuffle width for scale
-    // rehearsals (the PLANS.md sf3 probe of when 32 partitions stops
-    // being enough); the bench itself always runs the default 32
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(graft.functions.GraftFunctions.register)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Two untimed warmups per query before the timed min-of-3: wide generated
     // aggregates need ~3 executions before C2 fully compiles them (see the

@@ -93,15 +93,7 @@ object Pipeline {
   /** CLI: `runMain graft.Pipeline <dataDir> <outDir>` */
   def main(args: Array[String]): Unit = {
     val Array(dataDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(graft.functions.GraftFunctions.register)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     val s = run(spark, dataDir, outDir)
     println(if (s.skipped) "pipeline: SKIPPED (another run holds the lock)"
       else s"pipeline: rollup=${s.rollupRows} rows, training_load=${s.trainingLoadRows} rows, " +

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic corpus replicator for SCALE REHEARSALS: blow the
@@ -69,14 +69,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, factorStr) = args
     val factor = factorStr.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     scaleDocuments(spark.read.parquet(s"$srcDir/documents.parquet"), factor)
       .repartition(32)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")

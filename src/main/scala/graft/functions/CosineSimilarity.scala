@@ -78,8 +78,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 /** SparkSessionExtensions hook registering graft's native functions.
-  * Attach with `SparkSession.builder.withExtensions(GraftFunctions.register)`
-  * or `spark.sql.extensions=graft.functions.GraftFunctions`.
+  * [[graft.Session.local]] attaches it; another session passes
+  * `GraftFunctions.register` to its builder's `withExtensions`, or sets
+  * `spark.sql.extensions=graft.functions.GraftFunctions`.
   */
 class GraftFunctions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

@@ -133,19 +133,10 @@ object Bpe {
     * adaptive — see the headroom ratchet below) driver pull.
     */
   def train(docs: DataFrame, numMerges: Int, minCount: Long = 2L,
-            batchMerges: Int = 1): Seq[(String, String)] =
-    trainWithStats(docs, numMerges, minCount, batchMerges)._1
-
-  /** [[train]] plus the round count it paid — the number the k/m
-    * arithmetic predicts and the production-vocabulary rehearsal
-    * ([[graft.BpeRehearsal]]) publishes (VERDICT r10 #4).
-    */
-  def trainWithStats(docs: DataFrame, numMerges: Int, minCount: Long = 2L,
-                     batchMerges: Int = 1): (Seq[(String, String)], Int) = {
+            batchMerges: Int = 1): Seq[(String, String)] = {
     require(batchMerges >= 1, s"batchMerges must be >= 1, got $batchMerges")
     var syms = initialSyms(wordTable(docs)).localCheckpoint(true)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var rounds = 0
     // adaptive pull headroom (round 12 — VERDICT r11 #6): the fixed 4×
     // window measured ~14 of 64 accepted per production round — early
     // vocabularies collide on a few hot symbols, so most of a thin
@@ -171,7 +162,6 @@ object Bpe {
           .collect()
           .toSeq.map(r => (r.getAs[String]("a"), r.getAs[String]("b")))
         val round = disjointBatch(top, want)
-        rounds += 1
         if (round.isEmpty) exhausted = true
         else {
           merges ++= round
@@ -184,7 +174,7 @@ object Bpe {
             if (round.size < (want + 1) / 2) math.min(headroom * 2, 32) else 4
         }
       }
-      (merges.toSeq, rounds)
+      merges.toSeq
     } finally Frames.freePinned(syms)
   }
 
@@ -511,29 +501,5 @@ object Bpe {
        |    AS saved_pct_r
        |FROM g
        |ORDER BY lang""".stripMargin
-  }
-
-  /** CLI: `runMain graft.operators.Bpe <dataDir> <numMerges> [batchMerges]`
-    * — prints the learned merge list and the wall time (the
-    * batched-vs-sequential rehearsal knob).
-    */
-  def main(args: Array[String]): Unit = {
-    val (dataDir, k) = (args(0), args(1).toInt)
-    val m = if (args.length > 2) args(2).toInt else 1
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val t0 = System.nanoTime()
-    val merges = train(Tables.load(spark, dataDir, "documents"), k, batchMerges = m)
-    val wall = (System.nanoTime() - t0) / 1e9
-    merges.zipWithIndex.foreach { case ((a, b), i) =>
-      println(s"merge ${i + 1}: '$a' + '$b'")
-    }
-    println(f"bpe train: ${merges.size} merges, batchMerges=$m, $wall%.1f s")
-    spark.stop()
   }
 }

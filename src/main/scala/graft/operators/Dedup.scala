@@ -504,7 +504,8 @@ object Dedup {
     * cross-session consumer ([[probeIndex]]/[[probeHashIndex]]/
     * [[graft.streaming.EventStreams.nearDupQuery]] racing another
     * session's refresh) could still observe a cleared location, the
-    * exact pre-r14 PQ failure IsoRehearsal measured. Symmetry closes
+    * exact pre-r14 PQ failure measured in PLANS.md "Round-14: serving
+    * under refresh — the isolation claim, measured". Symmetry closes
     * it: readers resolve the pointer once per plan, old generations
     * retire on the one-generation grace, and the WRITE ORDER note
     * below becomes moot within a generation (the swap publishes hashes
@@ -1176,8 +1177,9 @@ object Dedup {
   // --------------------------------------------------------------- q152
 
   /** q152: the punctuation-perturbation admission hole, closed and
-    * value-anchored (round 16 — VERDICT r15 #1): TextRehearsal `--tok`
-    * measured `word,`-class perturbations fragmenting the text
+    * value-anchored (round 16 — VERDICT r15 #1): PLANS.md "Round-15:
+    * the robust tokenizer mode, fidelity-measured" measured `word,`-class
+    * perturbations fragmenting the text
     * vocabulary 4× — the same class perturbs EVERY word shingle and
     * both legacy hash keys, so a punctuated re-submission of an
     * admitted document sailed past the exact AND band screens. This
@@ -1191,7 +1193,9 @@ object Dedup {
     * grid. The admission stack runs this class through the SAME kernels
     * ([[probeIndex]]/[[probeHashIndex]] always encode under the `robust`
     * arm, [[TextRank.StandingTok]]), so AdmitSpec's rejection case and
-    * ComposeRehearsal's adversarial batch are anchored to these values.
+    * the adversarial batch of PLANS.md "Round-16: the composition
+    * re-priced with the punctuated adversarial class" are anchored to
+    * these values.
     *
     * Scale shape: two band passes over the corpus + two batch-sized
     * probes (the q83 read shape twice) and two hash equi-joins — no new

@@ -725,8 +725,9 @@ object TextRank {
     // included). The grid's decimal-sum shuffle carries every slice's
     // kept postings, so an uncapped ladder costs ~|candidates| × one
     // full panel ranking per refresh: measured 170 s at a 30× corpus
-    // with 17 candidates vs ~9 s per ranking — the sweep must stay a
-    // bounded multiple of ONE ranking (the CalRehearsal rule). The cap
+    // with 17 candidates vs ~9 s per ranking (PLANS.md "Round-14 third
+    // pass: serving under refresh, both families") — the sweep must stay
+    // a bounded multiple of ONE ranking (the bounded-sweep rule). The cap
     // coarsens minimality to "smallest CANDIDATE meeting the target",
     // stated — the quantile ladder still brackets every df regime the
     // panel actually contains.
@@ -837,11 +838,12 @@ object TextRank {
   case class HybridCal(dfFrac: Double, nprobe: Int,
                        target: Double, measured: Double, docsAtCal: Long,
                        // the dense arm's ADC shortlist depth (round 16
-                       // second pass): ServeRehearsal measured the FIXED
-                       // 64-candidate shortlist as the binding residual
+                       // second pass): the fixed 64-candidate shortlist
+                       // measured as the binding residual
                        // at 10×/30× (denser neighborhoods, constant
-                       // shortlist), so the sweep escalates it as a
-                       // third knob
+                       // shortlist; PLANS.md "Round-16 second pass: the
+                       // ADC shortlist becomes the third fused knob"), so
+                       // the sweep escalates it as a third knob
                        adcTopC: Int)
 
   /** Read a text index's persisted fused pair — None when the hybrid
@@ -957,7 +959,8 @@ object TextRank {
         require(nTruth > 0,
           s"hybrid calibration on $phys: the fused-exact truth is EMPTY — " +
             "no recall to measure; not persisting a fused pair")
-        // candidate grids, bounded (the CalRehearsal rule): ≤ 3 df
+        // candidate grids, bounded (the bounded-sweep rule, PLANS.md
+        // "Round-13: the calibration priced"): ≤ 3 df
         // fractions from the panel's own decision points + the
         // exactness end, × the nprobe doubling ladder
         val nDocs = s.table(s"${phys}_meta").agg(sum("n_docs"))
@@ -983,14 +986,15 @@ object TextRank {
             .agg(count(col("hit"))).head().getLong(0) / nTruth
         }
         // the ADC shortlist depth escalates as a THIRD knob (round 16
-        // second pass — ServeRehearsal measured the fixed 64-candidate
-        // shortlist as the 10×/30× fused-recall ceiling: denser
-        // neighborhoods, constant shortlist). Cost-ordered with one
+        // second pass — the fixed 64-candidate shortlist measured as the
+        // 10×/30× fused-recall ceiling: denser neighborhoods, constant
+        // shortlist; PLANS.md "Round-16 second pass: the ADC shortlist
+        // becomes the third fused knob"). Cost-ordered with one
         // CEILING probe per depth: the exactness end (frac 1.0,
         // nprobe = nlist) at depth d bounds every (frac, np) pair at d,
         // so a failing ceiling skips the whole depth for one call and
         // the sweep stays a bounded multiple of one ranking (the
-        // CalRehearsal rule — worst case |depths| + |ladder|·|fracs|
+        // bounded-sweep rule — worst case |depths| + |ladder|·|fracs|
         // calls, typical far fewer via early exit)
         var chosen: Option[(Double, Int, Int, Double)] = None
         var lastCeil = -1.0
