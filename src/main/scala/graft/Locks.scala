@@ -14,9 +14,11 @@ import org.apache.spark.sql.SparkSession
   * both screen against pre-append state and admit twin documents, the
   * duplicate class the indexes exist to stop).
   *
-  * Protocol (unchanged from the round-7/8 hardened Pipeline form):
-  *   - claim = atomic `FileSystem.createNewFile` — either this caller
-  *     owns the path or a live run does; no poll race window;
+  * Protocol (the round-7/8 hardened Pipeline form):
+  *   - claim = [[CommitLog.putIfAbsent]] of the lock path holding a
+  *     fresh token — either this caller owns the path or a live run
+  *     does; no poll race window, and no instant at which the lock
+  *     exists without its holder's token;
   *   - a lock file OLDER than `staleAfterMs` is crash debris (a JVM
   *     that never reached its finally); reclaim renames the debris
   *     aside — never deletes the lock path, so of N concurrent
@@ -41,38 +43,14 @@ import org.apache.spark.sql.SparkSession
   *     ON DISK is still its own, so a reclaimed holder can never free
   *     the new holder's claim.
   *
-  * Atomicity of the claim, per scheme: on HDFS the namenode arbitrates
-  * `createNewFile` server-side. On LOCAL filesystems Hadoop's
-  * `FileSystem.createNewFile` is check-then-act (`exists()` then
-  * `create(f, false)`, and RawLocalFileSystem opens without O_EXCL), so
-  * two same-instant claimers could BOTH win — AdmitSpec's racing-cycles
-  * test caught exactly this window live (both cycles entered the
-  * critical section and their index appends collided in the table's
-  * shared `_temporary` staging dir). [[atomicCreate]] therefore routes
-  * `file:` paths through `java.io.File.createNewFile`, which the JDK
-  * implements with O_CREAT|O_EXCL — a kernel-atomic claim. Object-store
-  * caveat (unchanged): S3A has no atomic create at all — front this
-  * with a real coordination service there.
+  * Atomicity of the claim is the primitive's: kernel-atomic link(2) on
+  * `file:` paths (Hadoop's local `createNewFile` is check-then-act, and
+  * AdmitSpec's racing-cycles test once caught two cycles both inside the
+  * critical section through that window), the namenode on HDFS.
+  * Object-store caveat (unchanged): S3A has no atomic create at all —
+  * front this with a real coordination service there.
   */
 object Locks {
-
-  /** Kernel-atomic claim attempt: exactly one of N same-instant callers
-    * returns true. Local paths use the JDK's O_EXCL create (Hadoop's
-    * local createNewFile is check-then-act — see object doc); every
-    * other scheme keeps `FileSystem.createNewFile` (atomic on HDFS).
-    */
-  private def atomicCreate(fs: FileSystem, lock: Path): Boolean = {
-    // qualify BEFORE dispatching: FileSystem.getScheme is allowed to
-    // throw on impls that never override it, and a relative Path's
-    // toUri.getPath would resolve against the JVM cwd, not the Hadoop
-    // working directory (ADVICE r9)
-    val q = fs.makeQualified(lock)
-    if (q.toUri.getScheme == "file") {
-      val f = new java.io.File(q.toUri.getPath)
-      try f.createNewFile()
-      catch { case _: java.io.IOException => false }
-    } else fs.createNewFile(q)
-  }
 
   /** A held claim; [[release]] is fenced by the token, and a daemon
     * heartbeat keeps a LIVE holder's mtime inside the TTL (see object
@@ -188,10 +166,10 @@ object Locks {
                staleAfterMs: Long): Option[Claim] = {
     val lock = new Path(lockPath)
     val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(lock.getParent)
-    val claimed = atomicCreate(fs, lock) || {
+    val token = java.util.UUID.randomUUID().toString
+    val claimed = CommitLog.putIfAbsent(fs, lock, token) || {
       // held — unless the holder crashed: the file's mtime is the claim
-      // time (set atomically by the create), so age > TTL means no live
+      // time (set atomically by the claim), so age > TTL means no live
       // run can own it. A vanished file means the holder just released;
       // either way contend for a fresh claim and lose gracefully.
       val stale =
@@ -203,18 +181,10 @@ object Locks {
           s"${lock.getParent}/.${lock.getName}-stale-${System.nanoTime()}")
         val renamed = try fs.rename(lock, debris) catch { case _: Exception => false }
         if (renamed) fs.delete(debris, false)
-        atomicCreate(fs, lock)
+        CommitLog.putIfAbsent(fs, lock, token)
       }
     }
-    if (!claimed) None
-    else {
-      val token = java.util.UUID.randomUUID().toString
-      // we own the path — overwrite our empty claim with the token
-      val os = fs.create(lock, true)
-      try os.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally os.close()
-      Some(new Claim(fs, lock, token, staleAfterMs))
-    }
+    if (claimed) Some(new Claim(fs, lock, token, staleAfterMs)) else None
   }
 
   /** Claim `lockPath`, retrying until `maxWaitMs` elapses — the

@@ -4,20 +4,23 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.CommitLog
+
 /** Intervention registry — the experiment tracker's data model and store
   * (reference: insights_engine/experiments/tracker.py:31-185: intervention
   * records in one S3 JSON object, optimistic locking via If-Match on the
   * ETag, CRUD plus an overlap "confound warning" probe).
   *
-  * Spark-native form: versioned parquet snapshots under `dir/v=N/`. The
-  * registry is config-sized (tens of rows), so each mutation reads the
-  * current snapshot, transforms it declaratively, and commits version N+1
-  * by ATOMIC RENAME of a staged directory — on HDFS-like stores rename
-  * fails if the destination exists, which is exactly the reference's
-  * ETag precondition: a concurrent writer that claimed N+1 first wins,
-  * and the loser reloads and replays its change once (the conflict-merge
-  * path of tracker.py:102-118). Readers always see a complete snapshot
-  * (max committed N), never a partial write.
+  * Spark-native form: versioned parquet snapshots committed through
+  * [[graft.CommitLog]]. The registry is config-sized (tens of rows), so
+  * each mutation reads the current snapshot, transforms it
+  * declaratively, writes the result to a fresh `dir/snap-<uuid>/`, and
+  * commits version N+1 by put-if-absent of log entry `dir/_log/<N+1>`
+  * naming it — exactly the reference's ETag precondition: of writers
+  * that read N, one creates entry N+1, and the losers reload and replay
+  * their change once (the conflict-merge path of tracker.py:102-118).
+  * Readers take the newest entry, so they always see a complete
+  * snapshot, never a partial write or an uncommitted one.
   *
   * "Today" never comes from the clock: the active/overlap probes take an
   * explicit `asOf` day, so every result is replayable (the reference's
@@ -37,22 +40,16 @@ object ExperimentStore {
   private def fs(s: SparkSession, dir: String) =
     new Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  private def versions(s: SparkSession, dir: String): Seq[Int] = {
-    val p = new Path(dir)
-    val f = fs(s, dir)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq.filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith("v="))
-      .map(_.stripPrefix("v=").toInt).sorted
-  }
+  private def logOf(dir: String) = new Path(s"$dir/_log")
 
   /** Newest committed snapshot and its version (v=0, empty frame when the
     * store was never written) — the read half of the ETag handshake.
     */
   private def snapshot(s: SparkSession, dir: String): (DataFrame, Int) = {
     import s.implicits._
-    versions(s, dir).lastOption match {
-      case Some(v) => (s.read.parquet(s"$dir/v=$v"), v)
+    val (f, log) = (fs(s, dir), logOf(dir))
+    CommitLog.entries(f, log).lastOption match {
+      case Some(v) => (s.read.parquet(s"$dir/${CommitLog.read(f, log, v)}"), v)
       case None => (Seq.empty[Intervention].toDS.toDF, 0)
     }
   }
@@ -64,39 +61,15 @@ object ExperimentStore {
   /** Commit `next` as version `readVersion + 1`. Returns false when a
     * concurrent writer claimed that version after our read — the
     * If-Match precondition of tracker.py:96-103 — and the caller reloads
-    * and replays.
-    *
-    * Each attempt stages under a UNIQUE per-writer path (never shared, so
-    * racing writers can't interleave files into one staging directory),
-    * and the ONLY win condition is the atomic no-overwrite rename onto
-    * `v=N` — `FileContext.rename` with the default `Rename.NONE` fails
-    * when the destination exists instead of moving the source inside it
-    * (the `FileSystem.rename` hazard on HDFS). A writer that crashes
-    * before its rename leaves an orphaned `.staging-*` directory;
-    * `versions()` only reads `v=` children, so orphans are inert.
+    * and replays. The snapshot is written first under a unique name, so
+    * racing writers never share files; the loser deletes its own.
     */
   private[graft] def commitAt(next: DataFrame, dir: String, readVersion: Int): Boolean = {
     val s = next.sparkSession
-    val v = readVersion + 1
-    val staged = s"$dir/.staging-v$v-${java.util.UUID.randomUUID}"
-    next.coalesce(1).write.parquet(staged)
-    val conf = s.sparkContext.hadoopConfiguration
-    val ok =
-      try {
-        org.apache.hadoop.fs.FileContext.getFileContext(new Path(dir).toUri, conf)
-          .rename(new Path(staged), new Path(s"$dir/v=$v"))
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case e: java.io.IOException =>
-          // lost-race shapes vary by FS, so a broad catch is needed — but a
-          // genuine I/O fault must not masquerade silently as a race: log
-          // it so a double "lost the race" failure is diagnosable.
-          Console.err.println(s"[experiment-store] rename to v=$v failed " +
-            s"(${e.getClass.getSimpleName}: ${e.getMessage}) — treating as a lost version race")
-          false
-      }
-    if (!ok) fs(s, dir).delete(new Path(staged), true)
+    val staged = s"snap-${java.util.UUID.randomUUID}"
+    next.coalesce(1).write.parquet(s"$dir/$staged")
+    val ok = CommitLog.commit(fs(s, dir), logOf(dir), readVersion + 1, staged)
+    if (!ok) fs(s, dir).delete(new Path(s"$dir/$staged"), true)
     ok
   }
 

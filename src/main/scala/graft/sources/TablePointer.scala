@@ -3,9 +3,10 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Versioned physical tables behind an ATOMIC current pointer — reader-
-  * side snapshot isolation for standing-index refreshes (round 14 —
-  * VERDICT r13 #2).
+import graft.CommitLog
+
+/** Versioned physical tables behind a commit log — reader-side snapshot
+  * isolation for standing-index refreshes (round 14 — VERDICT r13 #2).
   *
   * The problem this closes: a refresh of a standing index rewrote its
   * managed tables IN PLACE (clearStaleLocation deletes the location,
@@ -16,24 +17,22 @@ import org.apache.spark.sql.SparkSession
   * take no lock — a reader racing a refresh could observe a partially
   * rewritten table or a cleared location. A real table format's commit
   * protocol hands that reader the OLD snapshot; this is that protocol
-  * rebuilt from the repo's own primitives (the [[ExperimentStore]]
-  * staged-rename discipline, applied to a pointer file).
+  * on graft's one commit primitive ([[graft.CommitLog]]).
   *
   * Mechanics: each refresh writes a complete NEW generation of the
   * index's tables under physical names `<logical>__g<N>[,_<side>…]`,
-  * then atomically re-points `<warehouse>/_graft_pointers/<logical>` at
-  * the new generation (staged write + rename-with-OVERWRITE — one
-  * filesystem metadata op; on HDFS the namenode arbitrates it, the
-  * local-fs twin is an atomic rename(2)). Readers resolve the pointer
-  * ONCE per query plan, so a plan built against generation N keeps
-  * reading N's files even while N+1 lands — N's files are never touched
-  * by the swap. Old generations retire only after a GRACE of one
+  * then commits log entry `<warehouse>/_graft_log/<logical>/<N>` (its
+  * content is the physical name) by put-if-absent. The newest entry is
+  * the current generation. Readers resolve ONCE per query plan, so a
+  * plan built against generation N keeps reading N's files even while
+  * N+1 lands — N's files are never touched by the commit. Old
+  * generations and their entries retire only after a GRACE of one
   * generation ([[retire]] keeps current + previous), bounding the disk
   * overhead at ≤ 2× per index while giving in-flight readers a full
   * refresh cycle to finish.
   *
-  * Resolution is IDENTITY for names with no pointer file: a physical
-  * `__gN` name, or a name never refreshed (whose first refresh stages
+  * Resolution is IDENTITY for names with no log: a physical `__gN`
+  * name, or a name never refreshed (whose first refresh stages
   * generation 1). Every standing table is born under a generation —
   * there is no unversioned layout to adopt.
   */
@@ -42,33 +41,30 @@ object TablePointer {
   private def warehouseDir(s: SparkSession): String =
     s.conf.get("spark.sql.warehouse.dir")
 
-  private def pointerPath(s: SparkSession, logical: String): Path =
-    new Path(s"${warehouseDir(s)}/_graft_pointers/$logical")
+  private def logDir(s: SparkSession, logical: String): Path =
+    new Path(s"${warehouseDir(s)}/_graft_log/$logical")
 
   private def fsOf(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  /** The CURRENT physical name of `logical` — the pointer's contents,
-    * or `logical` itself when no pointer exists (an index never
-    * refreshed under generations, or a name that is already physical:
-    * `x__g2` has no pointer, so resolution is idempotent and internal
-    * code can pass either form).
-    */
-  def resolve(s: SparkSession, logical: String): String = {
-    val p = pointerPath(s, logical)
-    val fs = fsOf(s, p)
-    if (!fs.exists(p)) logical
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new Array[Byte](256)
-        val n = in.read(buf)
-        val v = new String(buf, 0, math.max(n, 0),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        if (v.isEmpty) logical else v
-      } finally in.close()
-    }
+  private def committed(s: SparkSession, logical: String): Seq[Int] = {
+    val log = logDir(s, logical)
+    CommitLog.entries(fsOf(s, log), log)
   }
+
+  /** Generations a refresh keeps on disk: the current one and one of
+    * grace for readers that resolved before the last commit.
+    */
+  private val KeepLast = 2
+
+  /** The CURRENT physical name of `logical` — the generation of the
+    * newest log entry, or `logical` itself when no log exists (an index
+    * never refreshed under generations, or a name that is already
+    * physical: `x__g2` has no log, so resolution is idempotent and
+    * internal code can pass either form). One directory listing.
+    */
+  def resolve(s: SparkSession, logical: String): String =
+    committed(s, logical).lastOption.fold(logical)(g => s"${logical}__g$g")
 
   private val GenSuffix = "__g(\\d+)$".r
 
@@ -82,50 +78,50 @@ object TablePointer {
     * generation + 1. A refresh that crashed before its swap left debris
     * at this name; the caller's clearStaleLocation-before-write handles
     * it (the next refresh stages the same generation number again,
-    * because the pointer never moved).
+    * because its log entry was never written).
     *
     * Writer contract: REFRESHES of one logical table must serialize —
     * two concurrent stagers would derive the same generation number and
     * interleave writes into one physical table. Every production
     * refresh path already does (Curate's handoff and Admit's WAL repair
-    * both run under the admission lock); the pointer protocol isolates
-    * READERS from writers, it does not arbitrate writer-vs-writer —
-    * that is the lock's job, as it was before generations existed.
+    * both run under the admission lock). The log isolates READERS from
+    * writers; it refuses the second commit of a generation ([[swap]]),
+    * but keeping two writers out of one physical table is the lock's
+    * job, as it was before generations existed.
     */
   def stage(s: SparkSession, logical: String): String =
     s"${logical}__g${generationOf(resolve(s, logical)) + 1}"
 
-  /** Atomically re-point `logical` at `physical` — the commit. Staged
-    * write + rename with OVERWRITE: readers resolve either the old or
-    * the new target, never a partial file.
+  /** Commit `physical` as the current generation of `logical`: log
+    * entry `generationOf(physical)` by put-if-absent. Throws, naming the
+    * generation, when that entry already exists — a second refresh that
+    * staged the same generation is refused, never silently overwritten.
     */
   def swap(s: SparkSession, logical: String, physical: String): Unit = {
-    val target = pointerPath(s, logical)
-    val fs = fsOf(s, target)
-    fs.mkdirs(target.getParent)
-    val staged = new Path(target.getParent,
-      s".staging-${java.util.UUID.randomUUID().toString.take(8)}-${target.getName}")
-    val os = fs.create(staged, true)
-    try os.write(physical.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-    // FileContext.rename(OVERWRITE) is the atomic-replace HDFS exposes;
-    // FileSystem.rename would fail on an existing destination
-    org.apache.hadoop.fs.FileContext.getFileContext(target.toUri,
-        s.sparkContext.hadoopConfiguration)
-      .rename(staged, target, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    val gen = generationOf(physical)
+    require(physical == s"${logical}__g$gen",
+      s"swap($logical): $physical is not a generation of $logical")
+    val log = logDir(s, logical)
+    if (!CommitLog.commit(fsOf(s, log), log, gen, physical))
+      throw new IllegalStateException(
+        s"generation $gen of $logical is already committed — a second " +
+          "refresh staged the same generation; refresh writers must " +
+          "serialize under the admission lock")
   }
 
-  /** Drop every generation older than current − (keepLast − 1) — the
-    * grace period: a reader that resolved before the last swap still
-    * has its whole generation on disk. `sideSuffixes` names
-    * the family's companion tables (e.g. `_centroids`); the empty
+  /** Drop every generation older than current − (KeepLast − 1), with
+    * its log entry — the grace period: a reader that resolved before the
+    * last commit still has its whole generation on disk. `sideSuffixes`
+    * names the family's companion tables (e.g. `_centroids`); the empty
     * suffix (the main table) is always included. Returns the dropped
     * physical prefixes.
     */
   def retire(s: SparkSession, logical: String,
-             sideSuffixes: Seq[String], keepLast: Int = 2): Seq[String] = {
-    require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val cutoff = generationOf(resolve(s, logical)) - (keepLast - 1)
+             sideSuffixes: Seq[String]): Seq[String] = {
+    val log = logDir(s, logical)
+    val fs = fsOf(s, log)
+    val gens = CommitLog.entries(fs, log)
+    val cutoff = gens.lastOption.getOrElse(0) - (KeepLast - 1)
     val dropGens = (1 until cutoff).map(g => s"${logical}__g$g")
     for (prefix <- dropGens; suffix <- "" +: sideSuffixes) {
       val t = s"$prefix$suffix"
@@ -136,19 +132,19 @@ object TablePointer {
       // clearStaleLocation lesson)
       Ingest.clearStaleLocation(s, t)
     }
+    for (g <- gens if g < cutoff) fs.delete(new Path(log, g.toString), false)
     dropGens
   }
 
-  /** Test/lifecycle helper: delete the pointer and EVERY generation of
+  /** Test/lifecycle helper: delete the log and EVERY generation of
     * `logical` (a crashed refresh's staged next generation included) —
     * the clean-slate drop specs and rebuilds-from-nothing use.
     */
   def dropAll(s: SparkSession, logical: String,
               sideSuffixes: Seq[String]): Unit = {
-    val p = pointerPath(s, logical)
-    val pfs = fsOf(s, p)
-    val curGen = generationOf(resolve(s, logical))
-    if (pfs.exists(p)) pfs.delete(p, false)
+    val log = logDir(s, logical)
+    val curGen = committed(s, logical).lastOption.getOrElse(0)
+    fsOf(s, log).delete(log, true)
     for (g <- 1 to curGen + 2; suffix <- "" +: sideSuffixes) {
       val t = s"${logical}__g$g$suffix"
       s.sql(s"DROP TABLE IF EXISTS default.`$t`")

@@ -181,10 +181,10 @@ class IngestSpec extends SparkSpec {
     // an append-only landing in the admission shape: batch_id= partitions
     Seq((1L, "first"), (2L, "second")).toDF("doc_id", "text")
       .write.parquet(s"$dir/batch_id=1")
-    assert(Snapshots.publish(spark, dir, 1) > 0)
+    assert(Snapshots.publishNext(spark, dir) == 1)
     Seq((3L, "third")).toDF("doc_id", "text")
       .write.parquet(s"$dir/batch_id=2")
-    Snapshots.publish(spark, dir, 2)
+    assert(Snapshots.publishNext(spark, dir) == 2)
 
     // time travel: v1 sees ONLY batch 1 even though batch 2 landed,
     // v2 sees both, and partition columns survive the pinned read
@@ -195,7 +195,7 @@ class IngestSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() == 3, "live read sees everything")
     val vs = Snapshots.versions(spark, dir).collect()
       .map(r => r.getAs[Int]("version") -> r.getAs[Long]("n_files")).toMap
-    assert(vs.keySet == Set(1, 2) && vs(2) > vs(1), vs.toString)
+    assert(vs.keySet == Set(1, 2) && vs(1) > 0 && vs(2) > vs(1), vs.toString)
 
     // history rewrite (a replayed batch overwrites its partition): the
     // invalidated snapshot FAILS LOUDLY, never a silent partial corpus
@@ -208,7 +208,7 @@ class IngestSpec extends SparkSpec {
     val ex = intercept[IllegalStateException](Snapshots.readAsOf(spark, dir, 1))
     assert(ex.getMessage.contains("history rewrite"), ex.getMessage)
     // fresh publishes keep working after the rewrite
-    Snapshots.publish(spark, dir, 3)
+    assert(Snapshots.publishNext(spark, dir) == 3)
     assert(Snapshots.readAsOf(spark, dir, 3).count() == 3)
   }
 
@@ -225,7 +225,8 @@ class IngestSpec extends SparkSpec {
       for (i <- 0 until 100)
         Files.write(d.resolve(f"part-$i%05d.parquet"), Array[Byte](1, 2, 3))
     }
-    assert(Snapshots.publish(spark, dir, 1) == 3000L)
+    assert(Snapshots.publishNext(spark, dir) == 1)
+    assert(Snapshots.versions(spark, dir).select("n_files").head().getLong(0) == 3000L)
     val v = Snapshots.validate(spark, dir, 1)
     // the check is a manifest⋈live JOIN, not a collected file map
     assert(planString(v).contains("Join"), planString(v).take(400))
@@ -249,11 +250,12 @@ class IngestSpec extends SparkSpec {
       .toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/batch_id=1")
     Seq((3L, "third landed document")).toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/batch_id=2")
-    assert(Snapshots.publish(spark, dir, 1, publisher = "curate-run",
-      countRows = true) > 0)
+    assert(Snapshots.publishNext(spark, dir, publisher = "curate-run",
+      countRows = true) == 1)
     // the publish metadata row surfaces in the catalog
     val meta = Snapshots.versions(spark, dir).collect().head
-    assert(meta.getAs[String]("publisher") == "curate-run" &&
+    assert(meta.getAs[Long]("n_files") > 0 &&
+      meta.getAs[String]("publisher") == "curate-run" &&
       meta.getAs[Long]("row_count") == 3L, meta.toString)
 
     // drift AFTER v1: an append INTO partition 2 and a whole new
@@ -308,7 +310,7 @@ class IngestSpec extends SparkSpec {
       .coalesce(1).write.parquet(s"$dir/y=2020/m=2")
     Seq((4L, "fourth nested document")).toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/y=2021/m=1")
-    Snapshots.publish(spark, dir, 1)
+    assert(Snapshots.publishNext(spark, dir) == 1)
 
     // drift: an append INTO y=2020/m=2 and a wholly new y=2021/m=2
     Seq((9L, "late nested appendix")).toDF("doc_id", "text")
@@ -356,7 +358,8 @@ class IngestSpec extends SparkSpec {
     val dir = tmpDir("snapmany").toString
     Seq((1L, "the only landed document")).toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/batch_id=1")
-    for (v <- 1 to 50) Snapshots.publish(spark, dir, v, publisher = s"pub-$v")
+    for (v <- 1 to 50)
+      assert(Snapshots.publishNext(spark, dir, publisher = s"pub-$v") == v)
 
     spark.sparkContext.setJobGroup("versions-one-pass", "catalog read")
     val vs = try Snapshots.versions(spark, dir).collect()
@@ -405,6 +408,26 @@ class IngestSpec extends SparkSpec {
     assert(Snapshots.readAsOf(spark, dir, 3).count() == 1)
   }
 
+  test("a manifest written but never committed is not a version, and the next publish takes the next number") {
+    import graft.sources.Snapshots
+    import spark.implicits._
+    val dir = tmpDir("snapcrash").toString
+    Seq((1L, "one landed document")).toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$dir/batch_id=1")
+    assert(Snapshots.publishNext(spark, dir) == 1)
+    // a publisher dies between its manifest write and its log entry
+    Seq(("batch_id=1/ghost.parquet", 1L, 1L, "crashed", -1L))
+      .toDF("path", "size", "mtime", "publisher", "row_count")
+      .coalesce(1).write.parquet(s"$dir/_snapshots/m=pub-crashed")
+    assert(Snapshots.versions(spark, dir).select("version").as[Int]
+      .collect().toSeq == Seq(1))
+    Seq((2L, "two landed document")).toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$dir/batch_id=2")
+    assert(Snapshots.publishNext(spark, dir) == 2)
+    assert(Snapshots.readAsOf(spark, dir, 1).count() == 1 &&
+      Snapshots.readAsOf(spark, dir, 2).count() == 2)
+  }
+
   test("snapshot retention: expireVersions drops old manifests only; expired reads fail naming the expiry") {
     import graft.sources.Snapshots
     import spark.implicits._
@@ -412,7 +435,7 @@ class IngestSpec extends SparkSpec {
     for (v <- 1 to 3) {
       Seq((v.toLong, s"landed document number $v")).toDF("doc_id", "text")
         .coalesce(1).write.parquet(s"$dir/batch_id=$v")
-      Snapshots.publish(spark, dir, v)
+      assert(Snapshots.publishNext(spark, dir) == v)
     }
     assert(Snapshots.expireVersions(spark, dir, keepLast = 2) == Seq(1))
     val left = Snapshots.versions(spark, dir).select("version")
@@ -437,7 +460,7 @@ class IngestSpec extends SparkSpec {
       (2L, "the second landed report concerns pendulum orchards at dusk"),
       (3L, "a third narrative follows cartographers indexing paper boats"))
       .toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/batch_id=1")
-    Snapshots.publish(spark, dir, 1)
+    assert(Snapshots.publishNext(spark, dir) == 1)
     val card1 = CorpusOps.dataCardAsOf(spark, dir, 1).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
 
@@ -445,7 +468,7 @@ class IngestSpec extends SparkSpec {
     // exact dups either side, so that metric must NOT move)
     Seq((4L, "tiny note"), (5L, "another brief memo")).toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/batch_id=2")
-    Snapshots.publish(spark, dir, 2)
+    assert(Snapshots.publishNext(spark, dir) == 2)
 
     // stability: the v1 card is bit-identical after v2 landed
     val card1b = CorpusOps.dataCardAsOf(spark, dir, 1).collect()

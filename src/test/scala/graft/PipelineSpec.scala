@@ -66,8 +66,8 @@ class PipelineSpec extends SparkSpec {
     // non-O_EXCL create), so same-instant claimers could both "win" —
     // the window AdmitSpec's race test hit live (both cycles inside the
     // critical section, colliding in the table's _temporary staging
-    // dir). Locks.atomicCreate now routes file: paths through the JDK's
-    // O_CREAT|O_EXCL create; this hammer releases 16 contenders through
+    // dir). Claims now land through CommitLog.putIfAbsent, a link(2) on
+    // file: paths; this hammer releases 16 contenders through
     // a barrier 40 times and demands exactly one claim per round — a
     // deterministic reproducer-class test for the old window, which a
     // microsecond-wide race would hit with high probability across 640
