@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Num, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Embedding-space operators: cosine similarity search (exact top-k
@@ -2752,8 +2752,8 @@ object Ann {
     */
   private[graft] def pqScreenNprobeOf(s: SparkSession, table0: String): Option[Int] = {
     val table = graft.sources.TablePointer.resolve(s, table0)
-    s.table(s"${table}_meta").select("screen_nprobe").collect().headOption
-      .map(_.getInt(0)).filter(_ >= 1)
+    Serving.companionRows(s, s"${table}_meta").rows.headOption
+      .map(_.getAs[Int]("screen_nprobe")).filter(_ >= 1)
   }
 
   /** Held-out re-encode screen recall of a standing [[refreshPqIndex]]
@@ -2957,108 +2957,208 @@ object Ann {
     s.catalog.refreshTable(t)
   }
 
+  /** The coarse quantizer (`_centroids`: cell, qcent, cnorm2) and the
+    * PQ codebook (`_codebook`: sub, code, jj, cw) of one generation as
+    * driver-side rows — nlist and 1 024 rows. Both are frozen for a
+    * generation's life, and the standing ones come from the
+    * [[Serving.companionRows]] memo, so a warm search reads neither.
+    */
+  private[operators] final case class PqState(centroids: Serving.Companion,
+                                              codebook: Serving.Companion) {
+    def nlist: Int = centroids.rows.length
+  }
+
+  /** The standing [[PqState]] of a physical generation. */
+  private[operators] def pqStateOf(s: SparkSession, phys: String): PqState =
+    PqState(Serving.companionRows(s, s"${phys}_centroids"),
+      Serving.companionRows(s, s"${phys}_codebook"))
+
+  /** SQL long arithmetic on the driver as graft's sessions evaluate it
+    * (Spark's default ANSI mode): nulls propagate and overflow throws, so
+    * the probe ranking and LUT below reproduce the Spark expressions they
+    * stand in for bit for bit.
+    */
+  private object SqlLong {
+    type L = java.lang.Long
+    def add(a: L, b: L): L =
+      if (a == null || b == null) null else Math.addExact(a.longValue, b.longValue)
+    def mul(a: L, b: L): L =
+      if (a == null || b == null) null else Math.multiplyExact(a.longValue, b.longValue)
+    /** `sum`: nulls skipped, null when no input is non-null. */
+    def sum(acc: L, v: L): L = if (v == null) acc else if (acc == null) v else add(acc, v)
+    def max(acc: L, v: L): L = if (v == null) acc else if (acc == null) v else math.max(acc, v)
+    /** `aggregate(zip_with(a, b, (x, y) -> x * y), 0L, (acc, v) -> acc + v)`
+      * — zip_with pads the shorter array with nulls.
+      */
+    def dot(a: Array[L], b: Array[L]): L =
+      if (a == null || b == null) null
+      else {
+        var acc: L = 0L
+        var i = 0
+        val n = math.max(a.length, b.length)
+        while (i < n && acc != null) {
+          acc = add(acc, mul(if (i < a.length) a(i) else null, if (i < b.length) b(i) else null))
+          i += 1
+        }
+        acc
+      }
+  }
+
+  /** `floor(x * 1.0E7)` of every component of a collected `emb` value. */
+  private def quantizedOf(emb: Any): Array[java.lang.Long] = emb match {
+    case null => null
+    case xs: scala.collection.Seq[_] => xs.map(x =>
+      if (x == null) null
+      else java.lang.Long.valueOf(math.floor(x.asInstanceOf[Number].doubleValue * 1.0e7).toLong)
+    ).toArray
+  }
+
+  private def longArrayOf(v: Any): Array[java.lang.Long] = v match {
+    case null => null
+    case xs: scala.collection.Seq[_] =>
+      xs.map(x => if (x == null) null else java.lang.Long.valueOf(x.asInstanceOf[Number].longValue)).toArray
+  }
+
+  private def boxedLong(v: Any): java.lang.Long =
+    if (v == null) null else java.lang.Long.valueOf(v.asInstanceOf[Number].longValue)
+
+  /** Spark's ascending order of cell ids (strings byte-wise as UTF-8,
+    * nulls first).
+    */
+  private def compareCells(a: Any, b: Any): Int = (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: String, y: String) =>
+      val (p, q) = (x.getBytes("UTF-8"), y.getBytes("UTF-8"))
+      val n = math.min(p.length, q.length)
+      var i = 0
+      while (i < n && p(i) == q(i)) i += 1
+      if (i < n) (p(i) & 0xff) - (q(i) & 0xff) else p.length - q.length
+    case (x: Number, y: Number) => java.lang.Long.compare(x.longValue, y.longValue)
+    case _ => throw new IllegalStateException(s"cells $a and $b are not comparable")
+  }
+
+  /** The coarse probe ranking of a query batch: (q_id, cell, rn) rows
+    * with rn ≤ `upTo` per q_id, ordered (csim desc, cell) with csim =
+    * dot(qemb, qcent) / √(cnorm2 · qn2) over the quantized query — the
+    * same long sums and tie order as [[assignCellsLean]], so rn = 1 IS a
+    * probe's own-cell assignment. A row-local projection of the collected
+    * query side over the centroid rows: no window, no shuffle, no scan.
+    */
+  private def pqProbeRanked(queries: Array[Row], st: PqState,
+                            upTo: Int): Array[Row] = {
+    val cents = st.centroids.rows.map(r =>
+      (r.getAs[Any]("cell"), longArrayOf(r.getAs[Any]("qcent")), boxedLong(r.getAs[Any]("cnorm2"))))
+    def csim(qemb: Array[java.lang.Long], qn2: java.lang.Long,
+             qcent: Array[java.lang.Long], cn2: java.lang.Long): java.lang.Double = {
+      val d = SqlLong.dot(qemb, qcent)
+      if (d == null || cn2 == null || qn2 == null) null
+      else {
+        val den = math.sqrt(cn2.toDouble * qn2.toDouble)
+        if (den == 0.0) throw new ArithmeticException(
+          "[DIVIDE_BY_ZERO] a zero-norm query or centroid in the PQ probe ranking")
+        java.lang.Double.valueOf(d.toDouble / den)
+      }
+    }
+    // (csim desc nulls last, cell asc) — Spark's double order: NaN
+    // greatest, -0.0 == 0.0
+    val order: ((java.lang.Double, Any), (java.lang.Double, Any)) => Boolean = {
+      case ((a, ca), (b, cb)) =>
+        val c =
+          if (a == null && b == null) 0
+          else if (a == null) 1
+          else if (b == null) -1
+          else if (a.doubleValue == b.doubleValue) 0
+          else java.lang.Double.compare(b.doubleValue, a.doubleValue)
+        if (c != 0) c < 0 else compareCells(ca, cb) < 0
+    }
+    queries.groupBy(_.get(0)).toArray.flatMap { case (qid, rs) =>
+      rs.flatMap { r =>
+        val qemb = quantizedOf(r.get(1))
+        val qn2 = SqlLong.dot(qemb, qemb)
+        cents.map { case (cell, qcent, cn2) => (csim(qemb, qn2, qcent, cn2), cell) }
+      }.sortWith(order).take(math.max(upTo, 0)).zipWithIndex
+        .map { case ((_, cell), i) => Row(qid, cell, i + 1) }
+    }
+  }
+
+  /** The per-query ADC lookup table: one (q_id, sub, code) row per
+    * codebook (sub, code) the query's components reach, with d = Σ qv·cw,
+    * the codeword norm n2 = Σ cw² and the exact query norm qn2 = Σ qv²
+    * as a per-q_id constant (a norm summed over a candidate's matched
+    * rows would shrink for an appended sign-quantizer member whose
+    * (sub, code) has no codebook row). The same long sums as the
+    * component-explode ⋈ codebook aggregate it replaces, computed on the
+    * collected query side.
+    */
+  private def pqLut(queries: Array[Row], st: PqState): Array[Row] = {
+    val cb = st.codebook.rows.map(r => (r.getAs[Any]("sub"), r.getAs[Any]("code"),
+      r.getAs[Any]("jj").asInstanceOf[Number].longValue, boxedLong(r.getAs[Any]("cw"))))
+    val acc = scala.collection.mutable.LinkedHashMap.empty[(Any, Any, Any),
+      (java.lang.Long, java.lang.Long, java.lang.Long)]
+    queries.foreach { r =>
+      val qv = quantizedOf(r.get(1))
+      if (qv != null) {
+        val qn2 = SqlLong.dot(qv, qv)
+        cb.foreach { case (sub, code, jj, cw) =>
+          val j = sub.asInstanceOf[Number].longValue * PqSubDim + jj
+          if (jj >= 0 && jj < PqSubDim && j >= 0 && j < qv.length) {
+            val key = (r.get(0), sub, code)
+            val (d, n2, q2) = acc.getOrElse(key, (null, null, null))
+            acc(key) = (SqlLong.sum(d, SqlLong.mul(qv(j.toInt), cw)),
+              SqlLong.sum(n2, SqlLong.mul(cw, cw)), SqlLong.max(q2, qn2))
+          }
+        }
+      }
+    }
+    acc.iterator.map { case ((q, sub, code), (d, n2, q2)) => Row(q, sub, code, d, n2, q2) }.toArray
+  }
+
   /** The IVF-PQ-rerank read path over a standing [[refreshPqIndex]]
-    * table — q110's three stages against materialized state: broadcast
-    * centroids assign each query its `nprobe` cells; the ADC stage
-    * scans ONLY those cells' code rows (partition pruning via the
-    * broadcast probe join), scoring 8 integer LUT adds per candidate;
-    * the exact rerank touches float vectors for the ADC top-`adcTopC`
+    * generation — q110's three stages against materialized state: the
+    * query side's `nprobe` cells ([[pqProbeRanked]]); the ADC stage scans
+    * ONLY those cells' code rows (static partition pruning on the probed
+    * cells), scoring 8 integer LUT adds per candidate ([[pqLut]]); the
+    * exact rerank touches float vectors for the ADC top-`adcTopC`
     * survivors per query only. Returns (q_id, rank, n_id, cosine, cell)
     * rows, rank ≤ `k`, cosine the TRUE cosine of the survivors
     * (`verify = "dec"` decimal-exact — bit-equal to q25's for the same
     * pair; `"float"` the fused native kernel for serving).
     *
-    * Query frames BROADCAST (their LUTs are |Q|×128 rows), so the
-    * serving entry points guard the load shape: corpus-sized query sets
-    * must fail loudly, not OOM the driver.
+    * `queries` is the bounded, collected query side (a local relation of
+    * `vec_id`, `emb`): the serving entry points guard its size, so
+    * corpus-sized query sets fail loudly instead of OOMing the driver.
+    * `probes` is its (q_id, cell, rn ≤ nprobe) ranking, which a caller
+    * needing the own-cell column (rn = 1) shares.
     */
-  private def pqTopK(s: SparkSession, table: String, queries: DataFrame,
-                     k: Int, nprobe: Int, adcTopC: Int,
-                     verify: String): DataFrame = {
-    // one resolution binds the whole (members, centroids, codebook)
-    // triple to a single consistent generation — the reader contract
-    val t = graft.sources.TablePointer.resolve(s, table)
-    pqTopKFrames(s.table(t), s.table(s"${t}_centroids"),
-      s.table(s"${t}_codebook"), queries, k, nprobe, adcTopC, verify)
-  }
-
-  /** The IVF-PQ-rerank read path over ARBITRARY state frames — the core
-    * [[pqTopK]] (table-backed serving) and [[q112PqProbe]] (the
-    * self-contained oracle twin) share. `members` is (vec_id, codes,
-    * emb, cell) — exactly what [[refreshPqIndex]] materializes.
-    */
-  /** The ranked probe-cell frame of a query batch against broadcast
-    * centroids: (q_id, cell, rn) with rn ≤ `upTo`, ordered (csim desc,
-    * cell) — the one coarse ranking [[pqTopKFrames]]' nprobe restriction
-    * AND a probe's own-cell assignment (rn = 1) both derive from, so a
-    * caller needing both computes the batch × centroids argmax ONCE
-    * (round 17: q112 used to run the identical crossJoin + window chain
-    * twice, once per consumer).
-    */
-  private def pqProbeRanked(queries: DataFrame, centroids: DataFrame,
-                            upTo: Int): DataFrame = {
+  private def pqTopKFrames(members: DataFrame, st: PqState, queries: DataFrame,
+                           probes: Array[Row], k: Int, adcTopC: Int,
+                           verify: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val probeW = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("cell"))
-    val qe = queries
-      .withColumn("qemb", quantize(col("emb")))
-      .withColumn("qn2", expr(
-        "aggregate(zip_with(qemb, qemb, (x, y) -> x * y), CAST(0 AS BIGINT), (a, v) -> a + v)"))
-    val qdot = expr(
-      "CAST(aggregate(zip_with(qemb, qcent, (x, y) -> x * y), CAST(0 AS BIGINT), (a, v) -> a + v) AS DOUBLE)")
-    qe.crossJoin(broadcast(centroids))
-      .withColumn("csim",
-        qdot / sqrt(col("cnorm2").cast("double") * col("qn2").cast("double")))
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= upTo)
-      .select(col("vec_id").as("q_id"), col("cell"), col("rn"))
-  }
-
-  private def pqTopKFrames(members: DataFrame, centroids: DataFrame,
-                           codebook: DataFrame, queries: DataFrame,
-                           k: Int, nprobe: Int, adcTopC: Int,
-                           verify: String,
-                           // a precomputed (q_id, cell, rn ≤ nprobe)
-                           // probe ranking, when the caller already owns
-                           // one ([[pqProbeRanked]]) — None computes it
-                           probesOpt: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-
-    // coarse stage: nprobe cells per query, via the broadcast centroids
-    val probes = probesOpt.getOrElse(pqProbeRanked(queries, centroids, nprobe))
+    import org.apache.spark.sql.types._
+    val s = queries.sparkSession
+    val qIdType = queries.schema("vec_id").dataType
+    val cellType = st.centroids.schema("cell").dataType
+    val probeDf = Serving.localFrame(s, probes.toSeq, StructType(Seq(
+      StructField("q_id", qIdType), StructField("cell", cellType),
+      StructField("rn", IntegerType))))
       .select("q_id", "cell")
+    val lut = Serving.localFrame(s, pqLut(queries.select("vec_id", "emb").collect(), st).toSeq,
+      StructType(Seq(StructField("q_id", qIdType),
+        StructField("sub", st.codebook.schema("sub").dataType),
+        StructField("code", st.codebook.schema("code").dataType),
+        StructField("d", LongType), StructField("n2", LongType),
+        StructField("qn2", LongType))))
+    // the probed cells' partitions only, for both member scans
+    val probed = members.filter(col("cell").isin(probes.map(_.get(1)).distinct.toSeq: _*))
 
-    // per-query integer LUT against the STANDING codebook: |Q| × 8 × 16
-    // rows, broadcast — the only per-query state the ADC scan touches.
-    // ONE broadcast carries all three ADC ingredients (round 18 — VERDICT
-    // r17 #4, q112's serialized job chain): the codeword norm n2 rides
-    // the LUT rows the grouping already enumerates (n2 = Σ_jj cw² per
-    // (sub, code)), and the exact query norm qn2 = Σ_j qv² rides every
-    // LUT row as a per-q_id CONSTANT, folded row-locally from the query
-    // vector. A per-sub partial summed over a candidate's matched rows
-    // would shrink for an appended sign-quantizer member whose (sub,
-    // code) has no codebook row, inflating exactly the worst-represented
-    // candidates. Long sums, bit-identical to the exact rollup.
-    val qcomps = queries
-      .select(col("vec_id").as("q_id"), posexplode(col("emb")).as(Seq("j", "v")),
-        expr("aggregate(emb, CAST(0 AS BIGINT), (a, x) -> " +
-          "a + CAST(floor(x * 1.0E7) AS BIGINT) * CAST(floor(x * 1.0E7) AS BIGINT))")
-          .as("qn2"))
-      .select(col("q_id"), expr(s"j div $PqSubDim").as("sub"),
-        expr(s"j % $PqSubDim").as("jj"),
-        floor(col("v") * lit(10000000.0)).cast("long").as("qv"), col("qn2"))
-    val lut = qcomps.join(broadcast(codebook), Seq("sub", "jj"))
-      .groupBy("q_id", "sub", "code")
-      .agg(sum(col("qv") * col("cw")).as("d"),
-        sum(col("cw") * col("cw")).as("n2"),
-        max(col("qn2")).as("qn2"))
-
-    // ADC stage: probed cells' code rows only (the broadcast cell join
-    // prunes the partitioned scan); 8 LUT adds per candidate
+    // ADC stage: probed cells' code rows only; 8 LUT adds per candidate
     val adcW = Window.partitionBy("q_id")
       .orderBy(col("adc_cosine").desc, col("vec_id"))
-    val shortlist = members
+    val shortlist = probed
       .select(col("vec_id"), col("cell"), posexplode(col("codes")).as(Seq("sub", "code")))
-      .join(broadcast(probes), Seq("cell"))
+      .join(broadcast(probeDf), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .join(broadcast(lut), Seq("q_id", "sub", "code"))
       .groupBy("q_id", "vec_id", "cell")
@@ -3079,7 +3179,7 @@ object Ann {
         s"verify must be dec or float, got $other")
     }
     val rankW = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_id"))
-    members.select(col("vec_id"), col("emb"), col("cell"))
+    probed.select(col("vec_id"), col("emb"), col("cell"))
       .join(broadcast(shortlist
         .join(broadcast(queries.select(col("vec_id").as("q_id"),
           col("emb").as("q_emb"))), Seq("q_id"))), Seq("vec_id", "cell"))
@@ -3090,26 +3190,58 @@ object Ann {
         col("cosine"), col("cell"))
   }
 
+  /** [[pqTopKFrames]] over a standing physical generation for an
+    * already-bounded query side — the one PQ serving read
+    * [[searchPqIndex]] and the hybrid dense arm share.
+    */
+  private[operators] def pqTopKServed(s: SparkSession, phys: String, queries: DataFrame,
+                                      k: Int, nprobe: Int, adcTopC: Int,
+                                      verify: String): DataFrame = {
+    val st = pqStateOf(s, phys)
+    pqTopKFrames(s.table(phys), st, queries,
+      pqProbeRanked(queries.select("vec_id", "emb").collect(), st, nprobe),
+      k, adcTopC, verify)
+  }
+
+  /** The bounded query side of a PQ search: `vec_id`, `emb`, at most
+    * `maxQueryRows` rows, collected once.
+    */
+  private[operators] def boundedPqQueries(queries: DataFrame,
+                                          maxQueryRows: Long): DataFrame =
+    Serving.boundedLocal(queries.select("vec_id", "emb"), maxQueryRows)(
+      s"searchPqIndex broadcasts its query set (the per-query ADC LUTs), " +
+        s"and the query frame holds more than maxQueryRows=$maxQueryRows " +
+        "rows — this is a serving path for small probe batches. For " +
+        "corpus-sized probes use the bucketed dedup probe (Ann.semProbe), " +
+        "which shuffles only the batch side, or raise maxQueryRows " +
+        "deliberately.")
+
   /** Top-k ANN SEARCH against a standing [[refreshPqIndex]] table — the
     * serving path (what are the k nearest neighbors?), with a loud
     * load-shape guard on the broadcast premise: over `maxQueryRows` the
     * call aborts naming the bulk path instead of OOMing the driver
-    * mid-broadcast.
+    * mid-broadcast. The pointer resolves once: the plan keeps its
+    * generation's files while a refresh lands the next one.
     */
   def searchPqIndex(s: SparkSession, table: String, queries: DataFrame,
                     k: Int = 10, nprobe: Int = 3, adcTopC: Int = 32,
                     verify: String = "float",
                     maxQueryRows: Long = 100000L): DataFrame = {
-    val nQ = queries.count()
-    require(nQ <= maxQueryRows,
-      s"searchPqIndex broadcasts its query set (the per-query ADC LUTs), " +
-        s"and $nQ query rows exceed maxQueryRows=$maxQueryRows — this is a " +
-        "serving path for small probe batches. For corpus-sized probes " +
-        "use the bucketed dedup probe (Ann.semProbe), which shuffles only " +
-        "the batch side, or raise maxQueryRows deliberately.")
-    pqTopK(s, table, queries, k, nprobe, adcTopC, verify)
+    val q = boundedPqQueries(queries, maxQueryRows)
+    pqTopKServed(s, graft.sources.TablePointer.resolve(s, table), q, k,
+        nprobe, adcTopC, verify)
       .select("q_id", "rank", "n_id", "cosine")
       .orderBy("q_id", "rank")
+  }
+
+  /** The (vec_id, cell) own-cell rows of a probe ranking (its rn = 1). */
+  private def ownCellsOf(s: SparkSession, ranked: Array[Row], batch: DataFrame,
+                         st: PqState): DataFrame = {
+    import org.apache.spark.sql.types._
+    Serving.localFrame(s,
+      ranked.filter(_.getInt(2) == 1).map(r => Row(r.get(0), r.get(1))).toSeq,
+      StructType(Seq(StructField("vec_id", batch.schema("vec_id").dataType),
+        StructField("cell", st.centroids.schema("cell").dataType))))
   }
 
   /** Near-dup PROBE of a batch against a standing [[refreshPqIndex]]
@@ -3130,23 +3262,25 @@ object Ann {
                    eps: Double = 0.99, nprobe: Int = 0, adcTopC: Int = 32,
                    verify: String = "float",
                    maxBatchRows: Long = 100000L): DataFrame = {
+    val t = graft.sources.TablePointer.resolve(s, table)
     val np = if (nprobe > 0) nprobe
-             else pqScreenNprobeOf(s, table).getOrElse(3)
-    val nB = batch.count()
-    require(nB <= maxBatchRows,
-      s"probePqIndex broadcasts its batch's ADC LUTs, and $nB batch rows " +
-        s"exceed maxBatchRows=$maxBatchRows — for corpus-sized probes use " +
-        "the bucketed semantic probe (Ann.semProbe), or raise " +
+             else pqScreenNprobeOf(s, t).getOrElse(3)
+    val b = Serving.boundedLocal(batch.select("vec_id", "emb"), maxBatchRows)(
+      s"probePqIndex broadcasts its batch's ADC LUTs, and the batch holds " +
+        s"more than maxBatchRows=$maxBatchRows rows — for corpus-sized " +
+        "probes use the bucketed semantic probe (Ann.semProbe), or raise " +
         "maxBatchRows deliberately.")
-    val best = pqTopK(s, table, batch, k = 1, np, adcTopC, verify)
+    val st = pqStateOf(s, t)
+    // ONE coarse ranking: the nprobe restriction and the report's
+    // own-cell column (rn = 1, the argmax assignment)
+    val ranked = pqProbeRanked(b.collect(), st, np)
+    val best = pqTopKFrames(s.table(t), st, b, ranked, k = 1, adcTopC, verify)
       .select(col("q_id"), col("n_id").as("match_vec_id"), col("cosine"))
-    // every batch vector's own cell (rank-1 probe) for the report shape
-    val centroids = centroidsOf(s, table)
+    val ownCell = ownCellsOf(s, ranked, b, st)
     // both right sides are batch-bounded — broadcast them so the final
     // assembly never sorts (a SortMergeJoin here would shuffle the batch
     // twice for two ≤|batch|-row lookups)
-    val ownCell = assignCellsLean(batch, centroids).select("vec_id", "cell")
-    batch.select("vec_id").join(broadcast(ownCell), Seq("vec_id"), "left")
+    b.select("vec_id").join(broadcast(ownCell), Seq("vec_id"), "left")
       .join(broadcast(best.withColumnRenamed("q_id", "vec_id")), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"), col("match_vec_id"), col("cosine"),
         coalesce((col("cosine") >= eps).cast("int"), lit(0)).as("is_dup"))
@@ -3204,36 +3338,38 @@ object Ann {
     val members = assignCellsLean(e, centroids)
       .select(col("vec_id"), pqCodesCol.as("codes"), col("emb"), col("cell"))
       .persist()
-    // no codebook persist since round 18: with the LUT fusion in
-    // pqTopKFrames the LUT is the codebook's only consumer
-    val codebook = pqCodebook(pqComps(pqCoded(e.select(col("vec_id"), col("emb")))))
+    // the serving read path's state is driver-side rows: the inline
+    // centroids and codebook are gathered once each (nlist and 1 024
+    // rows) — the codebook's corpus pass runs exactly once
+    def gathered(df: DataFrame) = Serving.Companion(df.schema, df.collect())
+    val st = PqState(gathered(centroids),
+      gathered(pqCodebook(pqComps(pqCoded(e.select(col("vec_id"), col("emb")))))))
     // q97's batch: re-encodes (must flag at cosine 1) + inversions
     // (must pass — their best exact cosine is far below eps)
-    val batch = e.filter(col("vec_id") % 7 === 0)
+    val batchRows = gathered(e.filter(col("vec_id") % 7 === 0)
       .select((col("vec_id") + 40000).as("vec_id"),
         expr("transform(emb, x -> x * 0.99)").as("emb"))
       .unionByName(e.filter(col("vec_id") % 11 === 0)
         .select((col("vec_id") + 50000).as("vec_id"),
-          expr("transform(emb, x -> -x)").as("emb")))
+          expr("transform(emb, x -> -x)").as("emb"))))
+    val batch = Serving.localFrame(s, batchRows.rows.toSeq, batchRows.schema)
     // ONE coarse ranking serves both the nprobe restriction and the
-    // report's own-cell column (round 17 — the rn = 1 row IS the argmax
+    // report's own-cell column (the rn = 1 row IS the argmax
     // assignment, same (csim desc, cell) order as assignCellsLean)
-    val ranked = pqProbeRanked(batch, centroids, nprobe).persist()
-    val best = pqTopKFrames(members, centroids, codebook, batch,
-        k = 1, nprobe, adcTopC, verify = "dec", probesOpt = Some(ranked))
+    val ranked = pqProbeRanked(batchRows.rows, st, nprobe)
+    val best = pqTopKFrames(members, st, batch, ranked, k = 1, adcTopC, verify = "dec")
       .select(col("q_id"), col("n_id").as("match_vec_id"), col("cosine"))
+    val ownCell = ownCellsOf(s, ranked, batch, st)
     // both right sides are batch-bounded — broadcast them so the final
     // assembly never sorts (a SortMergeJoin here would shuffle the batch
     // twice for two ≤|batch|-row lookups)
-    val ownCell = ranked.filter(col("rn") === 1)
-      .select(col("q_id").as("vec_id"), col("cell"))
     val res = batch.select("vec_id")
       .join(broadcast(ownCell), Seq("vec_id"), "left")
       .join(broadcast(best.withColumnRenamed("q_id", "vec_id")), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"), col("match_vec_id"), col("cosine"),
         coalesce((col("cosine") >= eps).cast("int"), lit(0)).as("is_dup"))
       .orderBy("vec_id")
-    (res, Seq(members, centroids, ranked))
+    (res, Seq(members, centroids))
   }
 
   val q112Sql: String =

@@ -1,0 +1,79 @@
+package graft.operators
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.StructType
+
+/** The per-request plumbing every standing-index serving read shares
+  * ([[TextRank.searchTextIndex]], [[TextRank.searchTextIndexChampion]],
+  * [[Ann.searchPqIndex]], [[Ann.probePqIndex]],
+  * [[TextRank.hybridSearchIndexed]]): one bounded query side and one
+  * driver-side memo of the small per-generation companion tables.
+  */
+private[graft] object Serving {
+
+  /** The bounded query side of a serving read: ONE collect of
+    * `maxRows + 1` rows fails loudly with `tooMany` past the bound, and
+    * the collected rows come back as a local relation. Every later use of
+    * the query side (its broadcasts, the driver-side probe ranking and
+    * LUT) then reads those rows instead of re-running the caller's plan.
+    * The broadcast premise is unchanged: a broadcast pulls the same rows
+    * to the driver.
+    *
+    * A local frame collects with no job. Any other frame is read through
+    * one partition that streams its input partitions in turn, so the
+    * collect is one job that stops after `maxRows + 1` rows, where
+    * Spark's take would scan one partition first and retry wider when
+    * that one held too few rows.
+    */
+  def boundedLocal(df: DataFrame, maxRows: Long)(tooMany: => String): DataFrame = {
+    val n = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
+    val limited = df.limit(n)
+    val rows = (limited.queryExecution.optimizedPlan match {
+      case _: LocalRelation => limited
+      case _ => df.coalesce(1).limit(n)
+    }).collect()
+    require(rows.length <= maxRows, tooMany)
+    localFrame(df.sparkSession, rows.toSeq, df.schema)
+  }
+
+  /** Driver-side rows as a local relation: the optimizer folds filters
+    * and projections over it, and collecting it runs no job.
+    */
+  def localFrame(s: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** A companion table's rows with its schema (an empty table has rows
+    * that cannot carry it).
+    */
+  final case class Companion(schema: StructType, rows: Array[Row])
+
+  /** Entries the companion memo keeps, least recently used dropped first. */
+  private val MemoEntries = 128
+
+  private type Key = (String, Seq[String])
+
+  private val memo = new java.util.LinkedHashMap[Key, Companion](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Key, Companion]): Boolean =
+      size() > MemoEntries
+  }
+
+  /** The rows of a small companion table (text `_meta`/`_cal`, PQ
+    * `_centroids`/`_codebook`/`_meta`), read once per FILE SET. The key
+    * is the table's input files from its cached file index (no job, no
+    * listing), not its name: a generation's companions change after it
+    * is published — appends add `_meta` partials, recalibration rewrites
+    * `_cal` and the PQ `_meta`, and `TablePointer.dropAll` restarts the
+    * numbering at `g1` — and every such write lands new files. A read
+    * sees exactly the files a plan over the table would scan.
+    */
+  def companionRows(s: SparkSession, table: String): Companion = {
+    val df = s.table(table)
+    val key: Key = (table, df.inputFiles.toSeq.sorted)
+    memo.synchronized(Option(memo.get(key))).getOrElse {
+      val c = Companion(df.schema, df.collect())
+      memo.synchronized(memo.put(key, c))
+      c
+    }
+  }
+}

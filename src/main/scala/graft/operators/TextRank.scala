@@ -327,8 +327,8 @@ object TextRank {
 
   /** Term-bucket PARTITION count for the postings table. Postings are
     * partitioned (directories, not buckets) by `tb = pmod(xxhash64(term),
-    * TermBuckets)` so a broadcast query panel prunes unmatched term
-    * buckets at the scan via dynamic partition pruning — the IVF-PQ
+    * TermBuckets)` so a search's collected query terms prune unmatched
+    * term buckets at the scan (static partition filters) — the IVF-PQ
     * members' cell-partitioning trick applied to posting lists. With
     * selective query terms a search reads only its terms' buckets; a
     * panel of stopwords degrades to the full postings scan, which is
@@ -420,8 +420,8 @@ object TextRank {
     * retrieval family's standing state, the lifecycle discipline of the
     * band/semantic/PQ families applied to postings: the posting table
     * (`term`, `doc_id`, `tf`, `dl`) is PARTITIONED by [[termBucket]] so
-    * a search's broadcast panel DPP-prunes unmatched term buckets at
-    * the scan, the `_df` companion is bucketed on `term` (vocabulary-
+    * a search's query terms prune unmatched term buckets at the scan,
+    * the `_df` companion is bucketed on `term` (vocabulary-
     * sized), `_meta` holds the corpus constants as summable partials,
     * and the whole triple lands as a NEW [[graft.sources.TablePointer]]
     * generation behind the atomic current pointer, so a search racing a
@@ -498,42 +498,72 @@ object TextRank {
     } finally post.unpersist(false)
   }
 
+  /** The bounded query side of a text search: `q_id`, `term`, at most
+    * `maxQueryRows` rows, collected once.
+    */
+  private def boundedTerms(qt: DataFrame, maxQueryRows: Long,
+                           what: String): DataFrame =
+    Serving.boundedLocal(qt.select("q_id", "term"), maxQueryRows)(
+      s"$what broadcasts its query terms, and the query frame holds more " +
+        s"than maxQueryRows=$maxQueryRows rows — this is a serving path " +
+        "for bounded query panels; for corpus-sized workloads run " +
+        "bm25TopK as a batch job, or raise maxQueryRows deliberately.")
+
+  /** The rows of a companion keyed by `term` for the distinct terms of a
+    * collected query side: an IN filter of literals, which prunes the
+    * table's term buckets and needs no broadcast.
+    */
+  private def forQueryTerms(companion: DataFrame, q: DataFrame): DataFrame =
+    companion.filter(col("term").isin(
+      q.select("term").collect().map(_.get(0)).distinct.toSeq: _*))
+
+  /** A generation's corpus constants as literal columns: n = Σ n_docs
+    * and avgdl = Σ total_tokens / Σ token_docs over the `_meta` partials
+    * (memoized rows) — the casts and the division of the `_meta`
+    * aggregate they replace, riding the query side instead of a
+    * broadcast.
+    */
+  private def corpusConstants(s: SparkSession, phys: String): (Column, Column) = {
+    val rows = Serving.companionRows(s, s"${phys}_meta").rows
+    def total(c: String): Column = {
+      val vs = rows.flatMap(r => Option(r.getAs[Any](c)).map(_.asInstanceOf[Number].longValue))
+      if (vs.isEmpty) lit(null).cast("long") else lit(vs.reduce(Math.addExact(_, _)))
+    }
+    (total("n_docs").cast("double"),
+      total("total_tokens").cast("double") / total("token_docs").cast("double"))
+  }
+
   /** BM25 top-k against the STANDING index — bit-equal to [[bm25TopK]]
     * over the same corpus (the spec's contract): the query-term frame is
-    * bounded and broadcast (the serving paths' premise, guarded the same
-    * way), df resolves from the `_df` partials for the query's terms
-    * only (vocabulary-bounded, then broadcast), the corpus constants sum
-    * from `_meta`, and the postings table is touched ONCE through its
-    * bucketed scan with no index-side exchange. The pointer resolves
-    * once per plan — a refresh landing mid-query never moves this
-    * query's files.
+    * bounded and collected once ([[Serving.boundedLocal]]), df resolves
+    * from the `_df` partials for the query's terms only (vocabulary-
+    * bounded, then broadcast), the corpus constants ride the query side
+    * as literals from the memoized `_meta` rows, and the postings table
+    * is touched ONCE through its term-bucket partitions — only the query
+    * terms' buckets are read — with no index-side exchange. The pointer
+    * resolves once per plan — a refresh landing mid-query never moves
+    * this query's files.
     */
   def searchTextIndex(s: SparkSession, table: String, qt: DataFrame,
                       k: Int = 10, maxQueryRows: Long = 100000L,
                       maxDfFrac: Double = 1.0): DataFrame = {
-    val nQ = qt.count()
-    require(nQ <= maxQueryRows,
-      s"searchTextIndex broadcasts its query terms, and $nQ query rows " +
-        s"exceed maxQueryRows=$maxQueryRows — this is a serving path for " +
-        "bounded query panels; for corpus-sized workloads run bm25TopK " +
-        "as a batch job, or raise maxQueryRows deliberately.")
-    val phys = graft.sources.TablePointer.resolve(s, table)
-    val post = s.table(phys)
-    val qterms = qt.select("term").distinct()
-    val qdf = s.table(s"${phys}_df")
-      .join(broadcast(qterms), "term")
-      .groupBy("term").agg(sum("df").as("df"))
-    val meta = s.table(s"${phys}_meta")
-      .agg(sum("n_docs").cast("double").as("n"),
-        (sum("total_tokens").cast("double") /
-          sum("token_docs").cast("double")).as("avgdl"))
+    val q = boundedTerms(qt, maxQueryRows, "searchTextIndex")
+    searchTextServed(s, graft.sources.TablePointer.resolve(s, table), q, k,
+      maxDfFrac)
+  }
+
+  /** [[searchTextIndex]] over a physical generation for an already-
+    * bounded query side — the sparse read the hybrid arm shares.
+    */
+  private def searchTextServed(s: SparkSession, phys: String, q: DataFrame,
+                               k: Int, maxDfFrac: Double): DataFrame = {
     // index elimination runs BEFORE the postings join: dropping a
     // stopword-class term from the panel removes its corpus-sized
-    // posting scan entirely (fewer surviving term buckets → more DPP
-    // pruning), which is the point — the same `df ≤ maxDfFrac·N` test
-    // bm25TopK applies per contrib row, applied where it saves work.
-    // The df/N test resolves from the same vocabulary-bounded partials
-    // the scoring reads, so the two paths can never disagree.
+    // posting scan entirely (fewer surviving term buckets), which is
+    // the point — the same `df ≤ maxDfFrac·N` test bm25TopK applies per
+    // contrib row, applied where it saves work. The df/N test resolves
+    // from the same vocabulary-bounded partials the scoring reads, so
+    // the two paths can never disagree.
     // maxDfFrac = 0.0 is AUTO: serve at the threshold the refresh
     // calibrated and persisted in `_cal`; with no calibration, degrade
     // toward EXACTNESS (1.0 — prune nothing), never a silent guess.
@@ -544,24 +574,27 @@ object TextRank {
         "and a value above 1 is meaningless (df never exceeds N — the " +
         "check enforces the full interval the message promises, ADVICE " +
         "r14)")
+    val post = s.table(phys)
+    val qdf = forQueryTerms(s.table(s"${phys}_df"), q)
+      .groupBy("term").agg(sum("df").as("df"))
+    val (n, avgdl) = corpusConstants(s, phys)
     val fracEff =
       if (maxDfFrac != 0.0) maxDfFrac
       else textCalOf(s, phys).map(_.maxDfFrac).getOrElse(1.0)
+    val withConsts = q.withColumn("n", n).withColumn("avgdl", avgdl)
     val panel =
-      if (fracEff >= 1.0) qt
-      else qt.join(broadcast(
-        qdf.crossJoin(meta.select(col("n")))
-          .filter(col("df").cast("double") <= lit(fracEff) * col("n"))
+      if (fracEff >= 1.0) withConsts
+      else withConsts.join(broadcast(
+        qdf.filter(col("df").cast("double") <= lit(fracEff) * n)
           .select("term")), "term")
-    // the panel joins on (tb, term): tb is the postings table's
-    // partition column, so the broadcast side's bucket values prune
-    // unmatched term-bucket directories at the scan (DPP — the PQ
-    // members' cell-probe shape)
+    // tb is the postings table's partition column: the collected query
+    // terms' buckets prune the scan statically (the PQ members'
+    // cell-probe shape), and the panel joins on (tb, term)
+    val buckets = q.select(termBucket(col("term"))).collect().map(_.get(0)).distinct
     val contrib = broadcast(panel.withColumn("tb", termBucket(col("term"))))
-      .join(post, Seq("tb", "term"))
+      .join(post.filter(col("tb").isin(buckets.toSeq: _*)), Seq("tb", "term"))
       .filter(col("doc_id") =!= col("q_id"))
       .join(broadcast(qdf), "term")
-      .crossJoin(broadcast(meta))
     rankBm25(withBm25Weight(contrib), k).orderBy("q_id", "rk")
   }
 
@@ -594,29 +627,20 @@ object TextRank {
       s"champion depth m=$mEff must be in [1, $ChampM] — the companion " +
         s"stores top-$ChampM per commit; deeper serving needs a refresh " +
         "with a larger ChampM")
-    val nQ = qt.count()
-    require(nQ <= maxQueryRows,
-      s"searchTextIndexChampion broadcasts its query terms, and $nQ " +
-        s"query rows exceed maxQueryRows=$maxQueryRows")
-    val qterms = qt.select("term").distinct()
+    val q = boundedTerms(qt, maxQueryRows, "searchTextIndexChampion")
     val perTerm = Window.partitionBy("term").orderBy(col("tf").desc, col("doc_id"))
-    val champ = s.table(s"${phys}_champ")
-      .join(broadcast(qterms), "term")
+    val champ = forQueryTerms(s.table(s"${phys}_champ"), q)
       .filter(col("rn") <= mEff)
       .withColumn("grn", row_number().over(perTerm))
       .filter(col("grn") <= mEff)
       .select("term", "doc_id", "tf", "dl")
-    val qdf = s.table(s"${phys}_df")
-      .join(broadcast(qterms), "term")
+    val qdf = forQueryTerms(s.table(s"${phys}_df"), q)
       .groupBy("term").agg(sum("df").as("df"))
-    val meta = s.table(s"${phys}_meta")
-      .agg(sum("n_docs").cast("double").as("n"),
-        (sum("total_tokens").cast("double") /
-          sum("token_docs").cast("double")).as("avgdl"))
-    val contrib = broadcast(qt).join(champ, "term")
+    val (n, avgdl) = corpusConstants(s, phys)
+    val contrib = broadcast(q.withColumn("n", n).withColumn("avgdl", avgdl))
+      .join(champ, "term")
       .filter(col("doc_id") =!= col("q_id"))
       .join(broadcast(qdf), "term")
-      .crossJoin(broadcast(meta))
     rankBm25(withBm25Weight(contrib), k).orderBy("q_id", "rk")
   }
 
@@ -641,13 +665,19 @@ object TextRank {
     * index refreshed without a target (the auto sentinels then degrade
     * toward exactness). `table0` may be logical or physical.
     */
-  def textCalOf(s: SparkSession, table0: String): Option[TextCal] = {
-    val phys = graft.sources.TablePointer.resolve(s, table0)
-    if (!s.catalog.tableExists(s"${phys}_cal")) None
-    else s.table(s"${phys}_cal").collect().headOption.map(r =>
+  def textCalOf(s: SparkSession, table0: String): Option[TextCal] =
+    calRowOf(s, table0).map(r =>
       TextCal(r.getAs[Double]("max_df_frac"), r.getAs[Int]("champ_m"),
         r.getAs[Double]("recall_target"), r.getAs[Double]("prune_measured"),
         r.getAs[Double]("champ_measured"), r.getAs[Long]("docs_at_cal")))
+
+  /** The `_cal` row of a text index (memoized by its files) — None when
+    * the index was never calibrated. `table0` may be logical or physical.
+    */
+  private def calRowOf(s: SparkSession, table0: String): Option[org.apache.spark.sql.Row] = {
+    val phys = graft.sources.TablePointer.resolve(s, table0)
+    if (!s.catalog.tableExists(s"${phys}_cal")) None
+    else Serving.companionRows(s, s"${phys}_cal").rows.headOption
   }
 
   /** Docs in the serving calibrations' query panel. */
@@ -849,17 +879,14 @@ object TextRank {
   /** Read a text index's persisted fused pair — None when the hybrid
     * sweep never ran (the sentinels are fused_nprobe < 1).
     */
-  def textHybridCalOf(s: SparkSession, table0: String): Option[HybridCal] = {
-    val phys = graft.sources.TablePointer.resolve(s, table0)
-    if (!s.catalog.tableExists(s"${phys}_cal")) None
-    else s.table(s"${phys}_cal").collect().headOption
+  def textHybridCalOf(s: SparkSession, table0: String): Option[HybridCal] =
+    calRowOf(s, table0)
       .filter(_.getAs[Int]("fused_nprobe") >= 1)
       .map(r => HybridCal(r.getAs[Double]("fused_df_frac"),
         r.getAs[Int]("fused_nprobe"),
         r.getAs[Double]("fused_recall_target"),
         r.getAs[Double]("fused_recall_measured"),
         r.getAs[Long]("fused_docs_at_cal"), r.getAs[Int]("fused_adc_top_c")))
-  }
 
   /** The `_cal` row, whole: sparse serving knobs + the fused pair (−1 /
     * sentinels when the hybrid sweep hasn't run). One writer so
@@ -976,7 +1003,7 @@ object TextRank {
            else Seq(fracsAll.head, fracsAll(fracsAll.length / 2),
              fracsAll.last)) :+ 1.0
         val fracs = fracPicks.distinct.sorted
-        val nlist = s.table(s"${vphys}_centroids").count().toInt
+        val nlist = Ann.pqStateOf(s, vphys).nlist
         val ladder = (Seq(1, 2, 4, 8).filter(_ < nlist) :+ nlist).distinct
         def recallAt(frac: Double, np: Int, adc: Int): Double = {
           val fused = hybridSearchIndexed(s, phys, vphys, qt, queries, k,
@@ -1408,11 +1435,17 @@ object TextRank {
     // ([[calibrateHybridServing]], persisted in the text `_cal`); with
     // no fused pair, degrade toward EXACTNESS: frac 1.0, nprobe = every
     // cell (the dense arm's residual is then only its ADC/rerank cuts).
+    // each side is bounded and collected once, and each pointer resolves
+    // once: the `_cal` read and both arms see the same generations
+    val q = boundedTerms(qt, 100000L, "searchTextIndex")
+    val qv = Ann.boundedPqQueries(queries, 100000L)
+    val tphys = graft.sources.TablePointer.resolve(s, textTable)
+    val vphys = graft.sources.TablePointer.resolve(s, vecTable)
     val hc = if (nprobe == 0 || sparseDfFrac == 0.0 || adcTopC == 0)
-      textHybridCalOf(s, textTable) else None
+      textHybridCalOf(s, tphys) else None
     val npEff =
       if (nprobe != 0) nprobe
-      else hc.map(_.nprobe).getOrElse(Ann.centroidsOf(s, vecTable).count().toInt)
+      else hc.map(_.nprobe).getOrElse(Ann.pqStateOf(s, vphys).nlist)
     val fracEff =
       if (sparseDfFrac != 0.0) sparseDfFrac
       else hc.map(_.dfFrac).getOrElse(1.0)
@@ -1422,9 +1455,9 @@ object TextRank {
     val adcEff =
       if (adcTopC != 0) adcTopC
       else hc.map(_.adcTopC).getOrElse(64)
-    val sparse = searchTextIndex(s, textTable, qt, k, maxDfFrac = fracEff)
+    val sparse = searchTextServed(s, tphys, q, k, fracEff)
       .select(col("q_id"), col("doc_id"), col("rk").as("sparse_rank"))
-    val dense = Ann.searchPqIndex(s, vecTable, queries, k, npEff, adcEff)
+    val dense = Ann.pqTopKServed(s, vphys, qv, k, npEff, adcEff, "float")
       .select(col("q_id"), col("n_id").as("doc_id"), col("rank").as("dense_rank"))
     fuseRrf(sparse, dense, k).orderBy("q_id", "rank")
   }

@@ -35,6 +35,20 @@ import graft.CommitLog
   * name, or a name never refreshed (whose first refresh stages
   * generation 1). Every standing table is born under a generation —
   * there is no unversioned layout to adopt.
+  *
+  * A published generation is NOT immutable. Only a refresh stages a new
+  * one; these write into the CURRENT generation in place, under the
+  * admission lock: `TextRank.appendTextIndex` and `Ann.appendPqIndex`
+  * (new postings, df/meta/champion partials, members),
+  * `Dedup.appendIndex`, `Ann.rebuildPqIndex` (members rewritten),
+  * `TextRank.calibrateTextServing` (also via
+  * `Admit.recalibrateTextServing`) and `calibrateHybridServing` (`_cal`
+  * rewritten), and `Ann.calibratePqScreenNprobe` via
+  * `Admit.recalibratePqScreen` (PQ `_meta` rewritten). [[dropAll]] deletes the log, so the next refresh
+  * stages `g1` again. Only the PQ `_centroids`/`_codebook` stay fixed
+  * for a generation's life. State derived from a generation is
+  * therefore keyed by the files it was read from, never by the `__gN`
+  * name ([[graft.operators.Serving.companionRows]]).
   */
 object TablePointer {
 

@@ -111,10 +111,12 @@ class CorpusOpsSpec extends SparkSpec {
     // the standing index serves the exact path's numbers bit-for-bit
     TextRank.refreshTextIndex(docs, t1)
     assert(key(TextRank.searchTextIndex(spark, t1, qt).collect()) == exact)
-    // the postings scan is term-bucket partitioned and the broadcast
-    // panel prunes it dynamically (the PQ members' cell-probe shape)
+    // the postings scan is term-bucket partitioned and reads only the
+    // query terms' buckets: the collected panel's buckets prune it
+    // statically (the PQ members' cell-probe shape)
     val plan = planString(TextRank.searchTextIndex(spark, t1, qt))
-    assert(plan.contains("dynamicpruning"), plan.take(800))
+    assert("""PartitionFilters: \[[^\]]*tb#\d+L? (IN|INSET) """.r.findFirstIn(plan).isDefined,
+      plan.take(800))
     // additive maintenance: refresh half, append the rest — df and meta
     // partials must SUM to the full corpus's constants
     TextRank.refreshTextIndex(docs.filter(col("doc_id") % 2 === 0), t2)

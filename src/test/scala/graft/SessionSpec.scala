@@ -19,6 +19,15 @@ class SessionSpec extends SparkSpec {
     assert(math.abs(cos - 0.96) < 1e-12)
   }
 
+  test("the spec warehouse is a fresh directory: no generation log from an earlier run") {
+    val dir = new File(new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    assert(dir.getCanonicalPath == SparkSpec.warehouse.getCanonicalPath, dir)
+    assert(dir.getCanonicalPath != new File("spark-warehouse").getCanonicalPath)
+    assert(!SparkSpec.warehouseAtStart.contains("_graft_log"),
+      SparkSpec.warehouseAtStart.mkString(", "))
+  }
+
   test("no Spark session builder exists outside Session.scala") {
     def scalaFiles(dir: File): Seq[File] =
       Option(dir.listFiles).toSeq.flatten.flatMap { f =>

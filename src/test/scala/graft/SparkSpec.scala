@@ -48,7 +48,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** The specs' warehouse: a fresh temporary directory per test JVM,
+    * deleted at exit, so no run starts on an earlier run's standing
+    * tables and generation logs. Passed to [[Session.local]] as the
+    * `spark.sql.warehouse.dir` system property, which the session's
+    * conf reads at build time.
+    */
+  lazy val warehouse: java.io.File = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-spec-warehouse").toFile
+    sys.addShutdownHook(deleteTree(dir))
+    dir
+  }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles).toSeq.flatten.foreach(deleteTree)
+    f.delete()
+  }
+
+  /** The warehouse's entries when the session was built. */
+  @volatile var warehouseAtStart: Seq[String] = Nil
+
   // a fixed width, not the host's core count, so plan strings and job
   // counts asserted by the specs read the same on every host
-  lazy val session: SparkSession = Session.local(cores = 4)
+  lazy val session: SparkSession = {
+    System.setProperty("spark.sql.warehouse.dir", warehouse.getAbsolutePath)
+    warehouseAtStart = Option(warehouse.list).toSeq.flatten
+    Session.local(cores = 4)
+  }
 }
