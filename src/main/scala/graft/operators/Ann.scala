@@ -3022,10 +3022,10 @@ object Ann {
   private def boxedLong(v: Any): java.lang.Long =
     if (v == null) null else java.lang.Long.valueOf(v.asInstanceOf[Number].longValue)
 
-  /** Spark's ascending order of cell ids (strings byte-wise as UTF-8,
-    * nulls first).
+  /** Spark's ascending order of key values — cell or row ids (strings
+    * byte-wise as UTF-8, nulls first).
     */
-  private def compareCells(a: Any, b: Any): Int = (a, b) match {
+  private[operators] def compareKeys(a: Any, b: Any): Int = (a, b) match {
     case (null, null) => 0
     case (null, _) => -1
     case (_, null) => 1
@@ -3036,7 +3036,7 @@ object Ann {
       while (i < n && p(i) == q(i)) i += 1
       if (i < n) (p(i) & 0xff) - (q(i) & 0xff) else p.length - q.length
     case (x: Number, y: Number) => java.lang.Long.compare(x.longValue, y.longValue)
-    case _ => throw new IllegalStateException(s"cells $a and $b are not comparable")
+    case _ => throw new IllegalStateException(s"keys $a and $b are not comparable")
   }
 
   /** The coarse probe ranking of a query batch: (q_id, cell, rn) rows
@@ -3071,7 +3071,7 @@ object Ann {
           else if (b == null) -1
           else if (a.doubleValue == b.doubleValue) 0
           else java.lang.Double.compare(b.doubleValue, a.doubleValue)
-        if (c != 0) c < 0 else compareCells(ca, cb) < 0
+        if (c != 0) c < 0 else compareKeys(ca, cb) < 0
     }
     queries.groupBy(_.get(0)).toArray.flatMap { case (qid, rs) =>
       rs.flatMap { r =>
@@ -3132,19 +3132,19 @@ object Ann {
     * `probes` is its (q_id, cell, rn ≤ nprobe) ranking, which a caller
     * needing the own-cell column (rn = 1) shares.
     */
-  private def pqTopKFrames(members: DataFrame, st: PqState, queries: DataFrame,
+  private def pqTopKFrames(members: DataFrame, st: PqState, queries: Serving.Local,
                            probes: Array[Row], k: Int, adcTopC: Int,
                            verify: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
-    val s = queries.sparkSession
-    val qIdType = queries.schema("vec_id").dataType
+    val s = queries.df.sparkSession
+    val qIdType = queries.df.schema("vec_id").dataType
     val cellType = st.centroids.schema("cell").dataType
     val probeDf = Serving.localFrame(s, probes.toSeq, StructType(Seq(
       StructField("q_id", qIdType), StructField("cell", cellType),
       StructField("rn", IntegerType))))
       .select("q_id", "cell")
-    val lut = Serving.localFrame(s, pqLut(queries.select("vec_id", "emb").collect(), st).toSeq,
+    val lut = Serving.localFrame(s, pqLut(queries.rows, st).toSeq,
       StructType(Seq(StructField("q_id", qIdType),
         StructField("sub", st.codebook.schema("sub").dataType),
         StructField("code", st.codebook.schema("code").dataType),
@@ -3181,7 +3181,7 @@ object Ann {
     val rankW = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_id"))
     probed.select(col("vec_id"), col("emb"), col("cell"))
       .join(broadcast(shortlist
-        .join(broadcast(queries.select(col("vec_id").as("q_id"),
+        .join(broadcast(queries.df.select(col("vec_id").as("q_id"),
           col("emb").as("q_emb"))), Seq("q_id"))), Seq("vec_id", "cell"))
       .withColumn("cosine", rerank)
       .withColumn("rank", row_number().over(rankW))
@@ -3191,30 +3191,19 @@ object Ann {
   }
 
   /** [[pqTopKFrames]] over a standing physical generation for an
-    * already-bounded query side — the one PQ serving read
+    * already-bounded query side, as (q_id, rank, n_id, cosine) sorted by
+    * (q_id, rank) in one partition — the one PQ serving plan
     * [[searchPqIndex]] and the hybrid dense arm share.
     */
-  private[operators] def pqTopKServed(s: SparkSession, phys: String, queries: DataFrame,
+  private[operators] def pqTopKServed(s: SparkSession, phys: String, queries: Serving.Local,
                                       k: Int, nprobe: Int, adcTopC: Int,
                                       verify: String): DataFrame = {
     val st = pqStateOf(s, phys)
-    pqTopKFrames(s.table(phys), st, queries,
-      pqProbeRanked(queries.select("vec_id", "emb").collect(), st, nprobe),
-      k, adcTopC, verify)
+    Serving.sortedTopK(pqTopKFrames(s.table(phys), st, queries,
+        pqProbeRanked(queries.rows, st, nprobe),
+        k, adcTopC, verify)
+      .select("q_id", "rank", "n_id", "cosine"), "rank")
   }
-
-  /** The bounded query side of a PQ search: `vec_id`, `emb`, at most
-    * `maxQueryRows` rows, collected once.
-    */
-  private[operators] def boundedPqQueries(queries: DataFrame,
-                                          maxQueryRows: Long): DataFrame =
-    Serving.boundedLocal(queries.select("vec_id", "emb"), maxQueryRows)(
-      s"searchPqIndex broadcasts its query set (the per-query ADC LUTs), " +
-        s"and the query frame holds more than maxQueryRows=$maxQueryRows " +
-        "rows — this is a serving path for small probe batches. For " +
-        "corpus-sized probes use the bucketed dedup probe (Ann.semProbe), " +
-        "which shuffles only the batch side, or raise maxQueryRows " +
-        "deliberately.")
 
   /** Top-k ANN SEARCH against a standing [[refreshPqIndex]] table — the
     * serving path (what are the k nearest neighbors?), with a loud
@@ -3227,11 +3216,15 @@ object Ann {
                     k: Int = 10, nprobe: Int = 3, adcTopC: Int = 32,
                     verify: String = "float",
                     maxQueryRows: Long = 100000L): DataFrame = {
-    val q = boundedPqQueries(queries, maxQueryRows)
+    val q = Serving.boundedLocal(queries.select("vec_id", "emb"), maxQueryRows)(
+      s"searchPqIndex broadcasts its query set (the per-query ADC LUTs), " +
+        s"and the query frame holds more than maxQueryRows=$maxQueryRows " +
+        "rows — this is a serving path for small probe batches. For " +
+        "corpus-sized probes use the bucketed dedup probe (Ann.semProbe), " +
+        "which shuffles only the batch side, or raise maxQueryRows " +
+        "deliberately.")
     pqTopKServed(s, graft.sources.TablePointer.resolve(s, table), q, k,
-        nprobe, adcTopC, verify)
-      .select("q_id", "rank", "n_id", "cosine")
-      .orderBy("q_id", "rank")
+      nprobe, adcTopC, verify)
   }
 
   /** The (vec_id, cell) own-cell rows of a probe ranking (its rn = 1). */
@@ -3273,14 +3266,14 @@ object Ann {
     val st = pqStateOf(s, t)
     // ONE coarse ranking: the nprobe restriction and the report's
     // own-cell column (rn = 1, the argmax assignment)
-    val ranked = pqProbeRanked(b.collect(), st, np)
+    val ranked = pqProbeRanked(b.rows, st, np)
     val best = pqTopKFrames(s.table(t), st, b, ranked, k = 1, adcTopC, verify)
       .select(col("q_id"), col("n_id").as("match_vec_id"), col("cosine"))
-    val ownCell = ownCellsOf(s, ranked, b, st)
+    val ownCell = ownCellsOf(s, ranked, b.df, st)
     // both right sides are batch-bounded — broadcast them so the final
     // assembly never sorts (a SortMergeJoin here would shuffle the batch
     // twice for two ≤|batch|-row lookups)
-    b.select("vec_id").join(broadcast(ownCell), Seq("vec_id"), "left")
+    b.df.select("vec_id").join(broadcast(ownCell), Seq("vec_id"), "left")
       .join(broadcast(best.withColumnRenamed("q_id", "vec_id")), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"), col("match_vec_id"), col("cosine"),
         coalesce((col("cosine") >= eps).cast("int"), lit(0)).as("is_dup"))
@@ -3352,18 +3345,19 @@ object Ann {
       .unionByName(e.filter(col("vec_id") % 11 === 0)
         .select((col("vec_id") + 50000).as("vec_id"),
           expr("transform(emb, x -> -x)").as("emb"))))
-    val batch = Serving.localFrame(s, batchRows.rows.toSeq, batchRows.schema)
+    val batch = Serving.Local(batchRows.rows,
+      Serving.localFrame(s, batchRows.rows.toSeq, batchRows.schema))
     // ONE coarse ranking serves both the nprobe restriction and the
     // report's own-cell column (the rn = 1 row IS the argmax
     // assignment, same (csim desc, cell) order as assignCellsLean)
     val ranked = pqProbeRanked(batchRows.rows, st, nprobe)
     val best = pqTopKFrames(members, st, batch, ranked, k = 1, adcTopC, verify = "dec")
       .select(col("q_id"), col("n_id").as("match_vec_id"), col("cosine"))
-    val ownCell = ownCellsOf(s, ranked, batch, st)
+    val ownCell = ownCellsOf(s, ranked, batch.df, st)
     // both right sides are batch-bounded — broadcast them so the final
     // assembly never sorts (a SortMergeJoin here would shuffle the batch
     // twice for two ≤|batch|-row lookups)
-    val res = batch.select("vec_id")
+    val res = batch.df.select("vec_id")
       .join(broadcast(ownCell), Seq("vec_id"), "left")
       .join(broadcast(best.withColumnRenamed("q_id", "vec_id")), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"), col("match_vec_id"), col("cosine"),

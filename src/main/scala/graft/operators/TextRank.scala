@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.{Num, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** TF-IDF term weighting over the documents corpus — the classic IR
   * primitive behind keyword extraction, sparse retrieval, and quality
@@ -339,6 +340,15 @@ object TextRank {
   private def termBucket(term: Column): Column =
     pmod(xxhash64(term), lit(TermBuckets.toLong))
 
+  /** [[termBucket]] of one term on the driver: Spark's own xxhash64
+    * (seed 42, the function's default) and pmod.
+    */
+  private def termBucketOf(term: String): Long = {
+    val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+      org.apache.spark.unsafe.types.UTF8String.fromString(term), StringType, 42L)
+    ((h % TermBuckets) + TermBuckets) % TermBuckets
+  }
+
   /** The text family's shared tokenizer (round 15 — VERDICT r14 #7).
     * `default` is the house kernel (`split(lower(trim(text)), " ")`) —
     * byte-stable with every oracle query, correct for the driver's
@@ -502,43 +512,79 @@ object TextRank {
     * `maxQueryRows` rows, collected once.
     */
   private def boundedTerms(qt: DataFrame, maxQueryRows: Long,
-                           what: String): DataFrame =
+                           what: String): Serving.Local =
     Serving.boundedLocal(qt.select("q_id", "term"), maxQueryRows)(
       s"$what broadcasts its query terms, and the query frame holds more " +
         s"than maxQueryRows=$maxQueryRows rows — this is a serving path " +
         "for bounded query panels; for corpus-sized workloads run " +
         "bm25TopK as a batch job, or raise maxQueryRows deliberately.")
 
-  /** The rows of a companion keyed by `term` for the distinct terms of a
-    * collected query side: an IN filter of literals, which prunes the
+  /** The rows of a companion keyed by `term` for a collected query
+    * side's distinct terms: an IN filter of literals, which prunes the
     * table's term buckets and needs no broadcast.
     */
-  private def forQueryTerms(companion: DataFrame, q: DataFrame): DataFrame =
-    companion.filter(col("term").isin(
-      q.select("term").collect().map(_.get(0)).distinct.toSeq: _*))
+  private def forQueryTerms(companion: DataFrame, terms: Seq[Any]): DataFrame =
+    companion.filter(col("term").isin(terms: _*))
+
+  /** The df of each query term: ONE collect of the terms' `_df` partial
+    * rows — nothing aggregates them in the plan, so the scan is file-
+    * pruned and unbucketed (one task) — summed on the driver. A term
+    * the corpus never saw has no entry.
+    */
+  private def queryTermDf(s: SparkSession, phys: String,
+                          terms: Seq[Any]): Map[Any, Long] =
+    forQueryTerms(s.table(s"${phys}_df"), terms).select("term", "df").collect()
+      .groupBy(_.get(0))
+      .map { case (t, rs) => t -> rs.map(_.getLong(1)).reduce(Math.addExact(_, _)) }
+
+  /** Σ of a `_meta` column over the generation's partials (memoized
+    * rows) — None when no partial holds a value.
+    */
+  private def metaTotal(s: SparkSession, phys: String, c: String): Option[Long] = {
+    val vs = Serving.companionRows(s, s"${phys}_meta").rows
+      .flatMap(r => Option(r.getAs[Any](c)).map(_.asInstanceOf[Number].longValue))
+    if (vs.isEmpty) None else Some(vs.reduce(Math.addExact(_, _)))
+  }
 
   /** A generation's corpus constants as literal columns: n = Σ n_docs
     * and avgdl = Σ total_tokens / Σ token_docs over the `_meta` partials
-    * (memoized rows) — the casts and the division of the `_meta`
-    * aggregate they replace, riding the query side instead of a
-    * broadcast.
+    * — the casts and the division of the `_meta` aggregate they replace,
+    * riding the query side instead of a broadcast.
     */
   private def corpusConstants(s: SparkSession, phys: String): (Column, Column) = {
-    val rows = Serving.companionRows(s, s"${phys}_meta").rows
-    def total(c: String): Column = {
-      val vs = rows.flatMap(r => Option(r.getAs[Any](c)).map(_.asInstanceOf[Number].longValue))
-      if (vs.isEmpty) lit(null).cast("long") else lit(vs.reduce(Math.addExact(_, _)))
-    }
+    def total(c: String): Column =
+      metaTotal(s, phys, c).fold(lit(null).cast("long"))(lit(_))
     (total("n_docs").cast("double"),
       total("total_tokens").cast("double") / total("token_docs").cast("double"))
+  }
+
+  /** The served text query side: each collected (q_id, term) row with
+    * its df ([[queryTermDf]]) and the corpus constants n/avgdl as
+    * columns, plus the distinct surviving terms. A term with no `_df`
+    * row matches no posting and is dropped; below `maxDfFrac` = 1.0 a
+    * term with df > maxDfFrac·n is pruned here, on the driver, so its
+    * postings are never scanned.
+    */
+  private def servedQuerySide(s: SparkSession, phys: String, q: Serving.Local,
+                              maxDfFrac: Double): (DataFrame, Seq[Any]) = {
+    val rows = q.rows
+    val dfOf = queryTermDf(s, phys, rows.map(_.get(1)).distinct.toSeq)
+    val nDocs = metaTotal(s, phys, "n_docs").map(_.toDouble)
+    val kept = rows.flatMap(r => dfOf.get(r.get(1)).map(df => Row(r.get(0), r.get(1), df)))
+      .filter(r => maxDfFrac >= 1.0 ||
+        nDocs.exists(n => r.getLong(2).toDouble <= maxDfFrac * n))
+    val (n, avgdl) = corpusConstants(s, phys)
+    (Serving.localFrame(s, kept.toSeq, q.df.schema.add("df", LongType))
+      .withColumn("n", n).withColumn("avgdl", avgdl),
+      kept.map(_.get(1)).distinct.toSeq)
   }
 
   /** BM25 top-k against the STANDING index — bit-equal to [[bm25TopK]]
     * over the same corpus (the spec's contract): the query-term frame is
     * bounded and collected once ([[Serving.boundedLocal]]), df resolves
-    * from the `_df` partials for the query's terms only (vocabulary-
-    * bounded, then broadcast), the corpus constants ride the query side
-    * as literals from the memoized `_meta` rows, and the postings table
+    * from the `_df` partials for the query's terms only and rides the
+    * query side as a column ([[servedQuerySide]]), so do the corpus
+    * constants from the memoized `_meta` rows, and the postings table
     * is touched ONCE through its term-bucket partitions — only the query
     * terms' buckets are read — with no index-side exchange. The pointer
     * resolves once per plan — a refresh landing mid-query never moves
@@ -555,7 +601,7 @@ object TextRank {
   /** [[searchTextIndex]] over a physical generation for an already-
     * bounded query side — the sparse read the hybrid arm shares.
     */
-  private def searchTextServed(s: SparkSession, phys: String, q: DataFrame,
+  private def searchTextServed(s: SparkSession, phys: String, q: Serving.Local,
                                k: Int, maxDfFrac: Double): DataFrame = {
     // index elimination runs BEFORE the postings join: dropping a
     // stopword-class term from the panel removes its corpus-sized
@@ -574,28 +620,20 @@ object TextRank {
         "and a value above 1 is meaningless (df never exceeds N — the " +
         "check enforces the full interval the message promises, ADVICE " +
         "r14)")
-    val post = s.table(phys)
-    val qdf = forQueryTerms(s.table(s"${phys}_df"), q)
-      .groupBy("term").agg(sum("df").as("df"))
-    val (n, avgdl) = corpusConstants(s, phys)
     val fracEff =
       if (maxDfFrac != 0.0) maxDfFrac
       else textCalOf(s, phys).map(_.maxDfFrac).getOrElse(1.0)
-    val withConsts = q.withColumn("n", n).withColumn("avgdl", avgdl)
-    val panel =
-      if (fracEff >= 1.0) withConsts
-      else withConsts.join(broadcast(
-        qdf.filter(col("df").cast("double") <= lit(fracEff) * n)
-          .select("term")), "term")
-    // tb is the postings table's partition column: the collected query
+    // tb is the postings table's partition column: the surviving query
     // terms' buckets prune the scan statically (the PQ members'
-    // cell-probe shape), and the panel joins on (tb, term)
-    val buckets = q.select(termBucket(col("term"))).collect().map(_.get(0)).distinct
-    val contrib = broadcast(panel.withColumn("tb", termBucket(col("term"))))
-      .join(post.filter(col("tb").isin(buckets.toSeq: _*)), Seq("tb", "term"))
+    // cell-probe shape). The panel joins on term alone: a join on tb
+    // would copy the bucket literals onto the panel side as an inferred
+    // filter, and so into a generated class per request
+    val (panel, terms) = servedQuerySide(s, phys, q, fracEff)
+    val buckets = terms.map(t => termBucketOf(t.asInstanceOf[String])).distinct
+    val contrib = broadcast(panel)
+      .join(s.table(phys).filter(col("tb").isin(buckets: _*)), "term")
       .filter(col("doc_id") =!= col("q_id"))
-      .join(broadcast(qdf), "term")
-    rankBm25(withBm25Weight(contrib), k).orderBy("q_id", "rk")
+    Serving.sortedTopK(rankBm25(withBm25Weight(contrib), k), "rk")
   }
 
   /** Champion-list serving against the STANDING index — the text
@@ -627,21 +665,18 @@ object TextRank {
       s"champion depth m=$mEff must be in [1, $ChampM] — the companion " +
         s"stores top-$ChampM per commit; deeper serving needs a refresh " +
         "with a larger ChampM")
-    val q = boundedTerms(qt, maxQueryRows, "searchTextIndexChampion")
+    val (side, terms) =
+      servedQuerySide(s, phys, boundedTerms(qt, maxQueryRows, "searchTextIndexChampion"), 1.0)
     val perTerm = Window.partitionBy("term").orderBy(col("tf").desc, col("doc_id"))
-    val champ = forQueryTerms(s.table(s"${phys}_champ"), q)
+    val champ = forQueryTerms(s.table(s"${phys}_champ"), terms)
       .filter(col("rn") <= mEff)
       .withColumn("grn", row_number().over(perTerm))
       .filter(col("grn") <= mEff)
       .select("term", "doc_id", "tf", "dl")
-    val qdf = forQueryTerms(s.table(s"${phys}_df"), q)
-      .groupBy("term").agg(sum("df").as("df"))
-    val (n, avgdl) = corpusConstants(s, phys)
-    val contrib = broadcast(q.withColumn("n", n).withColumn("avgdl", avgdl))
+    val contrib = broadcast(side)
       .join(champ, "term")
       .filter(col("doc_id") =!= col("q_id"))
-      .join(broadcast(qdf), "term")
-    rankBm25(withBm25Weight(contrib), k).orderBy("q_id", "rk")
+    Serving.sortedTopK(rankBm25(withBm25Weight(contrib), k), "rk")
   }
 
   /** The persisted serving calibration of a text index (the `_cal`
@@ -990,14 +1025,11 @@ object TextRank {
         // "Round-13: the calibration priced"): ≤ 3 df
         // fractions from the panel's own decision points + the
         // exactness end, × the nprobe doubling ladder
-        val nDocs = s.table(s"${phys}_meta").agg(sum("n_docs"))
-          .head().getLong(0)
-        val qterms = qt.select("term").distinct()
-        val fracsAll = s.table(s"${phys}_df")
-          .join(broadcast(qterms), "term")
-          .groupBy("term").agg(sum("df").as("df"))
-          .select("df").collect()
-          .map(_.getLong(0).toDouble / nDocs).distinct.sorted
+        val nDocs = metaTotal(s, phys, "n_docs").getOrElse(
+          throw new IllegalStateException(s"${phys}_meta has no n_docs"))
+        val fracsAll = queryTermDf(s, phys,
+            qt.select("term").collect().map(_.get(0)).distinct.toSeq).values.toArray
+          .map(_.toDouble / nDocs).distinct.sorted
         val fracPicks =
           (if (fracsAll.length <= 2) fracsAll.toSeq
            else Seq(fracsAll.head, fracsAll(fracsAll.length / 2),
@@ -1390,7 +1422,8 @@ object TextRank {
 
   /** Reciprocal Rank Fusion of a sparse arm (`q_id`, `doc_id`,
     * `sparse_rank`) and a dense arm (`q_id`, `doc_id`, `dense_rank`) —
-    * shared verbatim by the oracle query and the index-backed twin.
+    * the definition the oracle query and the calibration truths use;
+    * the index-backed twin computes it on the driver ([[fuseRrfRows]]).
     * Full-outer on (q, doc); an absent arm contributes 0 and reads as
     * rank 0 in the output.
     */
@@ -1409,15 +1442,47 @@ object TextRank {
         coalesce(col("dense_rank"), lit(0)).as("dense_rank"))
   }
 
+  /** [[fuseRrf]] on the driver, over arms already collected as
+    * (q_id, doc_id, rank) rows: the same full outer match on
+    * (q_id, doc_id), the same IEEE terms and [[Num.roundD]], the same
+    * (rrf0 desc, doc_id) order and rank ≤ `k`. Returns (q_id, rank,
+    * doc_id, rrf, sparse_rank, dense_rank) rows sorted by (q_id, rank).
+    */
+  private[graft] def fuseRrfRows(sparse: Seq[Row], dense: Seq[Row], k: Int = 10,
+                                 c: Double = 60.0): Seq[Row] = {
+    def ranks(arm: Seq[Row]): Map[(Any, Any), Seq[Option[Int]]] =
+      arm.groupBy(r => (r.get(0), r.get(1))).map { case (key, rs) => key -> rs.map(r => Option(r.getInt(2))) }
+    val (sp, de) = (ranks(sparse), ranks(dense))
+    def term(rank: Option[Int]): Double = rank.fold(0.0)(r => 1.0 / (c + r.toDouble))
+    val fused = (sp.keySet ++ de.keySet).toSeq.flatMap { case key @ (q, doc) =>
+      for (s <- sp.getOrElse(key, Seq(None)); d <- de.getOrElse(key, Seq(None)))
+        yield (q, doc, term(s) + term(d), s.getOrElse(0), d.getOrElse(0))
+    }
+    val p = math.pow(10, 6)
+    fused.groupBy(_._1).toSeq.sortWith((a, b) => Ann.compareKeys(a._1, b._1) < 0)
+      .flatMap { case (_, rs) =>
+        rs.sortWith((a, b) => if (a._3 != b._3) a._3 > b._3 else Ann.compareKeys(a._2, b._2) < 0)
+          .take(k).zipWithIndex.map { case ((q, doc, rrf0, s, d), i) =>
+            Row(q, i + 1, doc, math.floor(rrf0 * p + 0.5).toLong.toDouble / p, s, d)
+          }
+      }
+  }
+
+  /** The fixed bound on each query side of [[hybridSearchIndexed]]. */
+  private val HybridMaxQueryRows = 100000L
+
   /** The fully index-backed production twin of [[q146HybridRetrieval]]:
     * the sparse arm serves from the standing BM25 index
-    * ([[searchTextIndex]]), the dense arm from a standing vector index
-    * ([[Ann.searchPqIndex]] — nprobe cells per query, never the
-    * corpus), and [[fuseRrf]] is shared verbatim.
+    * ([[searchTextIndex]]'s plan), the dense arm from a standing vector
+    * index ([[Ann.searchPqIndex]]'s plan — nprobe cells per query,
+    * never the corpus), and the two collected arms (each ≤ |Q|·k rows)
+    * fuse on the driver ([[fuseRrfRows]], bit-equal to [[fuseRrf]]).
+    * Running the standalone searches' own plans lets a serving page
+    * reuse their generated code. EAGER: the arms run when this is
+    * called, and the result is a local relation sorted by (q_id, rank).
     * `qt` carries the query terms (`q_id`, `term`), `queries` the query
     * vectors (`vec_id`, `emb`) — same ids, the two sides of one query
-    * panel. At 100 TB this is the hybrid serving path: both arms
-    * exchange-free on their index side, fusion a ≤ |Q|·k join.
+    * panel, each bounded at [[HybridMaxQueryRows]] rows.
     * `family` names the standing vector index kind and accepts only
     * `"pq"` (IVF-PQ is the one standing vector index).
     */
@@ -1437,8 +1502,16 @@ object TextRank {
     // cell (the dense arm's residual is then only its ADC/rerank cuts).
     // each side is bounded and collected once, and each pointer resolves
     // once: the `_cal` read and both arms see the same generations
-    val q = boundedTerms(qt, 100000L, "searchTextIndex")
-    val qv = Ann.boundedPqQueries(queries, 100000L)
+    def tooMany(side: String) =
+      s"hybridSearchIndexed broadcasts its query $side, and the frame " +
+        s"holds more than its fixed bound of $HybridMaxQueryRows rows — " +
+        "this is a serving path for bounded query panels; for corpus-" +
+        "sized workloads fuse bm25TopK and a batch ANN ranking with " +
+        "fuseRrf as a batch job."
+    val q = Serving.boundedLocal(qt.select("q_id", "term"), HybridMaxQueryRows)(
+      tooMany("terms"))
+    val qv = Serving.boundedLocal(queries.select("vec_id", "emb"), HybridMaxQueryRows)(
+      tooMany("vectors"))
     val tphys = graft.sources.TablePointer.resolve(s, textTable)
     val vphys = graft.sources.TablePointer.resolve(s, vecTable)
     val hc = if (nprobe == 0 || sparseDfFrac == 0.0 || adcTopC == 0)
@@ -1455,11 +1528,21 @@ object TextRank {
     val adcEff =
       if (adcTopC != 0) adcTopC
       else hc.map(_.adcTopC).getOrElse(64)
+    // each arm is read as (q_id, doc_id, rank), all the fusion needs:
+    // the score columns are pruned from the searches' plans
     val sparse = searchTextServed(s, tphys, q, k, fracEff)
-      .select(col("q_id"), col("doc_id"), col("rk").as("sparse_rank"))
+      .select(col("q_id"), col("doc_id"), col("rk").as("rank"))
     val dense = Ann.pqTopKServed(s, vphys, qv, k, npEff, adcEff, "float")
-      .select(col("q_id"), col("n_id").as("doc_id"), col("rank").as("dense_rank"))
-    fuseRrf(sparse, dense, k).orderBy("q_id", "rank")
+      .select(col("q_id"), col("n_id").as("doc_id"), col("rank"))
+    val (qType, docType) = (sparse.schema("q_id").dataType, sparse.schema("doc_id").dataType)
+    require(dense.schema("q_id").dataType == qType && dense.schema("doc_id").dataType == docType,
+      s"hybridSearchIndexed fuses on (q_id, doc_id): qt.q_id and queries.vec_id, " +
+        "and the text and vector indexes' ids, must share a type (text " +
+        s"${sparse.schema.simpleString}, vector ${dense.schema.simpleString})")
+    Serving.localFrame(s, fuseRrfRows(sparse.collect().toSeq, dense.collect().toSeq, k),
+      StructType(Seq(StructField("q_id", qType), StructField("rank", IntegerType),
+        StructField("doc_id", docType), StructField("rrf", DoubleType),
+        StructField("sparse_rank", IntegerType), StructField("dense_rank", IntegerType))))
   }
 
   val q146Sql: String =

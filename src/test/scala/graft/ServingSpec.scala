@@ -62,20 +62,22 @@ class ServingSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("a warm single-query page stays inside its Spark-job budget per search kind") {
+  /** The serving state's shape (refreshed over 80%, the rest appended)
+    * and one query as a request brings it: terms as a local frame, the
+    * vector as a parallelized one. `body` gets the page's three searches.
+    */
+  private def withServingPage(name: String)(
+      body: Seq[(String, () => DataFrame)] => Unit): Unit = {
     import spark.implicits._
-    val (text, pq) = ("serve_budget_text", "serve_budget_pq")
+    val (text, pq) = (s"${name}_text", s"${name}_pq")
     TablePointer.dropAll(spark, text, TextSuf)
     TablePointer.dropAll(spark, pq, PqSuf)
-    // the serving state's shape: refreshed over 80%, the rest appended
     val d = docs
     val e = vecs
     TextRank.refreshTextIndex(d.filter(col("doc_id") % 5 =!= 0), text)
     TextRank.appendTextIndex(spark, text, d.filter(col("doc_id") % 5 === 0))
     Ann.refreshPqIndex(e.filter(col("vec_id") % 5 =!= 0), pq, quantizer = "kmeans")
     Ann.appendPqIndex(spark, pq, e.filter(col("vec_id") % 5 === 0).select("vec_id", "emb"))
-    // one query, as a request brings it: terms as a local frame, the
-    // vector as a parallelized one
     val doc = d.filter(col("doc_id") === 7).head()
     val terms = doc.getString(1).split(" ").filter(_.nonEmpty).distinct.take(5).toSeq
     val qt = terms.map(t => (900000007L, t)).toDF("q_id", "term")
@@ -84,28 +86,87 @@ class ServingSpec extends SparkSpec {
     val qv = spark.createDataFrame(spark.sparkContext.parallelize(
       Seq(Row(900000007L, v)), 4), StructType(Seq(
       StructField("vec_id", LongType), StructField("emb", ArrayType(DoubleType)))))
-    val searches = Seq[(String, () => DataFrame)](
+    try body(Seq[(String, () => DataFrame)](
       "text" -> (() => TextRank.searchTextIndex(spark, text, qt, k = 10)),
       "vector" -> (() => Ann.searchPqIndex(spark, pq, qv, k = 10)),
       "hybrid" -> (() => TextRank.hybridSearchIndexed(spark, text, pq, qt, qv,
-        k = 10, nprobe = 0, adcTopC = 0, sparseDfFrac = 0.0)))
-    // warm: the first call of each kind fills the companion memo
-    searches.foreach { case (_, search) => assert(search().collect().nonEmpty) }
-    val jobs = searches.map { case (kind, search) =>
-      kind -> jobsOf(search().collect())
-    }.toMap
-    info(s"warm Spark jobs per search: $jobs")
-    // measured 7, 10–11 and 17–18 (a count can differ by one between
-    // runs), plus two jobs of slack over the lower count. With a
-    // count() guard per search, the `_meta`/`_centroids`/`_codebook`
-    // scans and the probe-window and LUT shuffles per request, the same
-    // page ran 13, 16 and 31
-    val budget = Map("text" -> 9, "vector" -> 12, "hybrid" -> 19)
-    budget.foreach { case (kind, b) =>
-      assert(jobs(kind) <= b, s"$kind search ran ${jobs(kind)} jobs (budget $b): $jobs")
+        k = 10, nprobe = 0, adcTopC = 0, sparseDfFrac = 0.0))))
+    finally {
+      TablePointer.dropAll(spark, text, TextSuf)
+      TablePointer.dropAll(spark, pq, PqSuf)
     }
-    TablePointer.dropAll(spark, text, TextSuf)
-    TablePointer.dropAll(spark, pq, PqSuf)
+  }
+
+  test("a warm single-query page stays inside its Spark-job budget per search kind") {
+    withServingPage("serve_budget") { searches =>
+      // warm: the first call of each kind fills the companion memo
+      searches.foreach { case (_, search) => assert(search().collect().nonEmpty) }
+      val jobs = searches.map { case (kind, search) =>
+        kind -> jobsOf(search().collect())
+      }.toMap
+      info(s"warm Spark jobs per search: $jobs")
+      // measured 6, 10 and 16: the hybrid runs exactly the text and vector
+      // searches' jobs and fuses on the driver. One job of slack each for
+      // a count that moves between runs
+      val budget = Map("text" -> 7, "vector" -> 11, "hybrid" -> 17)
+      budget.foreach { case (kind, b) =>
+        assert(jobs(kind) <= b, s"$kind search ran ${jobs(kind)} jobs (budget $b): $jobs")
+      }
+    }
+  }
+
+  test("a warm page runs from Spark's default codegen cache: the second page compiles almost nothing") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    withServingPage("serve_codegen") { searches =>
+      def page(): Long = {
+        val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        searches.foreach { case (_, search) => assert(search().collect().nonEmpty) }
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      }
+      val (first, second) = (page(), page())
+      info(s"generated classes compiled: first page $first, second page $second")
+      // measured 0–6 on a second page. Spark's cache holds 100 classes in
+      // four LRU segments, keyed by (class loader, source), and which
+      // segment a class lands in changes per JVM, so the budget leaves
+      // room over the measured count. A page that outgrows the cache
+      // recompiles every class of a thrashing segment each time
+      assert(second <= 20, s"a warm page compiled $second classes (first page $first)")
+    }
+  }
+
+  test("driver-side RRF equals fuseRrf over the same two arms") {
+    import spark.implicits._
+    // q 1: doc 10 in both arms, 11 sparse-only and 12 dense-only at rank
+    // 1 (equal rrf0, broken by doc_id), more docs than k; q 2: one arm
+    // only; q 3: a doc in each arm at the same rank
+    val sparse = Seq((1L, 11L, 1), (1L, 10L, 2), (1L, 13L, 3), (1L, 14L, 4),
+      (2L, 20L, 1), (2L, 21L, 2), (3L, 31L, 2))
+      .toDF("q_id", "doc_id", "sparse_rank")
+    val dense = Seq((1L, 12L, 1), (1L, 10L, 3), (1L, 15L, 2), (1L, 16L, 4),
+      (3L, 30L, 2), (3L, 32L, 1))
+      .toDF("q_id", "doc_id", "dense_rank")
+    for (k <- Seq(1, 3, 10)) {
+      val viaPlan = TextRank.fuseRrf(sparse, dense, k).orderBy("q_id", "rank").collect().toSeq
+      val onDriver = TextRank.fuseRrfRows(sparse.collect().toSeq, dense.collect().toSeq, k)
+      assert(onDriver == viaPlan, s"k=$k")
+    }
+    assert(TextRank.fuseRrfRows(sparse.collect().toSeq, dense.collect().toSeq, 3)
+      .filter(_.getLong(0) == 1L).map(_.getLong(2)) == Seq(10L, 11L, 12L))
+  }
+
+  test("hybridSearchIndexed names itself and its fixed bound when a query side is one row over it") {
+    val bound = 100000L
+    val smallQt = spark.range(1).select(col("id").as("q_id"), lit("x").as("term"))
+    val smallQv = spark.range(1).select(col("id").as("vec_id"), array(lit(1.0)).as("emb"))
+    val overQt = spark.range(bound + 1).select(col("id").as("q_id"), lit("x").as("term"))
+    val overQv = spark.range(bound + 1).select(col("id").as("vec_id"), array(lit(1.0)).as("emb"))
+    for ((qt, qv, side) <- Seq((overQt, smallQv, "terms"), (smallQt, overQv, "vectors"))) {
+      val e = intercept[IllegalArgumentException](
+        TextRank.hybridSearchIndexed(spark, "serve_guard_text", "serve_guard_pq", qt, qv))
+      assert(e.getMessage.contains(s"hybridSearchIndexed broadcasts its query $side"), e.getMessage)
+      assert(e.getMessage.contains(s"fixed bound of $bound rows"), e.getMessage)
+      assert(!e.getMessage.contains("maxQueryRows"), e.getMessage)
+    }
   }
 
   test("an append after a search: the next search serves bm25TopK over the union") {
